@@ -195,20 +195,16 @@ def probe_cells(cents, qvec, nprobe: int) -> list[int]:
     """Driver-side probe selection shared by EVERY fused-IVF serve
     path (in-session, persisted cold-start, scale smoke): rounded
     IP(query, centroid) with HALF-AWAY-FROM-ZERO decimal rounding
-    (simsearch.round_half_away — matching Spark/DuckDB round(,6),
-    NOT numpy's banker's np.round), ties to the lowest cell id. One
-    definition so the tie-break domain can never drift between the
-    oracle-checked path and the other serve paths."""
+    (kernels.round_half_away — matching Spark/DuckDB round(,6),
+    NOT numpy's banker's np.round), ties to the lowest cell id (a
+    stable argsort). One definition so the tie-break domain can never
+    drift between the oracle-checked path and the other serve paths."""
     import numpy as np
 
-    from .pipeline_ext.simsearch import round_half_away
+    from .kernels import round_half_away
 
-    ips = [
-        round_half_away(float(v))
-        for v in np.asarray(cents, dtype="float64")
-        @ np.asarray(qvec, dtype="float64")
-    ]
-    return [int(c) for c in sorted(range(len(ips)), key=lambda c: (-ips[c], c))[:nprobe]]
+    ips = round_half_away(np.asarray(cents, dtype="float64") @ np.asarray(qvec, dtype="float64"))
+    return [int(c) for c in np.argsort(-ips, kind="stable")[:nprobe]]
 
 
 def _head_centroids(corpus: DocumentCorpus) -> "np.ndarray":

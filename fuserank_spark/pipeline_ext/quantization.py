@@ -49,6 +49,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import read_matrix, round_half_away
 from .simsearch import _merge_topk
 from ..session import local_frame
 
@@ -308,9 +309,12 @@ def pq_encode_arrow(
 ) -> DataFrame:
     """Arrow-batched numpy twin of :func:`pq_encode` for wide vectors
     / large k where 2·m·k expression terms outgrow codegen: one
-    einsum per subspace per batch. Unit-tested code-identical to the
-    expression path (argmin ties break to the lowest code in both)."""
-    import pandas as pd
+    flat-buffer read (kernels.read_matrix — NULL rows, NULL elements
+    and wrong lengths raise) and one matmul per subspace per batch,
+    the codes emitted as one list column. Unit-tested code-identical
+    to the expression path (argmin ties break to the lowest code in
+    both)."""
+    import pyarrow as pa
 
     m, k, w = codebooks.shape
     books = codebooks.copy()
@@ -323,27 +327,22 @@ def pq_encode_arrow(
     names = [f.name for f in keep]
 
     def encode(batches):
-        for pdf in batches:
-            vecs = np.array([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            if len(vecs) == 0:
-                yield pd.DataFrame({n: pdf[n] for n in names} | {out_col: []})
-                continue
-            if vecs.ndim != 2 or vecs.shape[1] != m * w:
-                raise ValueError(
-                    f"pq_encode_arrow: vector length != {m * w} "
-                    f"(batch shape {vecs.shape})"
-                )
-            codes = np.empty((len(vecs), m), dtype="int32")
+        for rb in batches:
+            vecs = read_matrix(rb, vec_col, m * w)
+            codes = np.empty((rb.num_rows, m), dtype="int32")
             for j in range(m):
                 sub = vecs[:, j * w : (j + 1) * w]
                 # dist = csq - 2 x·c  (+‖x‖², constant per row)
                 d = csq[j][None, :] - 2.0 * sub @ books[j].T
                 codes[:, j] = d.argmin(axis=1)
-            out = pd.DataFrame({n: pdf[n] for n in names})
-            out[out_col] = [list(map(int, c)) for c in codes]
-            yield out
+            offsets = pa.array(np.arange(0, codes.size + 1, m, dtype="int32"))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(n) for n in names]
+                + [pa.ListArray.from_arrays(offsets, pa.array(codes.ravel()))],
+                names=names + [out_col],
+            )
 
-    return df.mapInPandas(encode, schema_out)
+    return df.mapInArrow(encode, schema_out)
 
 
 def adc_lut(codebooks: np.ndarray, qvec) -> list[list[float]]:
@@ -372,7 +371,6 @@ def pq_adc_topk(
     refine_factor: int = 4,
     vec_col: str = "embedding",
     max_query_batch: int = MAX_QUERY_BATCH,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Batch ADC top-k over PQ codes: score every code row with m LUT
     lookups + adds, two-phase top-k merge (_merge_topk — no per-query
@@ -380,21 +378,6 @@ def pq_adc_topk(
     vector); batches above ``max_query_batch`` are AUTO-CHUNKED so
     each LUT broadcast stays bounded, and the per-chunk results union
     (identical to one-shot: per-query top-k is independent).
-
-    ``use_arrow=True`` (r13, default OFF — measured): scoring +
-    partition-local top-k run inside one Arrow scan
-    (:func:`_adc_partial_topk_arrow`) with raw scores bit-identical
-    to the expression path (numpy gathers accumulate in the same
-    subspace order; the same ``F.round`` applies before the merge) —
-    parity pinned in tests. It is NOT the default because the
-    expression ADC is already whole-stage codegen (``element_at`` is
-    a plain expression, not an interpreted HOF) and the Arrow
-    boundary's linear per-row transfer loses at every measured shape:
-    arrow/expr over persisted codes = 0.72 at 2k rows, 1.23 at 200k,
-    1.57 at 1M; whole-entry paired A/B 1.08-1.70x slower
-    (OPTIMIZATION_r13.md). Kept as the tested alternative for future
-    wide-m shapes where the 2·m·k-term expression outgrows codegen
-    (the pq_encode_arrow rationale).
 
     Output: (query_id, vec_id, rnk, adc). With ``refine_with`` (the
     raw-vector table) the top ``k·refine_factor`` ADC survivors are
@@ -411,7 +394,6 @@ def pq_adc_topk(
                 codes, codebooks, qs, k=k, key_col=key_col, code_col=code_col,
                 refine_with=refine_with, refine_factor=refine_factor,
                 vec_col=vec_col, max_query_batch=max_query_batch,
-                use_arrow=use_arrow,
             ),
             max_query_batch,
         )
@@ -421,26 +403,12 @@ def pq_adc_topk(
     # order while a SQL oracle's GROUP BY sum folds arbitrarily, so
     # near-tied raw doubles could flip ranks across engines; rounding
     # before ranking makes the tie-break domain identical.
-    if use_arrow:
-        heap_k = k * refine_factor if refine_with is not None else k
-        raw = _adc_partial_topk_arrow(
-            codes,
-            np.array([adc_lut(codebooks, qv) for _, qv in queries]),
-            [int(qid) for qid, _ in queries],
-            heap_k,
-            key_col,
-            code_col,
-        )
-        scored = raw.select(
-            "query_id", F.col(key_col), F.round("adc", 6).alias("adc")
-        )
-    else:
-        luts = _lut_frame(spark, codebooks, queries)
-        scored = codes.crossJoin(F.broadcast(luts)).select(
-            "query_id",
-            F.col(key_col),
-            F.round(_adc_score_expr(code_col, m), 6).alias("adc"),
-        )
+    luts = _lut_frame(spark, codebooks, queries)
+    scored = codes.crossJoin(F.broadcast(luts)).select(
+        "query_id",
+        F.col(key_col),
+        F.round(_adc_score_expr(code_col, m), 6).alias("adc"),
+    )
     return _finish_topk(
         scored, queries, k, key_col, refine_with, refine_factor, vec_col, spark
     )
@@ -472,141 +440,6 @@ def _lut_frame(spark, codebooks: np.ndarray, queries: list[tuple]) -> DataFrame:
         [(int(qid), adc_lut(codebooks, qv)) for qid, qv in queries],
         "query_id bigint, __lut array<array<double>>",
     )
-
-
-def _adc_partial_topk_arrow(
-    codes: DataFrame,
-    luts: np.ndarray,
-    qids: list[int],
-    heap_k: int,
-    key_col: str,
-    code_col: str,
-    probes: dict[int, np.ndarray] | None = None,
-    cell_col: str = "centroid_id",
-) -> DataFrame:
-    """ADC scoring + partition-local top-k fused into ONE Arrow scan
-    (VERDICT r12 #5): per batch, the (n, m) code matrix is read as a
-    flat int buffer and each query's ADC is a sequence of m numpy
-    LUT gathers accumulated IN SUBSPACE ORDER — float64 adds in the
-    exact left-to-right fold of :func:`_adc_score_expr`, so emitted
-    raw scores are BIT-IDENTICAL to the interpreted expression path
-    (no new fold-order divergence; the caller rounds with the same
-    JVM ``F.round`` as before). Only heap_k·P·Q survivor rows leave
-    the scan instead of n·Q scored rows.
-
-    The partition heap SELECTS on the half-away-rounded score at 6dp
-    with the (score desc, key asc) tie-break — the same
-    round-before-rank-inside-the-heap convention (and the same
-    accepted decimal-half-boundary caveat) as search.topk's Arrow
-    path; selection equality with the expression path's global
-    ranking is pinned by tests/test_quantization.py.
-
-    ``probes``: optional per-query probed-cell arrays — rows outside
-    a query's own cells are dropped BEFORE scoring (the IVF-PQ
-    restriction), matching the broadcast probe join."""
-    import pyarrow  # noqa: F401 — fail fast if arrow is unavailable
-
-    from pyspark.sql import types as T
-
-    key_type = next(f.dataType for f in codes.schema.fields if f.name == key_col)
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(key_col, key_type),
-            T.StructField("adc", T.DoubleType()),
-        ]
-    )
-    lut = np.ascontiguousarray(luts, dtype="float64")  # (Q, m, k)
-    nq, m, _kcodes = lut.shape
-    cols = [key_col, code_col] + (
-        [cell_col] if probes is not None else []
-    )
-    probe_arrays = (
-        {int(q): np.asarray(sorted(c), dtype="int64") for q, c in probes.items()}
-        if probes is not None
-        else None
-    )
-
-    def _rank_key(s: np.ndarray) -> np.ndarray:
-        return np.copysign(np.floor(np.abs(s) * 1e6 + 0.5), s) / 1e6
-
-    def _cut(keys: np.ndarray, rk: np.ndarray, n: int) -> np.ndarray:
-        if n > 4 * heap_k:
-            thr = np.partition(rk, n - heap_k)[n - heap_k]
-            msk = rk >= thr
-            sub = np.lexsort((keys[msk], -rk[msk]))[:heap_k]
-            return np.flatnonzero(msk)[sub]
-        return np.lexsort((keys, -rk))[:heap_k]
-
-    def _score(batches):
-        import pyarrow as pa
-
-        best: dict[int, list] = {i: [] for i in range(nq)}
-        key_pa_type = None
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            code_arr = rb.column(rb.schema.get_field_index(code_col))
-            key_arr = rb.column(rb.schema.get_field_index(key_col))
-            if key_pa_type is None:
-                key_pa_type = key_arr.type
-            flat = code_arr.flatten()
-            if code_arr.null_count or flat.null_count:
-                raise ValueError(f"NULL {code_col} rows/elements in ADC scan")
-            vals = flat.to_numpy(zero_copy_only=False)
-            if vals.size != n * m:
-                raise ValueError(
-                    f"{code_col} buffer size {vals.size} != {n}x{m}"
-                )
-            C = vals.reshape(n, m)
-            keys = key_arr.to_numpy(zero_copy_only=False)
-            cells = (
-                rb.column(rb.schema.get_field_index(cell_col)).to_numpy(
-                    zero_copy_only=False
-                )
-                if probe_arrays is not None
-                else None
-            )
-            for qi in range(nq):
-                if probe_arrays is not None:
-                    kept = np.isin(cells, probe_arrays[int(qids[qi])])
-                    if not kept.any():
-                        continue
-                    Cq, keys_q = C[kept], keys[kept]
-                else:
-                    Cq, keys_q = C, keys
-                # sequential subspace accumulation == the expression
-                # path's left-to-right fold, bit for bit
-                s = lut[qi, 0][Cq[:, 0]].copy()
-                for j in range(1, m):
-                    s += lut[qi, j][Cq[:, j]]
-                sel = _cut(keys_q, _rank_key(s), int(Cq.shape[0]))
-                best[qi].append((keys_q[sel], s[sel]))
-        if key_pa_type is None:
-            return
-        rows = {"query_id": [], "key": [], "adc": []}
-        for qi, chunks in best.items():
-            if not chunks:
-                continue
-            ks = np.concatenate([c[0] for c in chunks])
-            ss = np.concatenate([c[1] for c in chunks])
-            if len(ss) > heap_k:
-                idx = np.lexsort((ks, -_rank_key(ss)))[:heap_k]
-                ks, ss = ks[idx], ss[idx]
-            rows["query_id"].extend([int(qids[qi])] * len(ks))
-            rows["key"].extend(ks.tolist())
-            rows["adc"].extend(float(x) for x in ss)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(rows["query_id"], type=pa.int64()),
-                pa.array(rows["key"], type=key_pa_type),
-                pa.array(rows["adc"], type=pa.float64()),
-            ],
-            names=["query_id", key_col, "adc"],
-        )
-
-    return codes.select(*cols).mapInArrow(_score, schema=out_schema)
 
 
 def _adc_score_expr(code_col: str, m: int):
@@ -661,8 +494,6 @@ def _probe_rows(
     centroid cosine. Scores are rounded half-away with lowest-cid
     tie-break so the probe set shares a tie-break domain with a SQL
     twin's ``round(cosine, 6)`` probe ranking."""
-    from .simsearch import round_half_away
-
     cn = centroids / np.maximum(
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
     )
@@ -670,8 +501,7 @@ def _probe_rows(
     for qid, qv in queries:
         q = np.asarray([float(x) for x in qv], dtype="float64")
         qn = q / max(float(np.linalg.norm(q)), 1e-12)
-        sims = [round_half_away(float(s)) for s in cn @ qn]
-        for c in sorted(range(len(sims)), key=lambda i: (-sims[i], i))[:nprobe]:
+        for c in np.argsort(-round_half_away(cn @ qn), kind="stable")[:nprobe]:
             rows.append((int(qid), int(c)))
     return rows
 
@@ -691,7 +521,6 @@ def ivf_pq_knn(
     refine_factor: int = 4,
     vec_col: str = "embedding",
     max_query_batch: int = MAX_QUERY_BATCH,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """IVF-PQ serve — the faiss IndexIVFPQ layout on Spark: ``codes``
     carries both the coarse cell (simsearch.ivf_assign; persist with
@@ -718,7 +547,6 @@ def ivf_pq_knn(
                 key_col=key_col, code_col=code_col, cell_col=cell_col,
                 refine_with=refine_with, refine_factor=refine_factor,
                 vec_col=vec_col, max_query_batch=max_query_batch,
-                use_arrow=use_arrow,
             ),
             max_query_batch,
         )
@@ -727,41 +555,18 @@ def ivf_pq_knn(
     probe_rows = _probe_rows(centroids, queries, nprobe)
     probed_cells = sorted({c for _, c in probe_rows})
     pruned = codes.filter(F.col(cell_col).isin(probed_cells))
-    if use_arrow:
-        # the static isin prune above keeps the persisted-index
-        # partition-pruning path; the PER-QUERY cell restriction moves
-        # into the Arrow scan (r13) — same row set as the broadcast
-        # probe join, same rounded domain before the merge
-        by_q: dict[int, list[int]] = {}
-        for qid, c in probe_rows:
-            by_q.setdefault(int(qid), []).append(int(c))
-        heap_k = k * refine_factor if refine_with is not None else k
-        raw = _adc_partial_topk_arrow(
-            pruned,
-            np.array([adc_lut(codebooks, qv) for _, qv in queries]),
-            [int(qid) for qid, _ in queries],
-            heap_k,
-            key_col,
-            code_col,
-            probes={q: np.asarray(cs, dtype="int64") for q, cs in by_q.items()},
-            cell_col=cell_col,
+    probes = local_frame(spark, probe_rows, f"query_id bigint, {cell_col} int")
+    luts = _lut_frame(spark, codebooks, queries)
+    scored = (
+        pruned.join(F.broadcast(probes), cell_col)
+        .join(F.broadcast(luts), "query_id")
+        .select(
+            "query_id",
+            F.col(key_col),
+            # rounded before ranking — same rationale as pq_adc_topk
+            F.round(_adc_score_expr(code_col, m), 6).alias("adc"),
         )
-        scored = raw.select(
-            "query_id", F.col(key_col), F.round("adc", 6).alias("adc")
-        )
-    else:
-        probes = local_frame(spark, probe_rows, f"query_id bigint, {cell_col} int")
-        luts = _lut_frame(spark, codebooks, queries)
-        scored = (
-            pruned.join(F.broadcast(probes), cell_col)
-            .join(F.broadcast(luts), "query_id")
-            .select(
-                "query_id",
-                F.col(key_col),
-                # rounded before ranking — same rationale as pq_adc_topk
-                F.round(_adc_score_expr(code_col, m), 6).alias("adc"),
-            )
-        )
+    )
     return _finish_topk(
         scored, queries, k, key_col, refine_with, refine_factor, vec_col, spark
     )
@@ -1499,60 +1304,9 @@ def pca_project(
         if score_round is not None:
             # the explicit portable formula (CLAUDE.md rounding
             # invariant), NOT F.round: engine round() is
-            # half-away-from-zero and would diverge from the arrow
-            # twin / a SQL twin on negative midpoints
+            # half-away-from-zero and would diverge from a SQL twin
+            # on negative midpoints
             s = 10.0**score_round
             d = F.floor(d * F.lit(s) + F.lit(0.5)) / F.lit(s)
         dims.append(d)
     return out.withColumn(out_col, F.array(*dims)).drop(tmp)
-
-
-def pca_project_arrow(
-    df: DataFrame,
-    mean: np.ndarray,
-    components: np.ndarray,
-    *,
-    vec_col: str = "embedding",
-    out_col: str = "pca_vec",
-    score_round: int | None = None,
-) -> DataFrame:
-    """Arrow-batched numpy twin of :func:`pca_project` — the
-    wide-vector path (numpy dots instead of dim_out interpreted HOF
-    aggregates; the ivf_assign_arrow rationale). Both paths quantize
-    with the SAME portable floor(x·10^r + 0.5)/10^r formula (the
-    CLAUDE.md rounding invariant), so with ``score_round`` set they
-    are value-identical; unrounded they match only up to float fold
-    order. NULL/ragged rows yield all-NULL coordinates on both
-    paths."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    comps = np.asarray(components, dtype="float64")
-    offs = comps @ np.asarray(mean, dtype="float64")
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
-    )
-
-    dim = comps.shape[1]
-
-    def _proj(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for v in pdf[vec_col]:
-                # NULL / ragged rows project to all-NULL coords, the
-                # expression path's zip_with-padding semantics —
-                # np.asarray(None) would crash the whole batch
-                if v is None or len(v) != dim:
-                    outs.append([None] * comps.shape[0])
-                    continue
-                y = np.asarray(v, dtype="float64") @ comps.T - offs
-                if score_round is not None:
-                    y = np.floor(y * (10.0**score_round) + 0.5) / (10.0**score_round)
-                outs.append(list(y))
-            pdf = pdf.copy()
-            pdf[out_col] = outs
-            yield pdf
-
-    return df.mapInPandas(_proj, schema=out_schema)

@@ -15,24 +15,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..kernels import assign_cells, read_matrix, round_half_away
 from ..search import dot_expr, l2_norm_expr
 from ..session import local_frame
 
 
 def _cosine(a_vec, b_vec):
     return dot_expr(a_vec, b_vec) / (l2_norm_expr(a_vec) * l2_norm_expr(b_vec))
-
-
-def round_half_away(x: float, digits: int = 6) -> float:
-    """Driver-side decimal rounding matching Spark/DuckDB ``round()``
-    (HALF AWAY FROM ZERO) — NOT Python round()/np.round, which are
-    banker's (half-to-even) and disagree at half-boundaries. Used
-    wherever a driver-side score (probe selection) must share a
-    tie-break domain with engine-rounded scores."""
-    import math
-
-    p = 10.0**digits
-    return math.copysign(math.floor(abs(x) * p + 0.5), x) / p
 
 
 def _merge_topk(
@@ -294,69 +283,46 @@ def ivf_assign_arrow(
     metric: str = "l2",
     score_round: int | None = None,
 ) -> DataFrame:
-    """Arrow-batched numpy twin of :func:`ivf_assign` — the
-    pq_encode/pq_encode_arrow pattern: the expression path is the
-    oracle-parity form (interpreted HOF aggregates, ~n_centroids·dim
-    ops per row outside codegen), this one is a single matmul per
-    batch for the scale paths (semantic dedup over many cells,
-    streaming index maintenance).
+    """Arrow-batched numpy twin of :func:`ivf_assign` on the kernels
+    scaffold: the expression path is the oracle-parity form
+    (interpreted HOF aggregates, ~n_centroids·dim ops per row outside
+    codegen), this one is one flat-buffer read and one matmul per
+    batch (kernels.assign_cells) for the scale paths (semantic dedup
+    over many cells, streaming index maintenance), with the cell
+    column appended to the batch as-is.
 
     Same score (``||c||^2 − 2<x,c>`` or ``−<x,c>``), same
     lowest-centroid tie break (argmin takes the first minimum).
-    ``score_round`` uses the vectorized :func:`round_half_away`
-    formula — the repo's driver-side convention (probe selection
-    uses the same one against SQL ``round()``). It equals the
-    expression path's ``F.round`` except when a score's SHORTEST
-    DECIMAL REPRESENTATION lands exactly on a half-boundary
-    (Spark rounds the decimal string, the formula rounds the binary
-    double) — measure-zero for continuous scores, the same accepted
-    caveat as every driver-side rounding in the repo. Rounding also
-    collapses the last-ulp fold-order differences (sequential HOF
-    fold vs blocked matmul), so rounded assignments agree in
-    practice; unrounded ones can ulp-diverge near exact centroid
-    ties. The parity test pins both metrics, rounded and raw, on the
-    test corpora. NULL or wrong-length vectors raise (the expression
-    path would propagate nulls; a batch matmul cannot — fail loudly
-    instead)."""
-    import pandas as pd
+    ``score_round`` uses kernels.round_half_away — the repo's
+    driver-side convention (probe selection uses the same one against
+    SQL ``round()``). It equals the expression path's ``F.round``
+    except when a score's SHORTEST DECIMAL REPRESENTATION lands
+    exactly on a half-boundary (Spark rounds the decimal string, the
+    formula rounds the binary double) — measure-zero for continuous
+    scores. Rounding also collapses the last-ulp fold-order
+    differences (sequential HOF fold vs blocked matmul), so rounded
+    assignments agree in practice; unrounded ones can ulp-diverge near
+    exact centroid ties. The parity test pins both metrics, rounded
+    and raw, on the test corpora. NULL rows, NULL elements and
+    wrong-length vectors raise (kernels.read_matrix — the expression
+    path would propagate nulls; a batch matmul cannot)."""
+    import pyarrow as pa
 
     if metric not in ("l2", "ip"):
         raise ValueError(f"metric must be 'l2' or 'ip', got {metric!r}")
     cents = np.asarray(centroids, dtype="float64")
     dim = cents.shape[1]
-    csq = np.einsum("kd,kd->k", cents, cents)
     schema_out = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in corpus.schema.fields]
         + [f"`{out_col}` int"]
     )
-    names = [f.name for f in corpus.schema.fields]
 
     def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({n: pdf[n] for n in names} | {out_col: []})
-                continue
-            if pdf[vec_col].isna().any():
-                raise ValueError("ivf_assign_arrow: NULL vector in batch")
-            vecs = np.array(
-                [np.asarray(v, dtype="float64") for v in pdf[vec_col]]
-            )
-            if vecs.ndim != 2 or vecs.shape[1] != dim:
-                raise ValueError(
-                    f"ivf_assign_arrow: vector length != {dim} "
-                    f"(batch shape {vecs.shape})"
-                )
-            dots = vecs @ cents.T
-            scores = csq[None, :] - 2.0 * dots if metric == "l2" else -dots
-            if score_round is not None:
-                # vectorized round_half_away — identical IEEE ops
-                s = 10.0 ** score_round
-                scores = np.copysign(np.floor(np.abs(scores) * s + 0.5), scores) / s
-            out = pd.DataFrame({n: pdf[n] for n in names})
-            out[out_col] = scores.argmin(axis=1).astype("int32")
-            yield out
+        for rb in batches:
+            cells = assign_cells(read_matrix(rb, vec_col, dim), cents, metric, score_round)
+            yield rb.append_column(out_col, pa.array(cells.astype("int32")))
 
-    return corpus.mapInPandas(assign, schema_out)
+    return corpus.mapInArrow(assign, schema_out)
 
 
 def ivf_persist(assigned: DataFrame, path: str) -> None:
@@ -443,11 +409,10 @@ def _ivf_knn_batch(
     for r in qrows:
         qv = np.asarray(r[query_vec], dtype="float64")
         qn = qv / (np.linalg.norm(qv) or 1.0)
-        # rounded half-away + lowest-cid tie-break: the SQL twin
-        # orders by round(cosine, 6) DESC, cid ASC — same domain
-        sims = [round_half_away(float(s)) for s in cn @ qn]
-        order = sorted(range(len(sims)), key=lambda c: (-sims[c], c))[:nprobe]
-        for cid in order:
+        # rounded half-away + lowest-cid tie-break (a stable argsort
+        # of the negated scores): the SQL twin orders by
+        # round(cosine, 6) DESC, cid ASC — same domain
+        for cid in np.argsort(-round_half_away(cn @ qn), kind="stable")[:nprobe]:
             probe_rows.append((r[query_key], int(cid), [float(x) for x in qv]))
     spark = assigned.sparkSession
     # Arrow LocalRelation, not createDataFrame(list) (CLAUDE.md r11):
@@ -606,9 +571,7 @@ def mmr_rerank(
                 f"to a bounded top-N before diversifying"
             )
         keys = pdf[key_col].to_numpy()
-        rel = np.array(
-            [round_half_away(float(s)) for s in pdf[score_col]], dtype="float64"
-        )
+        rel = round_half_away(pdf[score_col].to_numpy(dtype="float64"))
         vecs = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
         norms = np.maximum(np.linalg.norm(vecs, axis=1), 1e-12)
         vn = vecs / norms[:, None]
@@ -621,7 +584,7 @@ def mmr_rerank(
                 obj = lam * rel
             else:
                 obj = lam * rel - (1.0 - lam) * max_sim
-            obj = np.array([round_half_away(float(x)) for x in obj])
+            obj = round_half_away(obj)
             # argmax with lowest-key tie-break among available rows
             best = None
             for i in np.flatnonzero(avail):
@@ -633,7 +596,7 @@ def mmr_rerank(
             values.append(float(obj[bi]))
             avail[bi] = False
             sims = vn @ vn[bi]
-            sims = np.array([round_half_away(float(s)) for s in sims])
+            sims = round_half_away(sims)
             max_sim = np.maximum(max_sim, sims)
         qid = int(pdf[query_col].iloc[0])
         return pd.DataFrame(

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .kernels import assign_cells, partition_topk, read_matrix
+
 
 def dot_expr(vec_col: Column | str, other: Column | str) -> Column:
     """A9/T1: JVM-side dot product of two array columns (no UDF)."""
@@ -73,7 +75,7 @@ def topk(
         right for small corpora and for oracle-matched paths where
         the fold order must equal DuckDB's;
       * Arrow scan (default for ≥100-dim vectors) — per-partition
-        numpy matmul + partial top-k inside mapInPandas, the
+        numpy matmul + partial top-k inside mapInArrow, the
         distributed equivalent of a FAISS flat-shard scan; ~50×
         faster at 500k×200 dims.
 
@@ -147,21 +149,13 @@ def _arrow_partial_topk(
     score_round: int | None = None,
     assign_filter: tuple | None = None,
 ) -> DataFrame:
-    """Per-partition numpy scoring: each task reads its Arrow batch's
-    list column as ONE flat float64 buffer (mapInArrow — no
-    pandas-object-list materialization), reshapes, multiplies against
-    ALL queries at once, and emits only its local top-k per query —
-    k·P·Q tiny rows leave the scan.
+    """Per-partition numpy scoring on the kernels scaffold: each task
+    reads its Arrow batch's vector column as one flat float64 buffer
+    (kernels.read_matrix), multiplies it against ALL queries at once —
+    one (Q, n) matmul — and kernels.partition_topk emits only its local
+    top-k per query, so k·P·Q tiny rows leave the scan.
 
-    r10 rework, measured at the sf0.1 batch shape (5k rows × 522 dim
-    × 32 queries): the former mapInPandas path spent ~790 ms/batch in
-    `np.stack` over the object-list vector column vs 2.4 ms for the
-    matmul it fed — the conversion WAS the operator. The flat-buffer
-    read is near-zero-copy; the per-query cut also moves from a full
-    lexsort (O(n log n)) to threshold-partition + lexsort of the ≥kth
-    slice (O(n + m log m), identical selection incl. boundary ties).
-
-    ``score_round`` makes the partition-local heap SELECT on the
+    ``score_round`` makes the partition-local cut SELECT on the
     rounded score (round-before-rank inside the heap, ADVICE r7):
     ulp-tied rows tie and fall to the key tie-break before the k cut,
     matching the caller's final `F.round` ordering. Emitted scores
@@ -169,15 +163,10 @@ def _arrow_partial_topk(
 
     ``assign_filter=(centroids, probed, metric, assign_round)`` (r12):
     before scoring, assign each row to its IVF cell with one batch
-    matmul — ``metric="ip"`` argmaxes the rounded inner product (as
-    argmin of the rounded NEGATED dot, simsearch.ivf_assign's exact
-    score), ``"l2"`` argmins ``||c||² − 2⟨x,c⟩`` — and keep only rows
-    landing in ``probed``. ``assign_round`` uses the vectorized
-    half-away-from-zero decimal formula (simsearch.round_half_away /
-    ivf_assign_arrow's convention): it equals the expression path's
-    ``F.round`` except when a score's shortest decimal representation
-    lands exactly on a half-boundary — measure-zero for dot-product
-    scores, the repo's accepted driver-side-rounding caveat, and the
+    matmul (kernels.assign_cells, simsearch.ivf_assign's exact score)
+    and keep only rows landing in ``probed``. ``assign_round`` uses
+    kernels.round_half_away, which equals the expression path's
+    ``F.round`` except on exact decimal half-boundaries; the
     assignment parity is pinned on the real corpus by
     tests/test_fused_search.py::test_fused_ivf_arrow_assign_matches_expression."""
     from pyspark.sql import types as T
@@ -191,139 +180,38 @@ def _arrow_partial_topk(
         ]
     )
     qm = np.ascontiguousarray(qmat, dtype="float64")
-    scale = None if score_round is None else 10.0 ** int(score_round)
+    dim = int(qm.shape[1])
     if assign_filter is not None:
         af_cents, af_probed, af_metric, af_round = assign_filter
         if af_metric not in ("l2", "ip"):
             raise ValueError(f"assign_filter metric must be 'l2' or 'ip', got {af_metric!r}")
         af_cents = np.ascontiguousarray(af_cents, dtype="float64")
-        if af_cents.shape[1] != qmat.shape[1]:
+        if af_cents.shape[1] != dim:
             raise ValueError(
                 f"assign_filter centroids are {af_cents.shape[1]}-dim, "
-                f"queries are {qmat.shape[1]}-dim"
+                f"queries are {dim}-dim"
             )
-        af_csq = np.einsum("kd,kd->k", af_cents, af_cents)
         af_probed = np.asarray(sorted({int(c) for c in af_probed}), dtype="int64")
-        af_scale = None if af_round is None else 10.0 ** int(af_round)
 
-    def _rank_key(scores: np.ndarray) -> np.ndarray:
-        # half-up AWAY FROM ZERO, matching the caller's final F.round
-        # (decimal HALF_UP): floor(|x|*s+0.5) rounds toward +inf, which
-        # for NEGATIVE midpoints picks the other neighbor than F.round
-        # does — copysign makes the heap's tie domain equal the final
-        # ordering's on both signs (ADVICE r8 #1). Vectorized over any
-        # shape — callers pass the WHOLE (Q, n) score matrix in one
-        # pass (VERDICT r10 #1: the former per-query-column calls
-        # allocated 2 temporaries × Q per batch).
-        if scale is None:
-            return scores
-        return np.copysign(np.floor(np.abs(scores) * scale + 0.5), scores) / scale
+    def _score(rb):
+        M = read_matrix(rb, vector_col, dim)
+        keys = rb.column(key_col).to_numpy(zero_copy_only=False)
+        if assign_filter is not None:
+            # keep only probed rows BEFORE scoring (the IVF prune)
+            kept = np.isin(assign_cells(M, af_cents, af_metric, af_round), af_probed)
+            if not kept.any():
+                return None
+            if not kept.all():
+                M, keys = M[kept], keys[kept]
+        # (Q, n): each query's score row is contiguous for the cut
+        return keys, qm @ M.T
 
-    dim = int(qm.shape[1])
-
-    def _cut(keys: np.ndarray, rk: np.ndarray, n: int):
-        # deterministic tie-break: (rounded score desc, key asc) — keeps
-        # parity with the expression path's orderBy semantics. For
-        # n >> k, pre-filter to everything >= the k-th largest rounded
-        # score (>= keeps boundary ties for the key tie-break) and
-        # lexsort only that slice — same selection, O(n) + tiny sort.
-        if n > 4 * k:
-            thr = np.partition(rk, n - k)[n - k]
-            m = rk >= thr
-            sub = np.lexsort((keys[m], -rk[m]))[:k]
-            return np.flatnonzero(m)[sub]
-        return np.lexsort((keys, -rk))[:k]
-
-    def _score(batches):
-        import pyarrow as pa
-
-        # accumulate per-query heaps across the partition's batches
-        best: dict[int, list] = {i: [] for i in range(len(qids))}
-        key_pa_type = None
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            vec_arr = rb.column(rb.schema.get_field_index(vector_col))
-            key_arr = rb.column(rb.schema.get_field_index(key_col))
-            if key_pa_type is None:
-                key_pa_type = key_arr.type
-            # row-level NULL vectors AND null elements INSIDE vectors
-            # (ADVICE r10 #2): element nulls would pass a row-only
-            # check, become NaN in the flat buffer, and a NaN partition
-            # threshold in _cut silently drops the partition's
-            # candidates instead of erroring like the old stack path
-            flat = vec_arr.flatten()  # bound once: null check + values (ADVICE r11)
-            if vec_arr.null_count or flat.null_count:
-                raise ValueError(
-                    f"topk over NULL {vector_col} rows/elements — "
-                    "filter them first"
-                )
-            # ListArray → verify every row is exactly query-dim wide
-            # before the flat reshape (FixedSizeList has no offsets)
-            if hasattr(vec_arr, "offsets"):
-                widths = np.diff(vec_arr.offsets.to_numpy())
-                if widths.size and not (widths == dim).all():
-                    raise ValueError(
-                        f"{vector_col} widths {set(widths.tolist())} != "
-                        f"query dim {dim}"
-                    )
-            vals = flat.to_numpy(zero_copy_only=False)
-            if vals.size != n * dim:
-                raise ValueError(
-                    f"{vector_col} buffer size {vals.size} != {n}x{dim}"
-                )
-            M = vals.reshape(n, dim)
-            keys = key_arr.to_numpy(zero_copy_only=False)
-            if assign_filter is not None:
-                # one batch matmul assigns every row to its cell; keep
-                # only probed rows BEFORE scoring (the IVF prune)
-                D = M @ af_cents.T
-                D = af_csq[None, :] - 2.0 * D if af_metric == "l2" else -D
-                if af_scale is not None:
-                    D = np.copysign(np.floor(np.abs(D) * af_scale + 0.5), D) / af_scale
-                # argmin takes the FIRST minimum — the lowest-cid tie
-                # break of ivf_assign's struct-min
-                kept = np.isin(D.argmin(axis=1), af_probed)
-                if not kept.any():
-                    continue
-                if not kept.all():
-                    M = M[kept]
-                    keys = keys[kept]
-                    n = int(M.shape[0])
-            # (Q, n) so each query's score row is CONTIGUOUS for the
-            # partition/lexsort in _cut, and ONE vectorized _rank_key
-            # pass covers all queries (VERDICT r10 #1 hoist) instead of
-            # 2 temporaries per query per batch
-            S = qm @ M.T
-            RK = _rank_key(S)
-            for j in range(qm.shape[0]):
-                sel = _cut(keys, RK[j], n)
-                best[j].append((keys[sel], S[j, sel]))
-        if key_pa_type is None:
-            return  # empty partition — emit nothing
-        rows = {"query_id": [], key_col: [], score_col: []}
-        for j, chunks in best.items():
-            if not chunks:
-                continue
-            ks = np.concatenate([c[0] for c in chunks])
-            ss = np.concatenate([c[1] for c in chunks])
-            if len(ss) > k:
-                idx = np.lexsort((ks, -_rank_key(ss)))[:k]
-                ks, ss = ks[idx], ss[idx]
-            rows["query_id"].extend([int(qids[j])] * len(ks))
-            rows[key_col].extend(ks.tolist())
-            rows[score_col].extend(float(x) for x in ss)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(rows["query_id"], type=pa.int64()),
-                pa.array(rows[key_col], type=key_pa_type),
-                pa.array(rows[score_col], type=pa.float64()),
-            ],
-            names=["query_id", key_col, score_col],
-        )
-
-    return df.select(key_col, vector_col).mapInArrow(_score, schema=out_schema)
+    return df.select(key_col, vector_col).mapInArrow(
+        lambda batches: partition_topk(
+            batches, _score, qids, k, key_col, score_col, score_round
+        ),
+        schema=out_schema,
+    )
 
 
 def text_topk_then_rerank(

@@ -1,0 +1,126 @@
+"""Arrow vector kernels (fuserank_spark/kernels.py): the one NULL/ragged
+contract every Arrow scan shares, the half-away rounding, and the
+partition top-k's fold across many small batches."""
+
+from __future__ import annotations
+
+import math
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from fuserank_spark.kernels import round_half_away
+
+from .conftest import SF_SMOKE
+
+DIM = 4
+
+# one row per broken-vector shape; every kernel must raise on each
+BAD_VECTORS = {
+    "null_row": None,
+    "null_element": [1.0, None, 0.0, 0.0],
+    "wrong_width": [1.0, 0.0, 0.0],
+}
+
+
+def _topk(df):
+    from fuserank_spark.search import topk
+
+    return topk(df, np.eye(DIM)[0], k=2, vector_col="emb", use_arrow=True)
+
+
+def _topk_batch(df):
+    from fuserank_spark.search import topk_batch
+
+    queries = df.sparkSession.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0])], "query_id bigint, qvec array<double>"
+    )
+    return topk_batch(df, queries, k=2, vector_col="emb")
+
+
+def _ivf_assign_arrow(df):
+    from fuserank_spark.pipeline_ext.simsearch import ivf_assign_arrow
+
+    return ivf_assign_arrow(df, np.eye(DIM), vec_col="emb")
+
+
+def _pq_encode_arrow(df):
+    from fuserank_spark.pipeline_ext.quantization import pq_encode_arrow
+
+    books = np.arange(8, dtype="float64").reshape(2, 2, 2)  # m=2, k=2, w=2
+    return pq_encode_arrow(df, books, vec_col="emb")
+
+
+KERNELS = {
+    "topk": _topk,
+    "topk_batch": _topk_batch,
+    "ivf_assign_arrow": _ivf_assign_arrow,
+    "pq_encode_arrow": _pq_encode_arrow,
+}
+
+
+@pytest.mark.parametrize("case", sorted(BAD_VECTORS))
+@pytest.mark.parametrize("kernel", sorted(KERNELS))
+def test_arrow_kernels_reject_bad_vectors(spark, kernel, case):
+    """A NULL row, a NULL element or a wrong-width row raises a
+    ValueError naming the column, on every Arrow kernel — never a
+    silent NaN score, cell 0 or code 0."""
+    df = spark.createDataFrame(
+        [(0, [0.0, 1.0, 0.0, 0.0]), (1, BAD_VECTORS[case])],
+        "row_id bigint, emb array<double>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match=r"ValueError: .*'emb'"):
+        KERNELS[kernel](df).collect()
+
+
+def test_round_half_away_matches_scalar_formula():
+    """The array form is bit-identical to the scalar half-away
+    formula, including negative midpoints, and works on scalars."""
+    rng = np.random.default_rng(7)
+    x = np.concatenate(
+        [rng.normal(size=500), [0.5, -0.5, 1.5, -2.5, 0.0, -0.0, 1e-7, -3.0000005]]
+    )
+    for digits in (0, 6, 9):
+        p = 10.0**digits
+        want = [math.copysign(math.floor(abs(v) * p + 0.5), v) / p for v in x.tolist()]
+        got = round_half_away(x, digits)
+        assert got.tobytes() == np.asarray(want).tobytes()
+        assert [round_half_away(v, digits) for v in x.tolist()] == want
+    assert round_half_away(-0.5, 0) == -1.0 and round_half_away(0.5, 0) == 1.0
+
+
+def test_partition_topk_folds_small_batches(spark):
+    """With 7-row Arrow batches each partition folds ~36 batch cuts
+    into its running top-k; topk (score_round=6) and topk_batch must
+    still equal the expression path."""
+    from fuserank_spark.search import topk, topk_batch
+
+    emb = (
+        spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+        .select(F.col("vec_id").alias("row_id"), F.col("embedding").alias("vector"))
+        .coalesce(2)
+    )
+    qrows = emb.filter(F.col("row_id") < 3).orderBy("row_id").collect()
+    queries = spark.createDataFrame(
+        [(int(r["row_id"]), [float(x) for x in r["vector"]]) for r in qrows],
+        "query_id bigint, qvec array<double>",
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for r in qrows:
+            qv = np.asarray(r["vector"], dtype="float64")
+            got = topk(emb, qv, k=10, use_arrow=True, score_round=6).collect()
+            want = topk(emb, qv, k=10, use_arrow=False, score_round=6).collect()
+            assert [x["row_id"] for x in got] == [x["row_id"] for x in want]
+        rank = ["query_id", F.desc("relevance"), "row_id"]
+        got = topk_batch(emb, queries, k=10).orderBy(*rank).collect()
+        want = topk_batch(emb, queries, k=10, use_arrow=False).orderBy(*rank).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert [(x["query_id"], x["row_id"]) for x in got] == [
+        (x["query_id"], x["row_id"]) for x in want
+    ]
+    assert all(abs(a["relevance"] - b["relevance"]) < 1e-9 for a, b in zip(got, want))

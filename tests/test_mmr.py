@@ -11,11 +11,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from fuserank_spark.pipeline_ext.simsearch import (
-    brute_force_knn,
-    mmr_rerank,
-    round_half_away,
-)
+from fuserank_spark.kernels import round_half_away
+from fuserank_spark.pipeline_ext.simsearch import brute_force_knn, mmr_rerank
 
 from .conftest import SF_SMOKE
 

@@ -1,9 +1,8 @@
 """PCA dimensionality reduction (quantization.train_pca /
-pca_project / pca_project_arrow). Registry-external: the projection
-is re-derived in DuckDB from the frozen literal map (round(,6) both
-engines, the q_ivf_knn convention); expression and Arrow paths are
-compared at a shared score_round; orthonormality and recall
-properties pin the fit."""
+pca_project). Registry-external: the projection is re-derived in
+DuckDB from the frozen literal map (round(,6) both engines, the
+q_ivf_knn convention); orthonormality and recall properties pin the
+fit."""
 
 from __future__ import annotations
 
@@ -13,11 +12,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
-from fuserank_spark.pipeline_ext.quantization import (
-    pca_project,
-    pca_project_arrow,
-    train_pca,
-)
+from fuserank_spark.pipeline_ext.quantization import pca_project, train_pca
 
 DIM, DOUT = 64, 16
 
@@ -36,21 +31,6 @@ def test_pca_components_orthonormal(fitted):
     # sign canon: each component's largest-|coeff| entry is positive
     mx = comps[np.arange(DOUT), np.abs(comps).argmax(axis=1)]
     assert (mx > 0).all()
-
-
-def test_pca_expression_matches_arrow_twin(spark, fitted):
-    e, mean, comps = fitted
-    a = {
-        r["vec_id"]: r["pca_vec"]
-        for r in pca_project(e, mean, comps, score_round=9).select("vec_id", "pca_vec").collect()
-    }
-    b = {
-        r["vec_id"]: r["pca_vec"]
-        for r in pca_project_arrow(e, mean, comps, score_round=9)
-        .select("vec_id", "pca_vec")
-        .collect()
-    }
-    assert a == b
 
 
 def test_pca_projection_matches_duckdb_twin(spark, duck, fitted):
@@ -128,10 +108,5 @@ def test_pca_null_and_ragged_rows_both_paths(spark, fitted):
         r["vec_id"]: r["pca_vec"]
         for r in pca_project(sdf, mean, comps, score_round=9).collect()
     }
-    b = {
-        r["vec_id"]: r["pca_vec"]
-        for r in pca_project_arrow(sdf, mean, comps, score_round=9).collect()
-    }
-    assert a == b
     assert a[1] == [None] * DOUT and a[2] == [None] * DOUT
     assert all(v is not None for v in a[0])

@@ -201,20 +201,14 @@ def test_trained_books_beat_forgy_recall(emb, forgy_books):
 
 
 def test_pq_plan_no_cartesian_and_broadcast(emb, forgy_books):
-    """ADC scoring must never CartesianProduct corpus x queries: the
-    default expression path broadcasts the bounded LUT table; the
-    opt-in Arrow path (r13, measured non-default) fuses scoring +
-    partition top-k into a MapInArrow scan — no scoring join at all."""
+    """ADC scoring must never CartesianProduct corpus x queries: it
+    broadcasts the bounded LUT table."""
     codes = Q.pq_encode(emb, forgy_books)
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
     out_e = Q.pq_adc_topk(codes, forgy_books, [(0, qv)], k=5)
     plan_e = out_e._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan_e
     assert "Broadcast" in plan_e
-    out_a = Q.pq_adc_topk(codes, forgy_books, [(0, qv)], k=5, use_arrow=True)
-    plan_a = out_a._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan_a
-    assert "MapInArrow" in plan_a
 
 
 def test_ivf_pq_full_probe_equals_pure_adc(emb, forgy_books):
@@ -269,47 +263,9 @@ def test_pq_encode_raises_on_bad_vector_length(spark, forgy_books):
     # surfaces as a PySpark PythonException wrapping the ValueError
     with pytest.raises(Exception, match="vector length"):
         Q.pq_encode_arrow(bad, forgy_books).toPandas()
-
-
-def test_adc_arrow_matches_expression_path(emb, forgy_books):
-    """r13: the Arrow-fused ADC scan must return IDENTICAL rows to
-    the broadcast-LUT expression path — full-ranking identity (k >=
-    corpus) pins bit-equal rounded scores and the same tie-break
-    order, small-k pins the partition heap's selection, and the
-    refine path pins heap sizing (k·refine_factor survivors)."""
-    codes = Q.pq_encode(emb, forgy_books)
-    n = emb.count()
-    qrows = emb.filter(F.col("vec_id") < 3).orderBy("vec_id").collect()
-    queries = [(int(r["vec_id"]), r["embedding"]) for r in qrows]
-    for k in (5, int(n)):
-        a = Q.pq_adc_topk(codes, forgy_books, queries, k=k, use_arrow=True).collect()
-        b = Q.pq_adc_topk(codes, forgy_books, queries, k=k, use_arrow=False).collect()
-        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    ref = Q.pq_adc_topk(
-        codes, forgy_books, queries, k=4, refine_with=emb,
-        refine_factor=3, use_arrow=True,
-    ).collect()
-    ref_e = Q.pq_adc_topk(
-        codes, forgy_books, queries, k=4, refine_with=emb,
-        refine_factor=3, use_arrow=False,
-    ).collect()
-    assert sorted(map(tuple, ref)) == sorted(map(tuple, ref_e))
-
-
-def test_ivf_pq_arrow_matches_expression_path(emb, forgy_books):
-    """r13: the in-scan per-query cell restriction must reproduce the
-    broadcast probe join's row set exactly, narrow and full probe."""
-    codes = Q.pq_encode(emb, forgy_books).withColumn(
-        "centroid_id", (F.col("vec_id") % 4).cast("int")
+    # a NULL element inside a vector must not encode as code 0
+    elem_null = spark.createDataFrame(
+        [(1, [0.0] * 10 + [None] + [0.0] * 53)], "vec_id long, embedding array<double>"
     )
-    qrows = emb.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
-    queries = [(int(r["vec_id"]), r["embedding"]) for r in qrows]
-    cents = np.asarray([r["embedding"] for r in qrows], dtype="float64")
-    for nprobe in (2, 4):
-        a = Q.ivf_pq_knn(
-            codes, cents, forgy_books, queries, k=6, nprobe=nprobe, use_arrow=True
-        ).collect()
-        b = Q.ivf_pq_knn(
-            codes, cents, forgy_books, queries, k=6, nprobe=nprobe, use_arrow=False
-        ).collect()
-        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    with pytest.raises(Exception, match="NULL vector"):
+        Q.pq_encode_arrow(elem_null, forgy_books).toPandas()

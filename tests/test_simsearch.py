@@ -164,6 +164,12 @@ def test_ivf_assign_arrow_rejects_bad_vectors(spark):
     )
     with pytest.raises(Exception, match="NULL vector"):
         ivf_assign_arrow(bad_null, cents).collect()
+    # a NULL element inside a vector must not be assigned cell 0
+    bad_elem = spark.createDataFrame(
+        [(0, [1.0, None, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="NULL vector"):
+        ivf_assign_arrow(bad_elem, cents).collect()
     bad_len = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<double>"
     )
