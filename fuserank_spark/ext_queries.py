@@ -24,6 +24,7 @@ from .pipeline_ext import simsearch as SS
 from .pipeline_ext import textstats as TX
 from .pipeline_ext.hashing import HASH_PRIME, MINHASH_PERMS, portable_hash32_sql
 from .queries import register
+from .session import persisted, session_cached
 
 _H = portable_hash32_sql("{expr}")  # template form; .format(expr=...) fills the column
 
@@ -908,28 +909,19 @@ def q_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SS.lsh_knn(e, queries, dim=64, k=10).orderBy("query_id", "rnk")
 
 
-_IVF_CACHE: dict = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str):
-    """Build-once IVF index per (session, sf_dir): train the coarse
-    quantizer, persist the assigned table partitioned by centroid_id
-    (simsearch.ivf_persist), read it back so probes partition-prune.
-    Queries against a cached index measure SERVE cost, not build —
-    bench.py reports the two separately (q_ivf_knn vs q_ivf_serve)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _IVF_CACHE:
-        e = _emb(spark, sf_dir)
-        assigned, centroids = SS.ivf_build(e, dim=64, n_centroids=8, max_iter=8)
-        sf = sf_dir.rstrip("/").split("sf")[-1]
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ".cache",
-            f"ivf_sf{sf}",
-        )
-        SS.ivf_persist(assigned, path)
-        _IVF_CACHE[key] = (SS.ivf_load(spark, path), centroids)
-    return _IVF_CACHE[key]
+    """Build-once IVF index per (session, sf_dir) via session_cached:
+    train the coarse quantizer, write the assigned table partitioned by
+    centroid_id (simsearch.ivf_persist) into the build's scratch dir,
+    read it back so probes partition-prune. Later calls measure SERVE
+    cost, not build (bench.py: q_ivf_build vs q_ivf_serve)."""
+
+    def build(scratch):
+        assigned, centroids = SS.ivf_build(_emb(spark, sf_dir), dim=64, n_centroids=8, max_iter=8)
+        SS.ivf_persist(assigned, scratch)
+        return SS.ivf_load(spark, scratch), centroids
+
+    return session_cached(spark, ("ivf", os.path.abspath(sf_dir)), build)
 
 
 def _ivf_serve_oracle(dim: int = 64, n_cent: int = 8, nprobe: int = 3, k: int = 10) -> str:
@@ -1098,20 +1090,16 @@ def q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_RESTAURANTS_CACHE: dict = {}
-
-
 def _restaurants_corpus(spark: SparkSession, csv: str):
-    """Build-once restaurant corpus per (session, csv): load, embed,
-    fit stats, encode, persist the encoded table. Splits one-time
-    build cost from per-query serve cost (bench.py reports
-    q_restaurants_fused vs q_restaurants_serve separately)."""
+    """Build-once restaurant corpus per (session, csv) via session_cached:
+    load, embed, fit stats, encode; `persisted` keeps the encoded table
+    cached. Splits one-time build cost from per-query serve cost
+    (bench.py: q_restaurants_fused vs q_restaurants_serve)."""
     from .embed import embed_corpus
     from .encode import compute_stats, encode_products, record_text_dim
     from .loaders import load_restaurants
 
-    key = (spark.sparkContext.applicationId, csv)
-    if key not in _RESTAURANTS_CACHE:
+    def build(_):
         ds = load_restaurants(spark, csv, fit_transforms=False)
         # one small CSV → one partition → single-core embed+encode and
         # single-core cached serves: a local-mode artifact (r11, same
@@ -1140,9 +1128,10 @@ def _restaurants_corpus(spark: SparkSession, csv: str):
         embedded = embed_corpus(src, ds.schema.text_encoding_schema, dim=32)
         encoded, layout = encode_products(embedded, aux, stats, num_harmonics=16)
         record_text_dim(layout, 32)
-        encoded = encoded.persist()
-        _RESTAURANTS_CACHE[key] = (encoded, aux, stats, layout)
-    return _RESTAURANTS_CACHE[key]
+        return encoded, aux, stats, layout
+
+    encoded, aux, stats, layout = session_cached(spark, ("restaurants", csv), build)
+    return persisted(encoded), aux, stats, layout
 
 
 @register("q_restaurants_fused", None)
@@ -2347,30 +2336,26 @@ def q_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rnk")
 
 
-_PQ_CACHE: dict = {}
-
-
 def pq_cached_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only PQ serve split (the q_ivf_build/q_ivf_serve
-    pattern): first call builds + persists the code table (one-time
-    cost), later calls measure steady-state ADC serve — the number
-    that scales with QPS. Not in the oracle registry (q_pq_knn covers
-    correctness; this measures the cached path)."""
+    """Bench-only PQ serve split (the q_ivf_build/q_ivf_serve pattern):
+    first call builds the code table (session_cached, then `persisted`;
+    one-time cost), later calls measure steady-state ADC serve — the
+    number that scales with QPS. Not in the oracle registry (q_pq_knn
+    covers correctness; this measures the cached path)."""
     from .pipeline_ext import quantization as Q
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _PQ_CACHE:
+    def build(_):
         e = _emb(spark, sf_dir)
         seed_rows = e.filter(F.col("vec_id") < _PQ_K).orderBy("vec_id").collect()
+        _dense_prefix(seed_rows, 3)
         books = Q.forgy_codebooks(
             [r["embedding"] for r in seed_rows], dim=64, m=_PQ_M, k=_PQ_K
         )
-        codes = Q.pq_encode(_fan_out(e, sf_dir, "embeddings"), books).persist()
-        codes.count()
-        _dense_prefix(seed_rows, 3)
-        _PQ_CACHE[key] = (codes, books, [(r["vec_id"], r["embedding"]) for r in seed_rows[:3]])
-    codes, books, queries = _PQ_CACHE[key]
-    return Q.pq_adc_topk(codes, books, queries, k=10)
+        codes = Q.pq_encode(_fan_out(e, sf_dir, "embeddings"), books)
+        return codes, books, [(r["vec_id"], r["embedding"]) for r in seed_rows[:3]]
+
+    codes, books, queries = session_cached(spark, ("pq", os.path.abspath(sf_dir)), build)
+    return Q.pq_adc_topk(persisted(codes), books, queries, k=10)
 
 
 # ------------------------------------------------ training-corpus assembly

@@ -22,6 +22,7 @@ from .encode import CorpusStats, VectorLayout, compute_stats
 from .fused_encode import embed_encode_fused
 from .query import CompiledQuery, compile_query
 from .search import topk
+from .session import persisted, session_cached
 
 EMB_DIM = 64
 NUM_HARMONICS = 64  # enough for ≈0.9+ fused-vs-exact recall; reference default is 200
@@ -124,32 +125,16 @@ def flagship_compiled(corpus: DocumentCorpus, num_harmonics: int | None = None) 
     )
 
 
-_CORPUS_CACHE: dict = {}
-
-
 def build_corpus_cached(spark: SparkSession, sf_dir: str) -> DocumentCorpus:
-    """Session-scoped memo of :func:`build_corpus` (the
-    _RESTAURANTS_CACHE pattern): the flagship, fused-IVF, and recall
-    entries all consume the SAME encoded corpus, so within one
-    session the embed+encode build runs once and the encoded frame is
-    persisted. Semantics are identical to a fresh build — the encode
-    is deterministic — so oracle entries stay self-contained."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _CORPUS_CACHE:
-        corpus = build_corpus(spark, sf_dir)
-        corpus.encoded = corpus.encoded.persist()
-        corpus.encoded.count()
-        _CORPUS_CACHE[key] = corpus
-    corpus = _CORPUS_CACHE[key]
-    # Self-heal external eviction: Spark's CacheManager keys cached data
-    # by ANALYZED PLAN, not by DataFrame object, so `unpersist()` on any
-    # plan-identical frame built elsewhere (a fresh build_corpus of the
-    # same sf_dir) silently drops THIS corpus's cached blocks too, and
-    # every later consumer re-runs the full embed+encode per scan.
-    sl = corpus.encoded.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        corpus.encoded = corpus.encoded.persist()
-        corpus.encoded.count()
+    """Session-scoped memo of :func:`build_corpus` (session_cached):
+    the flagship, fused-IVF, and recall entries all consume the SAME
+    encoded corpus, so within one session the embed+encode build runs
+    once and ``persisted`` keeps the encoded frame cached. Semantics
+    are identical to a fresh build — the encode is deterministic — so
+    oracle entries stay self-contained."""
+    key = ("corpus", os.path.abspath(sf_dir))
+    corpus = session_cached(spark, key, lambda _: build_corpus(spark, sf_dir))
+    persisted(corpus.encoded)
     return corpus
 
 

@@ -8,9 +8,12 @@ partitioning, zstd parquet.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -93,13 +96,43 @@ def local_frame(spark: SparkSession, rows: list, schema: str):
         depth += ch in "<("
         depth -= ch in ">)"
         field += ch
-    if rows and len(rows[0]) != len(names):
-        raise ValueError(
-            f"local_frame row width {len(rows[0])} != schema field "
-            f"count {len(names)} ({names})"
-        )
+    for i, r in enumerate(rows):
+        if len(r) != len(names):
+            raise ValueError(
+                f"local_frame row {i} width {len(r)} != schema field "
+                f"count {len(names)} ({names})"
+            )
     data = {n: [r[i] for r in rows] for i, n in enumerate(names)}
     return spark.createDataFrame(pd.DataFrame(data, columns=names), schema=schema)
+
+
+_BUILDS: dict = {}
+_SCRATCH: dict = {}
+
+
+def session_cached(spark: SparkSession, key, build):
+    """Build once per (applicationId, ``key``): the first call keeps
+    ``build(scratch)``, later calls return it. ``scratch`` is a fresh
+    subdirectory of one per-application ``tempfile.mkdtemp`` (under
+    ``TMPDIR``, removed at interpreter exit), private to this key."""
+    app = spark.sparkContext.applicationId
+    if (app, key) not in _BUILDS:
+        if app not in _SCRATCH:
+            _SCRATCH[app] = tempfile.mkdtemp(prefix="fuserank-")
+            atexit.register(shutil.rmtree, _SCRATCH[app], ignore_errors=True)
+        _BUILDS[app, key] = build(tempfile.mkdtemp(dir=_SCRATCH[app]))
+    return _BUILDS[app, key]
+
+
+def persisted(df: DataFrame) -> DataFrame:
+    """Persist and materialize ``df`` unless it is cached; return it.
+    Spark's CacheManager keys cached data by ANALYZED PLAN, not by
+    DataFrame object, so ``unpersist()`` on a plan twin built elsewhere
+    silently evicts ``df`` too; ``storageLevel`` looks the plan up."""
+    sl = df.storageLevel
+    if not (sl.useMemory or sl.useDisk):
+        df.persist().count()
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):

@@ -241,3 +241,24 @@ def test_arrow_topk_heap_negative_midpoint_sign_aware(spark):
     assert [r["row_id"] for r in got_expr] == [1]
     # unrounded, the raw-higher score (−0.5, row 2) wins on both paths
     assert [r["row_id"] for r in topk(df, qv, k=1, use_arrow=True).collect()] == [2]
+
+
+@pytest.mark.parametrize(
+    "rows, schema, match",
+    [
+        ([(1, 2)], "a:int, b:int", "colon-form"),
+        ([(1,)], "a int, b int", "width 1 != schema"),
+        ([(1, 2), (3, 4, 5)], "a int, b int", "row 1 width 3"),
+        ([(1, 2), (3,)], "a int, b int", "row 1 width 1"),
+    ],
+    ids=["colon_schema", "bad_first_row", "later_long_row", "later_short_row"],
+)
+def test_local_frame_rejects_malformed_input(spark, rows, schema, match):
+    """local_frame's contracts: space-separated DDL only, and EVERY
+    row carries one value per field — a later long row would be cut
+    short by the pandas path, a later short one would raise an opaque
+    IndexError."""
+    from fuserank_spark.session import local_frame
+
+    with pytest.raises(ValueError, match=match):
+        local_frame(spark, rows, schema)

@@ -27,7 +27,8 @@ def emb(spark):
         "vec_id", "embedding"
     )
     e.cache().count()
-    return e
+    yield e
+    e.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -44,7 +45,8 @@ def candidates(emb):
         "query_id", "vec_id", "cosine", "embedding"
     )
     c.cache().count()
-    return c
+    yield c
+    c.unpersist()
 
 
 def _mmr_reference(rows, k, lam):

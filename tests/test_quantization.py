@@ -18,7 +18,8 @@ from .conftest import SF_SMOKE
 def emb(spark):
     df = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     df.cache().count()
-    return df
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

@@ -27,7 +27,8 @@ THR = 0.3  # sf0.001 within-cell cosine tops out ~0.47; 0.3 drops ~1% of pairs
 def emb(spark):
     e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select("vec_id", "embedding")
     e.cache().count()
-    return e
+    yield e
+    e.unpersist()
 
 
 @pytest.fixture(scope="module")
