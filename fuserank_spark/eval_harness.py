@@ -17,8 +17,10 @@ reporting: grouped means (A5, evaluate.py:113-129).
 from __future__ import annotations
 
 import random
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -222,10 +224,8 @@ def evaluate_fused_vs_exact(
         # persisted corpus — submit them from a small thread pool so
         # the 2·n_queries sequential collects overlap (guide §2.6);
         # pool.map preserves query order, results are byte-identical
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=4) as pool:
-            results.extend(pool.map(_one, queries))
+            results.extend(pool.map(inheritable_thread_target(spark)(_one), queries))
         corpus.encoded.unpersist()
     if own_base:
         base[1].unpersist()
@@ -338,10 +338,8 @@ def evaluate_geo_rank_agreement(
 
     # independent per-query jobs overlapped (guide §2.6) — see
     # evaluate_fused_vs_exact; order preserved by pool.map
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=4) as pool:
-        results = list(pool.map(_one, enumerate(picks)))
+        results = list(pool.map(inheritable_thread_target(spark)(_one), enumerate(picks)))
     corpus.encoded.unpersist()
     return results
 
@@ -486,8 +484,6 @@ def fused_ivf_nprobe_sweep(
     # every (query, nprobe) top-k is an independent driver action over
     # persisted frames — overlap them from a small thread pool (guide
     # §2.6; pool.map preserves order, results byte-identical)
-    from concurrent.futures import ThreadPoolExecutor
-
     def _approx(args):
         qi, np_ = args
         probed = probe_cells(cents, qvecs[qi], int(np_))
@@ -499,15 +495,16 @@ def fused_ivf_nprobe_sweep(
             ).collect()
         }
 
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=4) as pool:
         exact = list(
             pool.map(
-                lambda qv: {r["row_id"] for r in topk(corpus.encoded, qv, k=k).collect()},
+                inherit(lambda qv: {r["row_id"] for r in topk(corpus.encoded, qv, k=k).collect()}),
                 qvecs,
             )
         )
         grid = [(qi, np_) for np_ in nprobes for qi in range(len(qvecs))]
-        approx = dict(zip(grid, pool.map(_approx, grid)))
+        approx = dict(zip(grid, pool.map(inherit(_approx), grid)))
     rows = []
     for np_ in nprobes:
         recalls = [

@@ -20,6 +20,7 @@ from . import schema as S
 from .embed import DeterministicStubEmbedder
 from .encode import CorpusStats, VectorLayout, compute_stats
 from .fused_encode import embed_encode_fused
+from .kernels import probe_cells  # also imported from here by perfbench, tools, tests
 from .query import CompiledQuery, compile_query
 from .search import topk
 from .session import persisted, session_cached
@@ -174,22 +175,6 @@ FUSED_IVF_NPROBE_TARGET = FUSED_IVF_CELLS
 # the target corpus; the serve path (meta["centroids"]) is
 # centroid-agnostic either way. Head cells additionally remain the
 # SQL-derivable demo quantizer for the frozen oracle entry.
-
-
-def probe_cells(cents, qvec, nprobe: int) -> list[int]:
-    """Driver-side probe selection shared by EVERY fused-IVF serve
-    path (in-session, persisted cold-start, scale smoke): rounded
-    IP(query, centroid) with HALF-AWAY-FROM-ZERO decimal rounding
-    (kernels.round_half_away — matching Spark/DuckDB round(,6),
-    NOT numpy's banker's np.round), ties to the lowest cell id (a
-    stable argsort). One definition so the tie-break domain can never
-    drift between the oracle-checked path and the other serve paths."""
-    import numpy as np
-
-    from .kernels import round_half_away
-
-    ips = round_half_away(np.asarray(cents, dtype="float64") @ np.asarray(qvec, dtype="float64"))
-    return [int(c) for c in np.argsort(-ips, kind="stable")[:nprobe]]
 
 
 def _head_centroids(corpus: DocumentCorpus) -> "np.ndarray":

@@ -1,7 +1,8 @@
 """Arrow vector kernels: the pieces every mapInArrow scan over a vector
 column shares — one flat-buffer matrix read, one half-away-from-zero
-rounding, one IVF cell assignment and one partition-local top-k (the
-per-partition top-k plus global merge of REPOSE, ICDE 2021).
+rounding, one IVF cell assignment, one IVF probe selection and one
+partition-local top-k (the per-partition top-k plus global merge of
+REPOSE, ICDE 2021).
 
 One NULL/ragged contract for every kernel: a NULL vector row, a NULL
 element inside a vector, or a vector whose width is not the expected
@@ -67,6 +68,18 @@ def assign_cells(M: np.ndarray, cents: np.ndarray, metric: str, digits: int | No
     if digits is not None:
         D = round_half_away(D, digits)
     return D.argmin(axis=1)
+
+
+def probe_cells(cents, qvec, nprobe: int) -> list[int]:
+    """The ``nprobe`` IVF cells a query scans: highest inner product of
+    ``qvec`` with each centroid, rounded half-away at 6 digits (the
+    tie-break domain of a SQL twin's ``round(…, 6)`` probe ranking),
+    ties to the lowest cell id (a stable argsort). The one probe
+    selection of every IVF serve — the fused-IVF paths pass raw fused
+    vectors (IP cells); the cosine serves pass unit-normalized
+    centroids and query (simsearch._probe_join)."""
+    ips = round_half_away(np.asarray(cents, dtype="float64") @ np.asarray(qvec, dtype="float64"))
+    return [int(c) for c in np.argsort(-ips, kind="stable")[:nprobe]]
 
 
 def partition_topk(batches, score, qids, k: int, key_col: str, score_col: str, digits: int | None = None):

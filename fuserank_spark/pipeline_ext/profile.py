@@ -79,10 +79,14 @@ def profile(df: DataFrame, cols: list[str], *, exact: bool = True) -> DataFrame:
         # sequential before — the overlap hides the smaller one)
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         dist_aggs = [F.countDistinct(F.col(c)).alias(f"{c}__dist") for c in cols]
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fmain = pool.submit(lambda: df.agg(*aggs).collect()[0])
-            fdist = pool.submit(lambda: df.agg(*dist_aggs).collect()[0])
+            # both jobs keep the caller's job group, description and tags
+            inherit = inheritable_thread_target(df.sparkSession)
+            fmain = pool.submit(inherit(lambda: df.agg(*aggs).collect()[0]))
+            fdist = pool.submit(inherit(lambda: df.agg(*dist_aggs).collect()[0]))
             row = {**fmain.result().asDict(), **fdist.result().asDict()}
     else:
         row = df.agg(*aggs).collect()[0]

@@ -45,12 +45,14 @@ instead, exactly like IVF's split (ext_queries q_ivf_knn docstring).
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels import read_matrix, round_half_away
-from .simsearch import _merge_topk
+from ..kernels import read_matrix
+from .simsearch import _check_positive, _merge_topk, _probe_join, _refine_topk
 from ..session import local_frame
 
 MAX_QUERY_BATCH = 1024
@@ -384,55 +386,83 @@ def pq_adc_topk(
     re-scored with exact cosine via a broadcast id join — output
     column becomes ``cosine`` and ranks follow the exact scores
     (faiss IVFPQ + refine layout)."""
-    _check_query_batch(queries)
-    if max_query_batch < 1:
-        raise ValueError(f"max_query_batch must be >= 1, got {max_query_batch}")
-    if len(queries) > max_query_batch:
-        return _chunked_union(
-            queries,
-            lambda qs: pq_adc_topk(
-                codes, codebooks, qs, k=k, key_col=key_col, code_col=code_col,
-                refine_with=refine_with, refine_factor=refine_factor,
-                vec_col=vec_col, max_query_batch=max_query_batch,
-            ),
-            max_query_batch,
-        )
-    spark = codes.sparkSession
-    m = codebooks.shape[0]
     # rank on the ROUNDED score: Spark sums the m LUT terms in fixed
     # order while a SQL oracle's GROUP BY sum folds arbitrarily, so
     # near-tied raw doubles could flip ranks across engines; rounding
     # before ranking makes the tie-break domain identical.
-    luts = _lut_frame(spark, codebooks, queries)
-    scored = codes.crossJoin(F.broadcast(luts)).select(
-        "query_id",
-        F.col(key_col),
-        F.round(_adc_score_expr(code_col, m), 6).alias("adc"),
-    )
-    return _finish_topk(
-        scored, queries, k, key_col, refine_with, refine_factor, vec_col, spark
+    return _serve(
+        codes, queries, lambda spark, qs: _lut_frame(spark, codebooks, qs),
+        F.round(_adc_score_expr(code_col, codebooks.shape[0]), 6), probe=None,
+        k=k, key_col=key_col, refine_with=refine_with, refine_factor=refine_factor,
+        vec_col=vec_col, max_query_batch=max_query_batch,
     )
 
 
-def _check_query_batch(queries: list[tuple]) -> None:
+def _serve(
+    codes: DataFrame,
+    queries: list[tuple],
+    query_frame,
+    score: Column,
+    *,
+    probe: tuple | None,
+    k: int,
+    key_col: str,
+    refine_with: DataFrame | None,
+    refine_factor: int,
+    vec_col: str,
+    max_query_batch: int,
+) -> DataFrame:
+    """The one batch serve of the quantized family; a tier supplies
+    only ``query_frame(spark, queries)`` — its per-query broadcast
+    frame (query_id plus the tier's LUT / bias and weights / packed
+    words) — and ``score``, the Column that scores one code row
+    against one query row of that frame.
+
+    ``probe=None`` crossJoins the broadcast query frame (the flat
+    serve). ``probe=(centroids, nprobe, cell_col)`` first restricts
+    ``codes`` to each query's nprobe nearest cells (simsearch
+    _probe_join: static ``isin`` pruning, then the broadcast probe
+    join) — the IVF serve. Scored rows merge two-phase on the
+    ``adc`` score (_merge_topk — no per-query hot key); with
+    ``refine_with`` the top ``k·refine_factor`` survivors re-score by
+    exact cosine (simsearch._refine_topk). Batches above
+    ``max_query_batch`` run cap-sized chunks whose results union: each
+    broadcast stays bounded, and per-query top-k is independent across
+    queries, so the union equals the one-shot result."""
     if not queries:
         raise ValueError("empty query batch")
     qids = [qid for qid, _ in queries]
     if len(set(qids)) != len(qids):
         raise ValueError("duplicate query_id in batch")
-
-
-def _chunked_union(queries: list[tuple], fn, chunk: int):
-    """Run ``fn`` over cap-sized slices of an over-cap query batch and
-    union the per-chunk results. The per-query LUT frame stays ≤
-    ``chunk`` rows in every broadcast, and per-query top-k is
-    independent across queries, so the union equals the one-shot
-    result (tests/test_quantization: *_auto_chunks)."""
-    out = None
-    for i in range(0, len(queries), chunk):
-        part = fn(queries[i : i + chunk])
-        out = part if out is None else out.unionByName(part)
-    return out
+    _check_positive(k=k, refine_factor=refine_factor, max_query_batch=max_query_batch)
+    if probe is not None:
+        _check_positive(nprobe=probe[1])
+    spark = codes.sparkSession
+    parts = []
+    for i in range(0, len(queries), max_query_batch):
+        qs = queries[i : i + max_query_batch]
+        qf = F.broadcast(query_frame(spark, qs))
+        if probe is None:
+            joined = codes.crossJoin(qf)
+        else:
+            centroids, nprobe, cell_col = probe
+            joined = _probe_join(codes, centroids, qs, nprobe, cell_col).join(qf, "query_id")
+        scored = joined.select("query_id", F.col(key_col), score.alias("adc"))
+        if refine_with is None:
+            part = _merge_topk(scored, k, "query_id", key_col, score_col="adc")
+        else:
+            cand = _merge_topk(scored, k * refine_factor, "query_id", key_col, score_col="adc")
+            qvecs = local_frame(
+                spark,
+                [(int(qid), [float(v) for v in qv]) for qid, qv in qs],
+                "query_id bigint, __qv array<double>",
+            )
+            part = _refine_topk(
+                refine_with, cand, qvecs, k,
+                vec_col=vec_col, key_col=key_col, query_key="query_id", query_vec="__qv",
+            )
+        parts.append(part)
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _lut_frame(spark, codebooks: np.ndarray, queries: list[tuple]) -> DataFrame:
@@ -451,59 +481,6 @@ def _adc_score_expr(code_col: str, m: int):
         )
         score = term if score is None else score + term
     return score
-
-
-def _finish_topk(
-    scored: DataFrame,
-    queries: list[tuple],
-    k: int,
-    key_col: str,
-    refine_with: DataFrame | None,
-    refine_factor: int,
-    vec_col: str,
-    spark,
-) -> DataFrame:
-    if refine_with is None:
-        return _merge_topk(scored, k, "query_id", key_col, score_col="adc")
-    cand = _merge_topk(
-        scored, k * refine_factor, "query_id", key_col, score_col="adc"
-    ).select("query_id", key_col)
-    qdf = local_frame(spark, 
-        [(qid, [float(v) for v in qv]) for qid, qv in queries],
-        "query_id bigint, __qv array<double>",
-    )
-    from .simsearch import _cosine
-
-    rescored = (
-        refine_with.join(F.broadcast(cand), key_col)
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            F.col(key_col),
-            _cosine(F.col(vec_col), F.col("__qv")).alias("cosine"),
-        )
-    )
-    return _merge_topk(rescored, k, "query_id", key_col, score_col="cosine")
-
-
-def _probe_rows(
-    centroids: np.ndarray, queries: list[tuple], nprobe: int
-) -> list[tuple[int, int]]:
-    """Driver-side coarse probe selection shared by the IVF-PQ and
-    IVF-SQ serve paths: per query, the ``nprobe`` nearest cells by
-    centroid cosine. Scores are rounded half-away with lowest-cid
-    tie-break so the probe set shares a tie-break domain with a SQL
-    twin's ``round(cosine, 6)`` probe ranking."""
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    rows: list[tuple[int, int]] = []
-    for qid, qv in queries:
-        q = np.asarray([float(x) for x in qv], dtype="float64")
-        qn = q / max(float(np.linalg.norm(q)), 1e-12)
-        for c in np.argsort(-round_half_away(cn @ qn), kind="stable")[:nprobe]:
-            rows.append((int(qid), int(c)))
-    return rows
 
 
 def ivf_pq_knn(
@@ -536,39 +513,12 @@ def ivf_pq_knn(
     unpartitioned ADC (tested); smaller nprobe trades recall for
     scanning nprobe/n_cells of the codes. Batches above
     ``max_query_batch`` auto-chunk like :func:`pq_adc_topk`."""
-    _check_query_batch(queries)
-    if max_query_batch < 1:
-        raise ValueError(f"max_query_batch must be >= 1, got {max_query_batch}")
-    if len(queries) > max_query_batch:
-        return _chunked_union(
-            queries,
-            lambda qs: ivf_pq_knn(
-                codes, centroids, codebooks, qs, k=k, nprobe=nprobe,
-                key_col=key_col, code_col=code_col, cell_col=cell_col,
-                refine_with=refine_with, refine_factor=refine_factor,
-                vec_col=vec_col, max_query_batch=max_query_batch,
-            ),
-            max_query_batch,
-        )
-    spark = codes.sparkSession
-    m = codebooks.shape[0]
-    probe_rows = _probe_rows(centroids, queries, nprobe)
-    probed_cells = sorted({c for _, c in probe_rows})
-    pruned = codes.filter(F.col(cell_col).isin(probed_cells))
-    probes = local_frame(spark, probe_rows, f"query_id bigint, {cell_col} int")
-    luts = _lut_frame(spark, codebooks, queries)
-    scored = (
-        pruned.join(F.broadcast(probes), cell_col)
-        .join(F.broadcast(luts), "query_id")
-        .select(
-            "query_id",
-            F.col(key_col),
-            # rounded before ranking — same rationale as pq_adc_topk
-            F.round(_adc_score_expr(code_col, m), 6).alias("adc"),
-        )
-    )
-    return _finish_topk(
-        scored, queries, k, key_col, refine_with, refine_factor, vec_col, spark
+    return _serve(
+        codes, queries, lambda spark, qs: _lut_frame(spark, codebooks, qs),
+        F.round(_adc_score_expr(code_col, codebooks.shape[0]), 6),
+        probe=(centroids, nprobe, cell_col),
+        k=k, key_col=key_col, refine_with=refine_with, refine_factor=refine_factor,
+        vec_col=vec_col, max_query_batch=max_query_batch,
     )
 
 
@@ -746,28 +696,11 @@ def sq_adc_topk(
     over-cap batches auto-chunk; optional exact-cosine refine — all
     exactly the :func:`pq_adc_topk` contract. Scores are rounded to
     6 before ranking (cross-engine tie-break domain)."""
-    _check_query_batch(queries)
-    if max_query_batch < 1:
-        raise ValueError(f"max_query_batch must be >= 1, got {max_query_batch}")
-    if len(queries) > max_query_batch:
-        return _chunked_union(
-            queries,
-            lambda qs: sq_adc_topk(
-                codes, mins, scales, qs, k=k, key_col=key_col,
-                code_col=code_col, refine_with=refine_with,
-                refine_factor=refine_factor, vec_col=vec_col,
-                max_query_batch=max_query_batch,
-            ),
-            max_query_batch,
-        )
-    spark = codes.sparkSession
-    scored = codes.crossJoin(F.broadcast(_sq_query_frame(spark, mins, scales, queries))).select(
-        "query_id",
-        F.col(key_col),
-        F.round(_sq_score_expr(code_col), 6).alias("adc"),
-    )
-    return _finish_topk(
-        scored, queries, k, key_col, refine_with, refine_factor, vec_col, spark
+    return _serve(
+        codes, queries, lambda spark, qs: _sq_query_frame(spark, mins, scales, qs),
+        F.round(_sq_score_expr(code_col), 6), probe=None,
+        k=k, key_col=key_col, refine_with=refine_with, refine_factor=refine_factor,
+        vec_col=vec_col, max_query_batch=max_query_batch,
     )
 
 
@@ -821,36 +754,11 @@ def ivf_sq_knn(
     all mirror :func:`ivf_pq_knn`; with ``nprobe == n_centroids``
     the result is identical to unpartitioned :func:`sq_adc_topk`
     (tested)."""
-    _check_query_batch(queries)
-    if max_query_batch < 1:
-        raise ValueError(f"max_query_batch must be >= 1, got {max_query_batch}")
-    if len(queries) > max_query_batch:
-        return _chunked_union(
-            queries,
-            lambda qs: ivf_sq_knn(
-                codes, centroids, mins, scales, qs, k=k, nprobe=nprobe,
-                key_col=key_col, code_col=code_col, cell_col=cell_col,
-                refine_with=refine_with, refine_factor=refine_factor,
-                vec_col=vec_col, max_query_batch=max_query_batch,
-            ),
-            max_query_batch,
-        )
-    spark = codes.sparkSession
-    probe_rows = _probe_rows(centroids, queries, nprobe)
-    probed_cells = sorted({c for _, c in probe_rows})
-    probes = local_frame(spark, probe_rows, f"query_id bigint, {cell_col} int")
-    scored = (
-        codes.filter(F.col(cell_col).isin(probed_cells))
-        .join(F.broadcast(probes), cell_col)
-        .join(F.broadcast(_sq_query_frame(spark, mins, scales, queries)), "query_id")
-        .select(
-            "query_id",
-            F.col(key_col),
-            F.round(_sq_score_expr(code_col), 6).alias("adc"),
-        )
-    )
-    return _finish_topk(
-        scored, queries, k, key_col, refine_with, refine_factor, vec_col, spark
+    return _serve(
+        codes, queries, lambda spark, qs: _sq_query_frame(spark, mins, scales, qs),
+        F.round(_sq_score_expr(code_col), 6), probe=(centroids, nprobe, cell_col),
+        k=k, key_col=key_col, refine_with=refine_with, refine_factor=refine_factor,
+        vec_col=vec_col, max_query_batch=max_query_batch,
     )
 
 
@@ -1051,31 +959,11 @@ def bq_hamming_topk(
     :func:`pq_adc_topk` / :func:`sq_adc_topk` contract. Ties
     (score desc, key asc) are integer-exact, so a SQL twin needs no
     rounding discipline at all on the unrefined path."""
-    _check_query_batch(queries)
-    if max_query_batch < 1:
-        raise ValueError(f"max_query_batch must be >= 1, got {max_query_batch}")
-    if len(queries) > max_query_batch:
-        return _chunked_union(
-            queries,
-            lambda qs: bq_hamming_topk(
-                codes, thresholds, qs, k=k, key_col=key_col,
-                code_col=code_col, refine_with=refine_with,
-                refine_factor=refine_factor, vec_col=vec_col,
-                max_query_batch=max_query_batch,
-            ),
-            max_query_batch,
-        )
-    spark = codes.sparkSession
-    dim = len(thresholds)
-    scored = codes.crossJoin(
-        F.broadcast(_bq_query_frame(spark, thresholds, queries))
-    ).select(
-        "query_id",
-        F.col(key_col),
-        _bq_score_expr(code_col, dim).alias("adc"),
-    )
-    return _finish_topk(
-        scored, queries, k, key_col, refine_with, refine_factor, vec_col, spark
+    return _serve(
+        codes, queries, lambda spark, qs: _bq_query_frame(spark, thresholds, qs),
+        _bq_score_expr(code_col, len(thresholds)), probe=None,
+        k=k, key_col=key_col, refine_with=refine_with, refine_factor=refine_factor,
+        vec_col=vec_col, max_query_batch=max_query_batch,
     )
 
 
@@ -1101,37 +989,11 @@ def ivf_bq_knn(
     :func:`ivf_pq_knn` (faiss ``IndexBinaryIVF``). With ``nprobe ==
     n_centroids`` identical to unpartitioned :func:`bq_hamming_topk`
     (tested)."""
-    _check_query_batch(queries)
-    if max_query_batch < 1:
-        raise ValueError(f"max_query_batch must be >= 1, got {max_query_batch}")
-    if len(queries) > max_query_batch:
-        return _chunked_union(
-            queries,
-            lambda qs: ivf_bq_knn(
-                codes, centroids, thresholds, qs, k=k, nprobe=nprobe,
-                key_col=key_col, code_col=code_col, cell_col=cell_col,
-                refine_with=refine_with, refine_factor=refine_factor,
-                vec_col=vec_col, max_query_batch=max_query_batch,
-            ),
-            max_query_batch,
-        )
-    spark = codes.sparkSession
-    dim = len(thresholds)
-    probe_rows = _probe_rows(centroids, queries, nprobe)
-    probed_cells = sorted({c for _, c in probe_rows})
-    probes = local_frame(spark, probe_rows, f"query_id bigint, {cell_col} int")
-    scored = (
-        codes.filter(F.col(cell_col).isin(probed_cells))
-        .join(F.broadcast(probes), cell_col)
-        .join(F.broadcast(_bq_query_frame(spark, thresholds, queries)), "query_id")
-        .select(
-            "query_id",
-            F.col(key_col),
-            _bq_score_expr(code_col, dim).alias("adc"),
-        )
-    )
-    return _finish_topk(
-        scored, queries, k, key_col, refine_with, refine_factor, vec_col, spark
+    return _serve(
+        codes, queries, lambda spark, qs: _bq_query_frame(spark, thresholds, qs),
+        _bq_score_expr(code_col, len(thresholds)), probe=(centroids, nprobe, cell_col),
+        k=k, key_col=key_col, refine_with=refine_with, refine_factor=refine_factor,
+        vec_col=vec_col, max_query_batch=max_query_batch,
     )
 
 

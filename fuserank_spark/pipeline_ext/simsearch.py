@@ -10,18 +10,22 @@ buckets first — the crossJoin disappears entirely.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..kernels import assign_cells, read_matrix, round_half_away
-from ..search import dot_expr, l2_norm_expr
+from ..kernels import assign_cells, probe_cells, read_matrix, round_half_away
+from ..search import cosine_expr
 from ..session import local_frame
 
 
-def _cosine(a_vec, b_vec):
-    return dot_expr(a_vec, b_vec) / (l2_norm_expr(a_vec) * l2_norm_expr(b_vec))
+def _check_positive(**args: int) -> None:
+    for name, v in args.items():
+        if v < 1:
+            raise ValueError(f"{name} must be >= 1, got {v}")
 
 
 def _merge_topk(
@@ -52,6 +56,68 @@ def _merge_topk(
         .withColumn("rnk", F.row_number().over(w_global))
         .filter(F.col("rnk") <= k)
         .select(query_key, key_col, "rnk", F.round(score_col, 6).alias(score_col))
+    )
+
+
+def _refine_topk(
+    corpus: DataFrame,
+    cand: DataFrame,
+    queries: DataFrame,
+    k: int,
+    *,
+    vec_col: str,
+    key_col: str,
+    query_key: str,
+    query_vec: str,
+) -> DataFrame:
+    """Exact-cosine top-k over candidate ids, the refine stage of the
+    quantized serves and :func:`truncated_prefilter_topk`: broadcast
+    ``cand``'s (query, id) pairs onto ``corpus``, broadcast the query
+    vectors, score cosine, two-phase merge. ``corpus`` is touched only
+    for the candidate rows, never scanned for scoring."""
+    rescored = (
+        corpus.join(F.broadcast(cand.select(query_key, key_col)), key_col)
+        .join(F.broadcast(queries), query_key)
+        .select(
+            query_key,
+            F.col(key_col),
+            cosine_expr(F.col(vec_col), F.col(query_vec)).alias("cosine"),
+        )
+    )
+    return _merge_topk(rescored, k, query_key, key_col)
+
+
+def _probe_join(
+    frame: DataFrame,
+    centroids: np.ndarray,
+    queries: list[tuple],
+    nprobe: int,
+    cell_col: str,
+    query_key: str = "query_id",
+    query_vec: str | None = None,
+) -> DataFrame:
+    """``frame`` joined to each (query_id, vector) query's ``nprobe``
+    nearest cells by centroid cosine — kernels.probe_cells on
+    unit-normalized centroids and query. The probed cell ids apply
+    first as a STATIC ``isin``: when ``frame`` is an ivf_persist-ed
+    index that is a partition filter, so unprobed cells are never
+    read. Then the (query, cell) probe rows join by broadcast; with
+    ``query_vec`` they also carry the query vector under that name."""
+    cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
+    rows = []
+    for qid, qv in queries:
+        qf = [float(x) for x in qv]
+        q = np.asarray(qf, dtype="float64")
+        tail = (qf,) if query_vec else ()
+        for c in probe_cells(cn, q / max(float(np.linalg.norm(q)), 1e-12), nprobe):
+            rows.append((int(qid), c) + tail)
+    schema = f"{query_key} bigint, {cell_col} int"
+    if query_vec:
+        schema += f", {query_vec} array<double>"
+    probes = local_frame(frame.sparkSession, rows, schema)
+    probed_cells = sorted({r[1] for r in rows})
+    return frame.filter(F.col(cell_col).isin(probed_cells)).join(
+        F.broadcast(probes), cell_col
     )
 
 
@@ -124,7 +190,7 @@ def brute_force_knn(
     scored = corpus.crossJoin(F.broadcast(queries)).select(
         F.col(query_key),
         F.col(key_col),
-        _cosine(F.col(vec_col), F.col(query_vec)).alias("cosine"),
+        cosine_expr(F.col(vec_col), F.col(query_vec)).alias("cosine"),
     )
     return _merge_topk(scored, k, query_key, key_col)
 
@@ -372,64 +438,33 @@ def ivf_knn(
     tests/test_curation.py::test_ivf_knn_auto_chunks). For workloads
     where even chunked driver compile is wrong, use lsh_knn whose
     bucketing is computed distributed."""
-    if max_query_batch < 1:
-        raise ValueError(f"max_query_batch must be >= 1, got {max_query_batch}")
-    args = (k, nprobe, vec_col, key_col, query_key, query_vec)
+    _check_positive(k=k, nprobe=nprobe, max_query_batch=max_query_batch)
+
+    def batch(qrows: list) -> DataFrame:
+        # one bounded chunk: probes for these rows, probed cells only,
+        # exact rerank; the probe rows carry the query vector
+        probed = _probe_join(
+            assigned, centroids, [(r[query_key], r[query_vec]) for r in qrows],
+            nprobe, "centroid_id", query_key, query_vec,
+        )
+        scored = probed.select(
+            F.col(query_key),
+            F.col(key_col),
+            cosine_expr(F.col(vec_col), F.col(query_vec)).alias("cosine"),
+        )
+        return _merge_topk(scored, k, query_key, key_col)
+
     chunks: list[DataFrame] = []
     buf: list = []
     for r in queries.toLocalIterator():
         buf.append(r)
         if len(buf) >= max_query_batch:
-            chunks.append(_ivf_knn_batch(assigned, centroids, buf, *args))
+            chunks.append(batch(buf))
             buf = []
     if buf or not chunks:
         # empty frame → one empty-batch call keeps the output schema
-        chunks.append(_ivf_knn_batch(assigned, centroids, buf, *args))
-    out = chunks[0]
-    for c in chunks[1:]:
-        out = out.unionByName(c)
-    return out
-
-
-def _ivf_knn_batch(
-    assigned: DataFrame,
-    centroids: np.ndarray,
-    qrows: list,
-    k: int,
-    nprobe: int,
-    vec_col: str,
-    key_col: str,
-    query_key: str,
-    query_vec: str,
-) -> DataFrame:
-    """One bounded chunk of :func:`ivf_knn`: compile probes for these
-    query rows driver-side, scan only the probed cells, exact rerank."""
-    probe_rows = []
-    cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
-    for r in qrows:
-        qv = np.asarray(r[query_vec], dtype="float64")
-        qn = qv / (np.linalg.norm(qv) or 1.0)
-        # rounded half-away + lowest-cid tie-break (a stable argsort
-        # of the negated scores): the SQL twin orders by
-        # round(cosine, 6) DESC, cid ASC — same domain
-        for cid in np.argsort(-round_half_away(cn @ qn), kind="stable")[:nprobe]:
-            probe_rows.append((r[query_key], int(cid), [float(x) for x in qv]))
-    spark = assigned.sparkSession
-    # Arrow LocalRelation, not createDataFrame(list) (CLAUDE.md r11):
-    # the probes frame is broadcast below — as a pickled Python RDD
-    # every serve call paid a default-parallelism Python-worker stage
-    # just to re-read a handful of probe rows
-    probes = local_frame(
-        spark, probe_rows, f"{query_key} int, centroid_id int, {query_vec} array<double>"
-    )
-    probed_cells = sorted({cid for _, cid, _ in probe_rows})
-    assigned = assigned.filter(F.col("centroid_id").isin(probed_cells))
-    joined = assigned.join(F.broadcast(probes), "centroid_id").select(
-        F.col(query_key),
-        F.col(key_col),
-        _cosine(F.col(vec_col), F.col(query_vec)).alias("cosine"),
-    )
-    return _merge_topk(joined, k, query_key, key_col)
+        chunks.append(batch(buf))
+    return reduce(DataFrame.unionByName, chunks)
 
 
 def ml_cosine_similarity_join(
@@ -498,7 +533,7 @@ def lsh_knn(
     joined = c.join(F.broadcast(q), "bucket").select(
         F.col(query_key),
         F.col(key_col),
-        _cosine(F.col(vec_col), F.col(query_vec)).alias("cosine"),
+        cosine_expr(F.col(vec_col), F.col(query_vec)).alias("cosine"),
     )
     # per-(query, vec) dedup across probes, then two-phase merge —
     # the dedup groupBy is keyed on (query, vec) (uniform); the merge
@@ -649,10 +684,7 @@ def truncated_prefilter_topk(
     than ``prefix_dim`` are coarse-scored on what exists (slice
     truncates silently) — enforce uniform dims upstream if that
     matters."""
-    if prefix_dim < 1:
-        raise ValueError(f"prefix_dim must be >= 1, got {prefix_dim}")
-    if refine_factor < 1:
-        raise ValueError(f"refine_factor must be >= 1, got {refine_factor}")
+    _check_positive(prefix_dim=prefix_dim, refine_factor=refine_factor)
     coarse_corpus = corpus.select(
         key_col, F.slice(F.col(vec_col), 1, prefix_dim).alias(vec_col)
     )
@@ -663,14 +695,8 @@ def truncated_prefilter_topk(
         coarse_corpus, coarse_queries, k=k * refine_factor,
         vec_col=vec_col, key_col=key_col,
         query_key=query_key, query_vec=query_vec,
-    ).select(query_key, key_col)
-    rescored = (
-        corpus.join(F.broadcast(cand), key_col)
-        .join(F.broadcast(queries), query_key)
-        .select(
-            query_key,
-            F.col(key_col),
-            _cosine(F.col(vec_col), F.col(query_vec)).alias("cosine"),
-        )
     )
-    return _merge_topk(rescored, k, query_key, key_col)
+    return _refine_topk(
+        corpus, cand, queries, k,
+        vec_col=vec_col, key_col=key_col, query_key=query_key, query_vec=query_vec,
+    )

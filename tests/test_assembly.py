@@ -261,6 +261,26 @@ def test_profile_matches_pandas(spark):
         assert abs(r["p50"] - np.percentile(pdf[c].dropna(), 50)) < 1e-5
 
 
+def test_profile_pool_jobs_keep_caller_job_group(spark):
+    """profile()'s two pooled aggregation jobs run under the caller's
+    job group (the pool submits through inheritable_thread_target), so
+    cancelJobGroup and per-label traces reach them."""
+    from fuserank_spark.pipeline_ext.profile import profile
+
+    sc = spark.sparkContext
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("profile-pool-attribution", "profile pool attribution")
+    try:
+        profile(li, ["l_quantity", "l_tax"])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(tracker.getJobIdsForGroup("profile-pool-attribution")) >= 2
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
 def test_profile_guards(spark):
     from fuserank_spark.pipeline_ext.profile import profile
 

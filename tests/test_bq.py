@@ -167,12 +167,27 @@ def test_ivf_bq_full_probe_equals_flat(emb, thresholds, queries):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
-def test_bq_auto_chunks(emb, thresholds, queries):
-    codes = bq_encode(emb, thresholds)
-    one = bq_hamming_topk(codes, thresholds, queries, k=K)
-    chunked = bq_hamming_topk(
-        codes, thresholds, queries, k=K, max_query_batch=1
-    )
+@pytest.mark.parametrize("ivf", [False, True], ids=["flat", "ivf"])
+def test_bq_auto_chunks(emb, thresholds, queries, ivf):
+    """An over-cap query batch must union to the one-shot result, for
+    the flat serve and the IVF serve (full probe)."""
+    import numpy as np
+
+    if ivf:
+        cent_rows = emb.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
+        centroids = np.array([[float(x) for x in r["embedding"]] for r in cent_rows])
+        codes = bq_encode(ivf_assign(emb, centroids), thresholds)
+
+        def serve(**kw):
+            return ivf_bq_knn(codes, centroids, thresholds, queries, k=K, nprobe=4, **kw)
+    else:
+        codes = bq_encode(emb, thresholds)
+
+        def serve(**kw):
+            return bq_hamming_topk(codes, thresholds, queries, k=K, **kw)
+
+    one = serve()
+    chunked = serve(max_query_batch=1)
     got = [tuple(r) for r in chunked.orderBy("query_id", "rnk").collect()]
     want = [tuple(r) for r in one.orderBy("query_id", "rnk").collect()]
     assert got == want

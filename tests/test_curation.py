@@ -206,6 +206,9 @@ def test_ivf_knn_auto_chunks(spark):
     assert sorted(map(tuple, chunked)) == sorted(map(tuple, one_shot))
     with pytest.raises(ValueError, match="max_query_batch"):
         ivf_knn(assigned, cents, q, max_query_batch=0)
+    for kw in ({"k": 0}, {"nprobe": 0}):
+        with pytest.raises(ValueError, match=f"{next(iter(kw))} must be >= 1, got 0"):
+            ivf_knn(assigned, cents, q, **kw)
 
 
 def test_curate_corpus_optional_semantic_stage(spark):

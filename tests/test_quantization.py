@@ -109,13 +109,40 @@ def test_adc_lut_rejects_wrong_dim(forgy_books):
         Q.adc_lut(forgy_books, [0.0] * 63)
 
 
-def test_adc_topk_batch_guards(emb, forgy_books):
-    codes = Q.pq_encode(emb, forgy_books)
+@pytest.mark.parametrize(
+    "serve",
+    ["pq_adc_topk", "ivf_pq_knn", "sq_adc_topk", "ivf_sq_knn", "bq_hamming_topk", "ivf_bq_knn"],
+)
+def test_adc_topk_batch_guards(emb, forgy_books, serve):
+    """Every public quantized serve rejects an empty or duplicate-id
+    batch and a k, refine_factor, max_query_batch or nprobe below 1 —
+    unchecked, k=0, refine_factor=0 and nprobe=0 serve 0 rows silently."""
+    mins, scales, thr = [0.0] * 64, [1.0] * 64, [0.0] * 64
+    cents = np.eye(4, 64)
+    cell = (F.col("vec_id") % 4).cast("int").alias("centroid_id")
+    pq = Q.pq_encode(emb, forgy_books).select("*", cell)
+    sq = Q.sq_encode(emb, mins, scales).select("*", cell)
+    bq = Q.bq_encode(emb, thr).select("*", cell)
+    run = {
+        "pq_adc_topk": lambda qs, **kw: Q.pq_adc_topk(pq, forgy_books, qs, **kw),
+        "ivf_pq_knn": lambda qs, **kw: Q.ivf_pq_knn(pq, cents, forgy_books, qs, **kw),
+        "sq_adc_topk": lambda qs, **kw: Q.sq_adc_topk(sq, mins, scales, qs, **kw),
+        "ivf_sq_knn": lambda qs, **kw: Q.ivf_sq_knn(sq, cents, mins, scales, qs, **kw),
+        "bq_hamming_topk": lambda qs, **kw: Q.bq_hamming_topk(bq, thr, qs, **kw),
+        "ivf_bq_knn": lambda qs, **kw: Q.ivf_bq_knn(bq, cents, thr, qs, **kw),
+    }[serve]
     with pytest.raises(ValueError, match="empty"):
-        Q.pq_adc_topk(codes, forgy_books, [])
+        run([])
     qv = [0.0] * 64
     with pytest.raises(ValueError, match="duplicate"):
-        Q.pq_adc_topk(codes, forgy_books, [(1, qv), (1, qv)])
+        run([(1, qv), (1, qv)])
+    bad = [{"k": 0}, {"refine_factor": 0, "refine_with": emb}, {"max_query_batch": 0}]
+    if serve.startswith("ivf"):
+        bad.append({"nprobe": 0})
+    for kw in bad:
+        name = next(iter(kw))
+        with pytest.raises(ValueError, match=f"{name} must be >= 1, got 0"):
+            run([(1, qv)], **kw)
 
 
 def test_adc_topk_auto_chunks(emb, forgy_books):

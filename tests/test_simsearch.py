@@ -56,6 +56,25 @@ def test_ivf_recall_vs_exact(emb, queries, exact):
         assert ids[0] == qid
 
 
+def test_ivf_knn_accepts_bigint_query_ids(emb, queries):
+    """Query ids past the int range (vec_id is bigint) serve unchanged:
+    the same neighbours as the small ids, under a bigint query_id."""
+    import numpy as np
+
+    assigned = emb.withColumn("centroid_id", (F.col("vec_id") % 4).cast("int"))
+    cents = np.random.RandomState(3).normal(size=(4, 64))
+    off = 3 * 10**9
+    big = queries.withColumn("query_id", F.col("query_id") + F.lit(off))
+    want = {
+        (r["query_id"] + off, r["vec_id"], r["rnk"])
+        for r in ivf_knn(assigned, cents, queries, k=5, nprobe=2).collect()
+    }
+    got = ivf_knn(assigned, cents, big, k=5, nprobe=2)
+    assert dict(got.dtypes)["query_id"] == "bigint"
+    assert {(r["query_id"], r["vec_id"], r["rnk"]) for r in got.collect()} == want
+    assert len(want) == 25
+
+
 def test_ivf_nprobe_monotone(emb, queries, exact):
     """More probes → recall can only improve (cells are a partition)."""
     assigned, centroids = ivf_build(emb, dim=64, n_centroids=8)

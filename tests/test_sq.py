@@ -176,14 +176,28 @@ def test_ivf_sq_single_probe_is_cell_members(emb, params, queries):
     assert len(got_cells) == 1
 
 
-def test_sq_adc_auto_chunks(emb, params, queries):
-    """An over-cap query batch must union to the one-shot result."""
+@pytest.mark.parametrize("ivf", [False, True], ids=["flat", "ivf"])
+def test_sq_adc_auto_chunks(emb, params, queries, ivf):
+    """An over-cap query batch must union to the one-shot result, for
+    the flat serve and the IVF serve (full probe)."""
+    import numpy as np
+
     mins, scales = params
-    codes = sq_encode(emb, mins, scales)
-    one = sq_adc_topk(codes, mins, scales, queries, k=K)
-    chunked = sq_adc_topk(
-        codes, mins, scales, queries, k=K, max_query_batch=1
-    )
+    if ivf:
+        cent_rows = emb.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
+        centroids = np.array([[float(x) for x in r["embedding"]] for r in cent_rows])
+        codes = sq_encode(ivf_assign(emb, centroids), mins, scales)
+
+        def serve(**kw):
+            return ivf_sq_knn(codes, centroids, mins, scales, queries, k=K, nprobe=4, **kw)
+    else:
+        codes = sq_encode(emb, mins, scales)
+
+        def serve(**kw):
+            return sq_adc_topk(codes, mins, scales, queries, k=K, **kw)
+
+    one = serve()
+    chunked = serve(max_query_batch=1)
     got = [tuple(r) for r in chunked.orderBy("query_id", "rnk").collect()]
     want = [tuple(r) for r in one.orderBy("query_id", "rnk").collect()]
     assert got == want
