@@ -29,6 +29,7 @@ from pyspark.sql.functions import pandas_udf
 
 from . import fourier
 from . import schema as S
+from .search import lit_vector
 
 
 # --------------------------------------------------------------------- stats
@@ -184,7 +185,7 @@ def fourier_expr(x: Column, num_harmonics: int, freq: float = math.pi) -> Column
     ``sequence(1,K)`` — constant-size expression tree, stays inside
     whole-stage codegen."""
     sig = fourier.sigma(np.arange(1, num_harmonics + 1), num_harmonics, freq)
-    sig_arr = F.array(*[F.lit(float(s)) for s in sig])
+    sig_arr = lit_vector(sig)
     xd = x.cast("double")
     pairs = F.transform(
         F.sequence(F.lit(1), F.lit(num_harmonics)),

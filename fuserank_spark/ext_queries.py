@@ -821,7 +821,7 @@ def q_fused_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fused search path under the ORACLE GATE: real operators
     end-to-end — mapInPandas stub embed (X1-X2), compute_stats +
     sorted-vocab one-hot encode (A1/C1), driver-side query compile
-    (C2/C5/X3), Arrow-scan top-k (T1) — hash-checked against a DuckDB
+    (C2/C5/X3), expression top-k (T1) — hash-checked against a DuckDB
     re-derivation of the whole pipeline (geo/dense stay out: geo has
     no oracle form, dense trig integrals are checked by unit
     parity)."""
@@ -855,7 +855,7 @@ def q_fused_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_embedder=DeterministicStubEmbedder(_FUSED_TEXT_DIM),
         num_harmonics=4,
     )
-    out = topk(encoded, cq.vector, k=20, use_arrow=True)
+    out = topk(encoded, cq.vector, k=20)
     return out.select("doc_id", F.round("relevance", 6).alias("relevance")).orderBy(
         F.desc("relevance"), "doc_id"
     )
@@ -1316,7 +1316,7 @@ def _flagship_oracle() -> str:
 @register("q_fused_topk", _flagship_oracle())
 def q_fused_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship fused multimodal search (stub text embedder →
-    modality encodings → single Arrow-scan IP top-k), hash-checked
+    modality encodings → single exact IP top-k), hash-checked
     against a full SQL re-derivation of the engine (see
     _flagship_oracle)."""
     from .flagship import flagship_query

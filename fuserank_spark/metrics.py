@@ -1,11 +1,8 @@
 """Set-overlap eval metrics A8 (reference
-`src/eval/evaluate.py:92-110`) — driver-side twins plus distributed
-array-expression forms for eval-at-scale."""
+`src/eval/evaluate.py:92-110`), computed in Python over the
+collected id lists."""
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def recall(truth: list, retrieved: list) -> float:
@@ -23,22 +20,3 @@ def r_precision(truth: list, retrieved: list) -> float:
         return 0.0
     k = len(truth)
     return len(set(truth) & set(retrieved[:k])) / k
-
-
-def recall_expr(truth_col: Column | str, retrieved_col: Column | str) -> Column:
-    """Distributed form over array columns: |∩| / |truth|."""
-    t = F.col(truth_col) if isinstance(truth_col, str) else truth_col
-    r = F.col(retrieved_col) if isinstance(retrieved_col, str) else retrieved_col
-    # set semantics like the driver twin: dedup before counting, or a
-    # duplicated truth id inflates the denominator
-    td = F.array_distinct(t)
-    inter = F.size(F.array_intersect(td, r)).cast("double")
-    return F.when(F.size(td) > 0, inter / F.size(td)).otherwise(F.lit(0.0))
-
-
-def r_precision_expr(truth_col: Column | str, retrieved_col: Column | str) -> Column:
-    t = F.col(truth_col) if isinstance(truth_col, str) else truth_col
-    r = F.col(retrieved_col) if isinstance(retrieved_col, str) else retrieved_col
-    head = F.slice(r, 1, F.size(t))
-    inter = F.size(F.array_intersect(t, head)).cast("double")
-    return F.when(F.size(t) > 0, inter / F.size(t)).otherwise(F.lit(0.0))

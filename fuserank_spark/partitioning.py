@@ -49,10 +49,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def salted_count_agg(
     df: DataFrame,
     key_cols: list[str],

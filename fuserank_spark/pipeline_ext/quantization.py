@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import read_matrix
+from ..search import lit_vector
 from .simsearch import _check_positive, _merge_topk, _probe_join, _refine_topk
 from ..session import local_frame
 
@@ -273,7 +274,7 @@ def pq_encode(
             csq = 0.0
             for v in cent:
                 csq += v * v
-            cents.append(F.array(*[F.lit(v) for v in cent]))
+            cents.append(lit_vector(cent))
             csqs.append(F.lit(csq))
         cb = F.array(*cents)
         csq_arr = F.array(*csqs)
@@ -651,8 +652,8 @@ def sq_encode(
             )
         ),
     )
-    mn_arr = F.array(*[F.lit(float(v)).cast("double") for v in mins])
-    sc_arr = F.array(*[F.lit(float(v)).cast("double") for v in scales])
+    mn_arr = lit_vector(mins)
+    sc_arr = lit_vector(scales)
 
     def one(i):
         x = F.element_at(F.col(vec_col), i).cast("double")
@@ -860,7 +861,7 @@ def bq_encode(
             )
         ),
     )
-    thr_arr = F.array(*[F.lit(float(t)).cast("double") for t in thresholds])
+    thr_arr = lit_vector(thresholds)
     pw_arr = F.array(
         *[F.lit(1 << j).cast("bigint") for j in range(BQ_WORD_BITS)]
     )
@@ -1156,7 +1157,7 @@ def pca_project(
     out = df.withColumn(tmp, F.col(vec_col).cast("array<double>"))
     dims = []
     for j in range(comps.shape[0]):
-        carr = F.array(*[F.lit(float(c)) for c in comps[j]])
+        carr = lit_vector(comps[j])
         dot = F.aggregate(
             F.zip_with(F.col(tmp), carr, lambda x, y: x * y),
             F.lit(0.0).cast("double"),

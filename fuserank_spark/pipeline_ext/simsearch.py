@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..kernels import assign_cells, probe_cells, read_matrix, round_half_away
-from ..search import cosine_expr
+from ..search import cosine_expr, lit_vector
 from ..session import local_frame
 
 
@@ -129,64 +129,11 @@ def brute_force_knn(
     key_col: str = "vec_id",
     query_key: str = "query_id",
     query_vec: str = "qvec",
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k per query: broadcast queries, score,
-    two-phase merge. Output: (query_id, vec_id, rnk, cosine).
-
-    ``use_arrow=True`` routes scoring through search.topk_batch's
-    Arrow scan (per-partition numpy matmul over L2-normalized
-    vectors, only k·P·Q survivor rows shuffle — volume independent of
-    corpus size, the 100 TB path). The default expression path keeps
-    DuckDB-fold-order scoring for the oracle twins; its merge is
-    still two-phase, so neither path has a per-query hot key."""
-    if use_arrow:
-        from ..search import topk_batch
-
-        nrm = F.sqrt(
-            F.aggregate(
-                F.col("__bv"), F.lit(0.0).cast("double"), lambda a, x: a + x * x
-            )
-        )
-        c = (
-            corpus.withColumn("__bv", F.col(vec_col).cast("array<double>"))
-            .withColumn("__n", nrm)
-            .withColumn(
-                "__nv",
-                F.when(
-                    F.col("__n") != 0.0,
-                    F.transform(F.col("__bv"), lambda x: x / F.col("__n")),
-                ).otherwise(F.col("__bv")),
-            )
-            .select(key_col, "__nv")
-        )
-        qn = queries.withColumn("__qd", F.col(query_vec).cast("array<double>")).withColumn(
-            "__qn",
-            F.sqrt(F.aggregate(F.col("__qd"), F.lit(0.0).cast("double"), lambda a, x: a + x * x)),
-        )
-        qn = qn.select(
-            query_key,
-            F.when(
-                F.col("__qn") != 0.0, F.transform(F.col("__qd"), lambda x: x / F.col("__qn"))
-            )
-            .otherwise(F.col("__qd"))
-            .alias(query_vec),
-        )
-        hits = topk_batch(
-            c,
-            qn,
-            k=k,
-            vector_col="__nv",
-            query_vec_col=query_vec,
-            query_id_col=query_key,
-            score_col="cosine",
-            key_col=key_col,
-        )
-        w = Window.partitionBy(query_key).orderBy(F.desc("cosine"), F.col(key_col))
-        return (
-            hits.withColumn("rnk", F.row_number().over(w))
-            .select(query_key, key_col, "rnk", F.round("cosine", 6).alias("cosine"))
-        )
+    two-phase merge. Output: (query_id, vec_id, rnk, cosine). The
+    expression scoring keeps DuckDB-fold-order cosines for the oracle
+    twins; the merge is two-phase, so there is no per-query hot key."""
     scored = corpus.crossJoin(F.broadcast(queries)).select(
         F.col(query_key),
         F.col(key_col),
@@ -208,7 +155,7 @@ def lsh_bucket_expr(vec_col, planes: np.ndarray):
         proj = F.aggregate(
             F.zip_with(
                 F.col(vec_col) if isinstance(vec_col, str) else vec_col,
-                F.array(*[F.lit(float(x)) for x in planes[j]]),
+                lit_vector(planes[j]),
                 lambda x, y: x.cast("double") * y,
             ),
             F.lit(0.0),
@@ -324,7 +271,7 @@ def ivf_assign(
     out = corpus.withColumn(tmp, F.col(vec_col).cast("array<double>"))
     structs = []
     for cid, c in enumerate(cents):
-        carr = F.array(*[F.lit(float(x)) for x in c])
+        carr = lit_vector(c)
         dot = F.aggregate(
             F.zip_with(F.col(tmp), carr, lambda x, y: x * y),
             F.lit(0.0).cast("double"),
@@ -465,42 +412,6 @@ def ivf_knn(
         # empty frame → one empty-batch call keeps the output schema
         chunks.append(batch(buf))
     return reduce(DataFrame.unionByName, chunks)
-
-
-def ml_cosine_similarity_join(
-    a: DataFrame,
-    b: DataFrame,
-    dim: int,
-    threshold_distance: float = 1.2,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Spark ML BucketedRandomProjectionLSH approxSimilarityJoin over
-    L2-normalized vectors (Euclidean distance on the unit sphere is a
-    monotone proxy for cosine: d² = 2 − 2·cos). The built-in scale
-    path the survey's J-row calls for; our portable-hash MinHash
-    remains the oracle-checkable twin."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-    from pyspark.ml.functions import array_to_vector
-
-    def prep(df):
-        v = df.withColumn("features_raw", array_to_vector(F.col(vec_col).cast("array<double>")))
-        return Normalizer(inputCol="features_raw", outputCol="features", p=2.0).transform(v)
-
-    pa, pb = prep(a), prep(b)
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features", outputCol="hashes",
-        bucketLength=bucket_length, numHashTables=num_hash_tables, seed=seed,
-    ).fit(pa)
-    joined = lsh.approxSimilarityJoin(pa, pb, threshold_distance, distCol="dist")
-    return joined.select(
-        F.col(f"datasetA.{key_col}").alias("id_a"),
-        F.col(f"datasetB.{key_col}").alias("id_b"),
-        F.round(1.0 - F.col("dist") * F.col("dist") / 2.0, 6).alias("cosine"),
-    ).filter(F.col("id_a") < F.col("id_b"))
 
 
 def lsh_knn(

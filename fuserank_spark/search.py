@@ -11,6 +11,11 @@ Batch of queries: broadcast the query table, crossJoin-score, then
 TWO-PHASE top-k — a per-(query, corpus-partition) local heap first,
 then a global top-k over the k·P survivors — so the big shuffle moves
 O(k·P·Q) rows, not O(N·Q) (SURVEY T1 batch note).
+
+The Arrow scan (``_arrow_partial_topk``: one numpy matmul plus a
+partition-local top-k per Arrow batch) serves only query batches and
+the single-query in-scan IVF assign; a lone query pays less for the
+JVM heap than for the scan's Python stage.
 """
 
 from __future__ import annotations
@@ -35,7 +40,10 @@ def dot_expr(vec_col: Column | str, other: Column | str) -> Column:
 
 
 def lit_vector(vec: np.ndarray) -> Column:
-    return F.array(*[F.lit(float(x)) for x in np.asarray(vec, dtype="float64")])
+    """A float vector as ONE ``array<double>`` literal, with no
+    per-element ``Column`` and no ``CreateArray`` for Catalyst to fold
+    back into that same literal."""
+    return F.lit(np.ascontiguousarray(vec, dtype="float64"))
 
 
 def l2_norm_expr(vec_col: Column | str) -> Column:
@@ -62,7 +70,6 @@ def topk(
     score_col: str = "relevance",
     predicate: Column | None = None,
     tiebreak_col: str | None = None,
-    use_arrow: bool | None = None,
     score_round: int | None = None,
     assign_filter: tuple | None = None,
 ) -> DataFrame:
@@ -70,72 +77,65 @@ def topk(
     faiss.IndexFlatIP.search, src/app.py:78). Optional hard predicate
     = the exact/oracle arm (pre-filter, pushed to the scan).
 
-    Two scoring strategies:
-      * expression dot (JVM higher-order fns) — element-at-a-time;
-        right for small corpora and for oracle-matched paths where
-        the fold order must equal DuckDB's;
-      * Arrow scan (default for ≥100-dim vectors) — per-partition
-        numpy matmul + partial top-k inside mapInArrow, the
-        distributed equivalent of a FAISS flat-shard scan; ~50×
-        faster at 500k×200 dims.
+    Scores in the JVM: the expression dot against one literal query
+    vector, then orderBy + limit, which Catalyst plans as ONE
+    TakeOrderedAndProject job (per-partition bounded heap + final
+    merge) with no Python stage. It measured faster than an Arrow scan
+    plus join-back at every size from 5k to 500k fused rows (PARITY.md
+    T1). Output: the frame's columns followed by ``score_col`` (with
+    ``assign_filter``, row_id comes first: the hits join back on it).
+    A NULL row, a NULL element or a vector of another width than the
+    query raises on both routes, naming ``vector_col``.
 
-    Ties break deterministically on the key column (row_id when
-    present) so results are stable across partition scan orders.
-    The Arrow path joins hits back by that key — it must be UNIQUE
-    (the engine's row_id contract, §1.4); a non-unique tiebreak
-    column falls back to the expression path.
+    Ties break deterministically on ``tiebreak_col`` (default row_id
+    when present) so results are stable across partition scan orders.
 
-    ``score_round`` rounds the score at the FINAL ordering (the
+    ``score_round`` rounds the score at the final ordering (the
     round-before-rank doctrine: scores that are equal in real
     arithmetic but differ by fold-order ulps must tie before the
-    row_id tie-break, or the k boundary is a coin flip — the geo
-    mirror-point case, tests/test_eval_harness.py). It applies on
-    BOTH paths: the Arrow path's per-partition heaps pre-select on
-    the rounded score too (ADVICE r7 — otherwise an ulp-tied pair
-    co-located in one partition and straddling its k-deep heap was
-    still ordered by fold-order noise).
+    key tie-break, or the k boundary is a coin flip — the geo
+    mirror-point case, tests/test_eval_harness.py).
 
     ``assign_filter=(centroids, probed_cells, metric, assign_round)``
-    (r12): IVF cell assignment + probe pruning fused INTO the Arrow
+    (r12): IVF cell assignment + probe pruning fused INTO an Arrow
     scan — per batch one (n×d)·(d×C) matmul assigns every row to its
     cell (argmin of the rounded distance/negated-IP, first-index =
     lowest-cid tie-break, exactly simsearch.ivf_assign's struct-min)
     and non-probed rows are dropped before scoring. This replaces the
     former assigned-frame serve shape, where the per-centroid HOF
     aggregates (interpreted, C·d literal-array ops per row) were
-    evaluated TWICE per query — once under the probe filter feeding
-    the scan and again on the join-back arm — and the C×d literal
-    matrix bloated every plan. Arrow-path only (the caller's vectors
-    are ≥100-dim wherever IVF serves); raises on the expression path."""
+    evaluated TWICE per query and the C×d literal matrix bloated
+    every plan. The scan's per-partition heap pre-selects on the
+    rounded score too (ADVICE r7/r8), and its hits join back on the
+    key, so it needs a UNIQUE row_id tie-break (the engine's row_id
+    contract, §1.4) and raises otherwise."""
     if predicate is not None:
         df = df.filter(predicate)
-    if use_arrow is None:
-        use_arrow = len(query_vector) >= 100
-    if tiebreak_col is not None and tiebreak_col != "row_id":
-        use_arrow = False  # uniqueness unknown → safe path
     tb = tiebreak_col or ("row_id" if "row_id" in df.columns else None)
-    if assign_filter is not None and not (use_arrow and tb is not None):
-        raise ValueError(
-            "assign_filter needs the Arrow top-k path (a unique row_id "
-            "tie-break and a >=100-dim query); assign via "
-            "simsearch.ivf_assign + a predicate instead"
-        )
-
-    def _ord(score: Column) -> Column:
-        return F.desc(F.round(score, score_round)) if score_round is not None else F.desc(score)
-
-    if use_arrow and tb is not None:
-        hits = _arrow_partial_topk(
-            df, np.asarray([query_vector], dtype="float64"), [0], k, vector_col, tb, score_col,
-            score_round=score_round, assign_filter=assign_filter,
-        ).drop("query_id")
-        out = df.join(hits, tb)
-        return out.orderBy(_ord(F.col(score_col)), F.col(tb)).limit(k)
-    scored = df.withColumn(score_col, dot_expr(vector_col, lit_vector(query_vector)))
-    order = [_ord(F.col(score_col))]
+    score = F.col(score_col)
+    order = [F.desc(F.round(score, score_round) if score_round is not None else score)]
     if tb is not None:
         order.append(F.col(tb))
-    return scored.orderBy(*order).limit(k)
+    if assign_filter is None:
+        # zip_with pads a short side with NULL, so a NULL row, a NULL
+        # element or a wrong width scores NULL: raise, as the scan does
+        bad = (
+            f"topk: column {vector_col!r} has a NULL row, a NULL element "
+            f"or a width other than {len(query_vector)}"
+        )
+        dot = F.coalesce(dot_expr(vector_col, lit_vector(query_vector)), F.raise_error(F.lit(bad)))
+        return df.withColumn(score_col, dot).orderBy(*order).limit(k)
+    if tb != "row_id":
+        raise ValueError(
+            "assign_filter runs the Arrow scan, which joins hits back on a "
+            "unique row_id tie-break; assign via simsearch.ivf_assign + a "
+            "predicate instead"
+        )
+    hits = _arrow_partial_topk(
+        df, np.asarray([query_vector], dtype="float64"), [0], k, vector_col, tb, score_col,
+        score_round=score_round, assign_filter=assign_filter,
+    ).drop("query_id")
+    return df.join(hits, tb).orderBy(*order).limit(k)
 
 
 def _arrow_partial_topk(
@@ -231,14 +231,13 @@ def text_topk_then_rerank(
     vector; the re-rank is a k-row window computation."""
     from .rerank import rerank
 
-    text_vec = compiled_query.vector[:text_dim]
-    scored = encoded.withColumn(
-        "relevance", dot_expr(F.slice(vector_col, 1, text_dim), lit_vector(text_vec))
-    )
-    order = [F.desc("relevance")]
-    if "row_id" in encoded.columns:
-        order.append(F.col("row_id"))
-    result = scored.orderBy(*order).limit(k)
+    text_col = "__text_vec"
+    result = topk(
+        encoded.withColumn(text_col, F.slice(vector_col, 1, text_dim)),
+        compiled_query.vector[:text_dim],
+        k=k,
+        vector_col=text_col,
+    ).drop(text_col)
     result = rerank(
         result,
         compiled_query.aux_data,

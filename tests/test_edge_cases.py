@@ -188,8 +188,16 @@ def test_transform_expr_null_passthrough(spark):
     assert by_id[2][0] == 2.0
 
 
+def _arrow_scan(dim: int) -> tuple:
+    """An assign_filter that puts every row in cell 0 and probes it:
+    topk then runs its full Arrow scan (the heap these tests pin)."""
+    import numpy as np
+
+    return (np.zeros((1, dim)), [0], "ip", 6)
+
+
 def test_arrow_topk_heap_rounds_before_rank(spark):
-    """ADVICE r7: the Arrow path's per-partition heap must pre-select
+    """ADVICE r7: the Arrow scan's per-partition heap must pre-select
     on the ROUNDED score. Two rows in ONE partition, scores differing
     by an ulp-scale 1e-12 but round@9-equal, the raw-higher score on
     the LARGER row_id, k=1: the heap cut is the k boundary. Without
@@ -198,7 +206,8 @@ def test_arrow_topk_heap_rounds_before_rank(spark):
     row_id and the smaller id wins — matching the expression path."""
     from fuserank_spark.search import topk
 
-    dim = 128  # ≥100 so the auto heuristic also picks Arrow
+    dim = 128
+    scan = _arrow_scan(dim)
     q = [1.0] + [0.0] * (dim - 1)
     a = [0.5] + [0.0] * (dim - 1)
     b = [0.5 + 1e-12] + [0.0] * (dim - 1)
@@ -208,12 +217,13 @@ def test_arrow_topk_heap_rounds_before_rank(spark):
     import numpy as np
 
     qv = np.asarray(q)
-    got_arrow = topk(df, qv, k=1, use_arrow=True, score_round=9).collect()
-    got_expr = topk(df, qv, k=1, use_arrow=False, score_round=9).collect()
+    got_arrow = topk(df, qv, k=1, score_round=9, assign_filter=scan).collect()
+    got_expr = topk(df, qv, k=1, score_round=9).collect()
     assert [r["row_id"] for r in got_arrow] == [1]
     assert [r["row_id"] for r in got_expr] == [1]
     # and WITHOUT rounding both paths agree on the raw winner
-    assert [r["row_id"] for r in topk(df, qv, k=1, use_arrow=True).collect()] == [2]
+    assert [r["row_id"] for r in topk(df, qv, k=1, assign_filter=scan).collect()] == [2]
+    assert [r["row_id"] for r in topk(df, qv, k=1).collect()] == [2]
 
 
 def test_arrow_topk_heap_negative_midpoint_sign_aware(spark):
@@ -227,7 +237,8 @@ def test_arrow_topk_heap_negative_midpoint_sign_aware(spark):
 
     from fuserank_spark.search import topk
 
-    dim = 128  # ≥100 so the auto heuristic also picks Arrow
+    dim = 128
+    scan = _arrow_scan(dim)
     q = [1.0] + [0.0] * (dim - 1)
     a = [-1.0] + [0.0] * (dim - 1)
     b = [-0.5] + [0.0] * (dim - 1)
@@ -235,12 +246,30 @@ def test_arrow_topk_heap_negative_midpoint_sign_aware(spark):
         [(1, a), (2, b)], "row_id bigint, vector array<double>"
     ).coalesce(1)
     qv = np.asarray(q)
-    got_arrow = topk(df, qv, k=1, use_arrow=True, score_round=0).collect()
-    got_expr = topk(df, qv, k=1, use_arrow=False, score_round=0).collect()
+    got_arrow = topk(df, qv, k=1, score_round=0, assign_filter=scan).collect()
+    got_expr = topk(df, qv, k=1, score_round=0).collect()
     assert [r["row_id"] for r in got_arrow] == [1]
     assert [r["row_id"] for r in got_expr] == [1]
     # unrounded, the raw-higher score (−0.5, row 2) wins on both paths
-    assert [r["row_id"] for r in topk(df, qv, k=1, use_arrow=True).collect()] == [2]
+    assert [r["row_id"] for r in topk(df, qv, k=1, assign_filter=scan).collect()] == [2]
+    assert [r["row_id"] for r in topk(df, qv, k=1).collect()] == [2]
+
+
+def test_topk_non_row_id_tiebreak(spark):
+    """tiebreak_col orders tied scores by that column, not by row_id:
+    three rows tie, and their doc_id order is the reverse of their
+    row_id order."""
+    import numpy as np
+
+    from fuserank_spark.search import topk
+
+    df = spark.createDataFrame(
+        [(1, 30, [1.0, 0.0]), (2, 20, [1.0, 0.0]), (3, 10, [1.0, 0.0]), (4, 40, [2.0, 0.0])],
+        "row_id bigint, doc_id bigint, vector array<double>",
+    ).repartition(3)
+    got = topk(df, np.array([1.0, 0.0]), k=3, tiebreak_col="doc_id").collect()
+    assert [(r["doc_id"], r["relevance"]) for r in got] == [(40, 2.0), (10, 1.0), (20, 1.0)]
+    assert [r["row_id"] for r in topk(df, np.array([1.0, 0.0]), k=3).collect()] == [4, 1, 2]
 
 
 @pytest.mark.parametrize(

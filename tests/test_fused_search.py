@@ -700,8 +700,8 @@ def test_fused_ivf_arrow_assign_matches_expression(corpus):
 
 def test_topk_assign_filter_l2_and_guards(corpus):
     """assign_filter 'l2' matches the expression assignment too, and
-    the non-Arrow path refuses the option instead of silently
-    ignoring it."""
+    a tie-break other than row_id refuses the option (the Arrow scan
+    joins its hits back on row_id) instead of silently ignoring it."""
     import pytest as _pytest
 
     from fuserank_spark.flagship import _head_centroids
@@ -725,6 +725,6 @@ def test_topk_assign_filter_l2_and_guards(corpus):
     assert [r["row_id"] for r in new] == [r["row_id"] for r in old]
     with _pytest.raises(ValueError, match="Arrow"):
         topk(
-            corpus.encoded, cq.vector, k=10, use_arrow=False,
+            corpus.encoded, cq.vector, k=10, tiebreak_col="doc_id",
             assign_filter=(cents, probed, "ip", 6),
         )

@@ -27,7 +27,9 @@ BAD_VECTORS = {
 def _topk(df):
     from fuserank_spark.search import topk
 
-    return topk(df, np.eye(DIM)[0], k=2, vector_col="emb", use_arrow=True)
+    # every row lands in the one probed cell: the full Arrow scan
+    scan = (np.zeros((1, DIM)), [0], "ip", 6)
+    return topk(df, np.eye(DIM)[0], k=2, vector_col="emb", assign_filter=scan)
 
 
 def _topk_batch(df):
@@ -74,6 +76,24 @@ def test_arrow_kernels_reject_bad_vectors(spark, kernel, case):
         KERNELS[kernel](df).collect()
 
 
+# the expression route reads no fixed width, so a long row is checked too
+TOPK_BAD_VECTORS = {**BAD_VECTORS, "long_width": [1.0, 0.0, 0.0, 0.0, 0.0]}
+
+
+@pytest.mark.parametrize("case", sorted(TOPK_BAD_VECTORS))
+def test_topk_default_route_rejects_bad_vectors(spark, case):
+    """The default single-query route scores in the JVM, where zip_with
+    pads a short side with NULL: a bad row must still raise naming the
+    column, not score NULL and drop out of the ranking."""
+    from fuserank_spark.search import topk
+
+    df = spark.createDataFrame(
+        [(0, [0.0, 1.0, 0.0, 0.0]), (1, TOPK_BAD_VECTORS[case])], "row_id bigint, emb array<double>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match=r"topk: column 'emb'"):
+        topk(df, np.eye(DIM)[0], k=2, vector_col="emb").collect()
+
+
 def test_round_half_away_matches_scalar_formula():
     """The array form is bit-identical to the scalar half-away
     formula, including negative midpoints, and works on scalars."""
@@ -106,14 +126,15 @@ def test_partition_topk_folds_small_batches(spark):
         [(int(r["row_id"]), [float(x) for x in r["vector"]]) for r in qrows],
         "query_id bigint, qvec array<double>",
     )
+    scan = (np.zeros((1, len(qrows[0]["vector"]))), [0], "ip", 6)  # full Arrow scan
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
         for r in qrows:
             qv = np.asarray(r["vector"], dtype="float64")
-            got = topk(emb, qv, k=10, use_arrow=True, score_round=6).collect()
-            want = topk(emb, qv, k=10, use_arrow=False, score_round=6).collect()
+            got = topk(emb, qv, k=10, score_round=6, assign_filter=scan).collect()
+            want = topk(emb, qv, k=10, score_round=6).collect()
             assert [x["row_id"] for x in got] == [x["row_id"] for x in want]
         rank = ["query_id", F.desc("relevance"), "row_id"]
         got = topk_batch(emb, queries, k=10).orderBy(*rank).collect()

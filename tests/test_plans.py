@@ -73,29 +73,48 @@ def test_dense_encode_expr_is_jvm_side(spark):
 
 
 def test_fused_search_single_pass(spark):
-    """Fused top-k, expression strategy: one scan, no join, no global
-    sort — TakeOrderedAndProject on the scored scan."""
+    """Fused single-query top-k: one scan, no join, no global sort, no
+    Python stage — TakeOrderedAndProject on the scored scan."""
     from fuserank_spark.flagship import build_corpus, flagship_compiled
     from fuserank_spark.search import topk
 
     corpus = build_corpus(spark, SF_SMOKE)
     cq = flagship_compiled(corpus)
-    p = plan_str(topk(corpus.encoded, cq.vector, k=10, use_arrow=False))
+    p = plan_str(topk(corpus.encoded, cq.vector, k=10))
     assert "TakeOrderedAndProject" in p
     assert "SortMergeJoin" not in p and "BroadcastHashJoin" not in p
+    assert "MapInArrow" not in p
+
+
+def test_topk_query_is_one_literal(spark):
+    """The query vector enters the plan as ONE array literal, not a
+    CreateArray over one literal Column per element."""
+    import numpy as np
+
+    from fuserank_spark.search import topk
+
+    df = spark.createDataFrame([(1, [1.0, 2.0, 3.0])], "row_id bigint, vector array<double>")
+    out = topk(df, np.array([0.25, 0.5, 0.75]), k=1)
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert "array(" not in analyzed, analyzed
+    assert out.collect()[0]["relevance"] == 3.5
 
 
 def test_fused_search_arrow_scan(spark):
-    """Fused top-k, Arrow strategy: the corpus flows through ONE
-    mapInPandas scan (numpy matmul + partial top-k); only k-row hits
-    are joined back — the corpus itself is never sorted or shuffled."""
+    """Fused top-k under an in-scan IVF assign: the corpus flows
+    through ONE Arrow scan (numpy matmul + partial top-k); only k-row
+    hits are joined back — the corpus itself is never sorted or
+    shuffled. One cell holding every row makes it a full scan."""
+    import numpy as np
+
     from fuserank_spark.flagship import build_corpus, flagship_compiled
     from fuserank_spark.search import topk
 
     corpus = build_corpus(spark, SF_SMOKE)
     cq = flagship_compiled(corpus)
-    p = plan_str(topk(corpus.encoded, cq.vector, k=10, use_arrow=True))
-    assert "MapInPandas" in p
+    scan = (np.zeros((1, len(cq.vector))), [0], "ip", 6)
+    p = plan_str(topk(corpus.encoded, cq.vector, k=10, assign_filter=scan))
+    assert "MapInArrow" in p
     assert "Exchange rangepartitioning" not in p  # no corpus-wide sort
 
 
@@ -246,21 +265,6 @@ def test_knn_merges_are_two_phase(spark):
         assert "pmod" in p and "xxhash64" in p
 
 
-def test_brute_force_arrow_path_is_maparrow(spark):
-    """use_arrow=True: scoring happens inside the Arrow scan
-    (MapInArrow since r10 — flat-buffer vector reads, no pandas
-    object-list stack), the corpus never crossJoin-shuffles."""
-    from fuserank_spark.pipeline_ext.simsearch import brute_force_knn
-
-    e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    p = plan_str(brute_force_knn(e, q, k=5, use_arrow=True))
-    assert "MapInArrow" in p or "PythonMapInArrow" in p
-    assert "CartesianProduct" not in p
-
-
 def test_pack_split_never_single_partition_window(spark):
     """The offset cumsum must run per hash-bucket — an empty
     partitionBy window would plan Exchange SinglePartition and put
@@ -325,7 +329,7 @@ def test_fused_ivf_assignment_narrow_and_isin_prunes(spark):
     assigned, cq, probed = fused_ivf_parts(corpus, 3)
     hits = topk(
         assigned, cq.vector, k=10,
-        predicate=F.col("centroid_id").isin(probed), use_arrow=False,
+        predicate=F.col("centroid_id").isin(probed),
     )
     plan = hits._jdf.queryExecution().optimizedPlan().toString()
     assert "centroid_id" in plan and " IN (" in plan.replace("IN (", " IN (")

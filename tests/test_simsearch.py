@@ -1,5 +1,5 @@
-"""ANN scale paths: IVF (k-means cells + nprobe) and Spark ML LSH
-similarity join, measured against the exact brute-force baseline."""
+"""ANN scale paths: IVF (k-means cells + nprobe) and LSH, measured
+against the exact brute-force baseline."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from fuserank_spark.pipeline_ext.simsearch import (
     ivf_build,
     ivf_knn,
     lsh_knn,
-    ml_cosine_similarity_join,
 )
 
 from tests.conftest import SF_SMOKE
@@ -94,23 +93,6 @@ def test_ivf_nprobe_monotone(emb, queries, exact):
     assert mean_recall(8) >= 0.99  # all cells probed == exact
 
 
-def test_ml_similarity_join_finds_top_pairs(spark, emb):
-    """The ML LSH join recovers the strongest cosine pairs the exact
-    near-dup scan finds."""
-    from fuserank_spark.pipeline_ext.dedup import embedding_neardup_pairs
-
-    exact_pairs = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_neardup_pairs(emb, threshold=0.45, max_id=500).collect()
-    }
-    if not exact_pairs:
-        pytest.skip("no strong pairs at this SF")
-    approx = ml_cosine_similarity_join(emb, emb, dim=64, threshold_distance=1.1)
-    got_pairs = {(r["id_a"], r["id_b"]) for r in approx.collect()}
-    hit = len(exact_pairs & got_pairs) / len(exact_pairs)
-    assert hit >= 0.5, (len(exact_pairs), len(got_pairs), hit)
-
-
 def test_ivf_assign_matches_kmeans_transform(emb):
     """ivf_assign (expression-only argmin, the serve path under the
     q_ivf_knn oracle) must agree row-for-row with pyspark.ml KMeans
@@ -126,23 +108,6 @@ def test_ivf_assign_matches_kmeans_transform(emb):
         for r in ivf_assign(emb, centroids).select("vec_id", "centroid_id").collect()
     }
     assert ml == ex
-
-
-def test_brute_force_arrow_matches_expression(emb, queries):
-    """The Arrow scan path (normalized matmul + k·P·Q survivor
-    shuffle) returns the same ranked top-k as the expression path
-    that the DuckDB oracle checks."""
-    expr = brute_force_knn(emb, queries, k=10).orderBy("query_id", "rnk").collect()
-    arrow = (
-        brute_force_knn(emb, queries, k=10, use_arrow=True)
-        .orderBy("query_id", "rnk")
-        .collect()
-    )
-    assert [(r["query_id"], r["vec_id"], r["rnk"]) for r in expr] == [
-        (r["query_id"], r["vec_id"], r["rnk"]) for r in arrow
-    ]
-    for a, b in zip(expr, arrow):
-        assert abs(a["cosine"] - b["cosine"]) < 1e-6
 
 
 def test_ivf_assign_arrow_matches_expression(emb):
