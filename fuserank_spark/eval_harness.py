@@ -30,7 +30,7 @@ from .encode import CorpusStats, VectorLayout, compute_stats, encode_products, r
 from .flagship import EMB_DIM
 from .metrics import r_precision, recall
 from .query import compile_query
-from .search import dot_expr, lit_vector, topk
+from .search import topk
 
 EVAL_AUX_SCHEMA = {
     "lang": S.SPARSE,
@@ -200,17 +200,14 @@ def evaluate_fused_vs_exact(
                 r["row_id"]
                 for r in topk(corpus.encoded, cq.vector, k=k).select("row_id").collect()
             ]
-            text_score = dot_expr(F.slice("vector", 1, EMB_DIM), lit_vector(cq.vector[:EMB_DIM]))
-            oracle_df = corpus.encoded
-            if cq.predicate is not None:
-                oracle_df = oracle_df.filter(cq.predicate)
+            # exact arm: text-only top-k under the hard predicate
             oracle = [
                 r["row_id"]
-                for r in oracle_df.withColumn("ts", text_score)
-                .orderBy(F.desc("ts"), "row_id")
-                .limit(k)
-                .select("row_id")
-                .collect()
+                for r in topk(
+                    corpus.encoded.withColumn("__text_vec", F.slice("vector", 1, EMB_DIM)),
+                    cq.vector[:EMB_DIM], k=k, vector_col="__text_vec",
+                    predicate=cq.predicate, tiebreak_col="row_id",
+                ).select("row_id").collect()
             ]
             return {
                 "num_harmonics": K,

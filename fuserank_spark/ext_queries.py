@@ -4,9 +4,10 @@ Spark implementation calls the library operator; the oracle SQL
 re-derives the same math in DuckDB (portable md5-based hashing makes
 the two engines bit-compatible).
 
-Non-SQL-expressible operators (LSH ANN probing, multimodal decode,
-fused vector search) register without an oracle → the driver records
-the weaker rows-only check.
+The ANN-family oracles (kNN, LSH, IVF, PQ, IVF-PQ, fused, hybrid) are
+composed from the ``_sql_*`` builders below. An entry registered
+without an oracle (q_restaurants_fused) gets the driver's weaker
+rows-only check.
 """
 
 from __future__ import annotations
@@ -22,11 +23,110 @@ from .pipeline_ext import dedup as D
 from .pipeline_ext import multimodal as M
 from .pipeline_ext import simsearch as SS
 from .pipeline_ext import textstats as TX
-from .pipeline_ext.hashing import HASH_PRIME, MINHASH_PERMS, portable_hash32_sql
+from .pipeline_ext.hashing import MINHASH_PERMS, minhash_perm_sql, portable_hash32_sql
 from .queries import register
 from .session import persisted, session_cached
 
 _H = portable_hash32_sql("{expr}")  # template form; .format(expr=...) fills the column
+
+# ------------------------------------------------------ SQL-twin builders
+# The ANN-family oracles are composed from these five builders, each the
+# DuckDB twin of one engine kernel. The CTE builders read fixed CTE
+# names from their caller: ``e`` (vec_id + vector rows) and ``q``
+# (query_id, qe, qn).
+
+
+def _sql_dot(a: str, b: str, dim) -> str:
+    """Dot product of the list expressions ``a`` and ``b`` over their
+    first ``dim`` elements (an int or a SQL length expression), in
+    DOUBLE and folded left to right — the twin of search.dot_expr."""
+    return (
+        f"list_sum(list_transform(range(1, {dim} + 1),"
+        f" i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
+    )
+
+
+def _sql_assign(vec: str, dim: int, n_cent: int) -> str:
+    """CTEs ``cent`` — the first ``n_cent`` rows of ``e`` frozen as
+    centroids (cid, cvec, csq) — and ``cells`` — every row of ``e``
+    plus its ``cid``: the l2 argmin of round(csq − 2⟨x,c⟩, 6), the
+    lowest cid on ties. The twin of kernels.assign_cells and
+    simsearch.ivf_assign(score_round=6)."""
+    return f"""cent AS (
+      SELECT CAST(vec_id AS INT) AS cid, {vec} AS cvec, {_sql_dot(vec, vec, dim)} AS csq
+      FROM e WHERE vec_id < {n_cent}
+    ), cells AS (
+      SELECT e.*, c.cid FROM e CROSS JOIN cent c
+      QUALIFY row_number() OVER (
+        PARTITION BY e.vec_id
+        ORDER BY round(c.csq - 2 * {_sql_dot("e." + vec, "c.cvec", dim)}, 6), c.cid) = 1
+    )"""
+
+
+def _sql_probe(dim: int, nprobe: int) -> str:
+    """CTE ``probed``: every row of ``q`` once per probed cell ``cid`` —
+    its ``nprobe`` centroids of ``cent`` with the highest cosine
+    rounded to 6, the lowest cid on ties. The twin of
+    kernels.probe_cells."""
+    return f"""probed AS (
+      SELECT q.*, c.cid FROM q CROSS JOIN cent c
+      QUALIFY row_number() OVER (
+        PARTITION BY q.query_id
+        ORDER BY round({_sql_dot("q.qe", "c.cvec", dim)} / (sqrt(c.csq) * q.qn), 6) DESC,
+                 c.cid) <= {nprobe}
+    )"""
+
+
+_PQ_M, _PQ_W, _PQ_K = 8, 8, 16  # 8 subspaces × 8 dims, 16 codes each
+
+
+def _sql_pq(cb: str = "cb0", lloyd: str = "") -> str:
+    """CTEs of PQ encode + ADC over ``e`` (vec_id, v DOUBLE[]):
+    ``esub`` (the _PQ_M subvectors of every row), ``cb0`` (the Forgy
+    codebooks: subvectors of the first _PQ_K rows), the caller's
+    ``lloyd`` CTEs (training; ``cb`` names the codebook CTE to encode
+    with), ``codes`` (per subvector the UNROUNDED l2 argmin code,
+    lowest code on ties — quantization.pq_encode's struct-min), and
+    ``scored`` (query_id, vec_id, adc) for the queries vec_id < 3.
+
+    Distances fold in the same order as the Spark expressions, so the
+    discrete code argmin is bit-identical. The per-(query, row) ADC
+    is a GROUP BY sum over the m parts — order-free up to ulps — so it
+    is rounded to 6 BEFORE any rank (the Spark side rounds identically
+    in pq_adc_topk) to share one tie-break domain."""
+    m, w = _PQ_M, _PQ_W
+    return f"""esub AS (
+      SELECT e.vec_id, t.j,
+             list_transform(range(t.j*{w}+1, t.j*{w}+{w}+1), i -> e.v[i]) AS sv
+      FROM e CROSS JOIN generate_series(0, {m - 1}) t(j)
+    ), cb0 AS (
+      SELECT CAST(vec_id AS INT) AS code, j, sv AS cvec FROM esub WHERE vec_id < {_PQ_K}
+    ){lloyd}, cbq AS (
+      SELECT code, j, cvec, {_sql_dot("cvec", "cvec", w)} AS csq FROM {cb}
+    ), codes AS (
+      SELECT s.vec_id, s.j, b.code FROM esub s JOIN cbq b ON s.j = b.j
+      QUALIFY row_number() OVER (
+        PARTITION BY s.vec_id, s.j
+        ORDER BY b.csq - 2 * {_sql_dot("s.sv", "b.cvec", w)}, b.code) = 1
+    ), lut AS (
+      SELECT s.vec_id AS query_id, s.j, b.code, {_sql_dot("s.sv", "b.cvec", w)} AS part
+      FROM esub s JOIN cbq b ON s.j = b.j WHERE s.vec_id < 3
+    ), scored AS (
+      SELECT l.query_id, c.vec_id, round(sum(l.part), 6) AS adc
+      FROM codes c JOIN lut l ON c.j = l.j AND c.code = l.code
+      GROUP BY l.query_id, c.vec_id
+    )"""
+
+
+def _sql_rank(src: str, score: str, k: int, key: str = "vec_id") -> str:
+    """SELECT of each query's top ``k`` rows of ``src`` (query_id,
+    ``key``, ``score``): row_number by ``score`` DESC with ``key``
+    ascending on ties, the score rounded to 6 — the twin of
+    simsearch._merge_topk's cutoff."""
+    return f"""SELECT query_id, {key},
+           row_number() OVER (PARTITION BY query_id ORDER BY {score} DESC, {key}) AS rnk,
+           round({score}, 6) AS {score}
+    FROM {src} QUALIFY rnk <= {k} ORDER BY query_id, rnk"""
 
 
 
@@ -154,21 +254,24 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------- minhash sig
-def _minhash_oracle() -> str:
+def _minhash_sig_sql(src: str) -> str:
+    """SELECT of doc_id and the MinHash signature mh0..mh7 over the
+    distinct 5-char shingles of ``src``'s text (the twin of
+    dedup.minhash_signature)."""
     h = _H.format(expr="s")
-    perm_exprs = ", ".join(
-        f"list_min(list_transform(sh, s -> (({a} * {h} + {b}) % {HASH_PRIME}))) AS mh{j}"
+    perms = ", ".join(
+        f"list_min(list_transform(sh, s -> {minhash_perm_sql(h, a, b)})) AS mh{j}"
         for j, (a, b) in enumerate(MINHASH_PERMS)
     )
-    return f"""
-    WITH sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(generate_series(1, length(text) - 4),
-                                          i -> substring(text, i, 5))) AS sh
-      FROM documents WHERE doc_id < 100
-    )
-    SELECT doc_id, {perm_exprs} FROM sh ORDER BY doc_id
-    """
+    return f"""SELECT doc_id, {perms}
+      FROM (SELECT doc_id,
+                   list_distinct(list_transform(generate_series(1, length(text) - 4),
+                                                i -> substring(text, i, 5))) AS sh
+            FROM {src})"""
+
+
+def _minhash_oracle() -> str:
+    return f"{_minhash_sig_sql('documents WHERE doc_id < 100')} ORDER BY doc_id"
 
 
 @register("q_minhash", _minhash_oracle())
@@ -179,11 +282,6 @@ def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------- LSH pairs
 def _lsh_pairs_oracle() -> str:
-    h = _H.format(expr="s")
-    perm_exprs = ", ".join(
-        f"list_min(list_transform(sh, s -> (({a} * {h} + {b}) % {HASH_PRIME}))) AS mh{j}"
-        for j, (a, b) in enumerate(MINHASH_PERMS)
-    )
     bands = "\nUNION ALL\n".join(
         "SELECT doc_id, {b} AS band_idx, md5(concat({parts})) AS band_hash FROM sig".format(
             b=b,
@@ -194,13 +292,7 @@ def _lsh_pairs_oracle() -> str:
     eq_sum = " + ".join(f"CAST(a.mh{j} = b.mh{j} AS INT)" for j in range(8))
     return f"""
     WITH d AS ({_DUPS_SQL}),
-    sig AS (
-      SELECT doc_id, {perm_exprs}
-      FROM (SELECT doc_id,
-                   list_distinct(list_transform(generate_series(1, length(text) - 4),
-                                                i -> substring(text, i, 5))) AS sh
-            FROM d)
-    ),
+    sig AS ({_minhash_sig_sql("d")}),
     banded AS ({bands}),
     pairs AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -289,19 +381,16 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------- embedding near-dup
-_NEARDUP_ORACLE = """
+_NEARDUP_ORACLE = f"""
     WITH e AS (
       SELECT vec_id, embedding,
              sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS nrm
       FROM embeddings WHERE vec_id < 300
     )
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_sum(list_transform(range(1, 65),
-                   i -> CAST(a.embedding[i] AS DOUBLE) * b.embedding[i]))
-                 / (a.nrm * b.nrm), 6) AS cosine
+           round({_sql_dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.nrm), 6) AS cosine
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE list_sum(list_transform(range(1, 65),
-            i -> CAST(a.embedding[i] AS DOUBLE) * b.embedding[i])) / (a.nrm * b.nrm) >= 0.35
+    WHERE {_sql_dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.nrm) >= 0.35
     ORDER BY id_a, id_b
 """
 
@@ -325,12 +414,8 @@ def _bucket_sql(dim: int, n_planes: int, seed: int, vec_expr: str = "embedding")
     planes = hyperplanes(dim, n_planes, seed)
     bits = []
     for j in range(n_planes):
-        lits = "[" + ",".join(repr(float(x)) for x in planes[j]) + "]"
-        bits.append(
-            f"CASE WHEN list_sum(list_transform(range(1,{dim + 1}),"
-            f" i -> CAST({vec_expr}[i] AS DOUBLE) * ({lits})[i])) >= 0"
-            f" THEN {1 << j} ELSE 0 END"
-        )
+        lits = "([" + ",".join(repr(float(x)) for x in planes[j]) + "])"
+        bits.append(f"CASE WHEN {_sql_dot(vec_expr, lits, dim)} >= 0 THEN {1 << j} ELSE 0 END")
     return " + ".join(bits)
 
 
@@ -348,10 +433,7 @@ def _neardup_lsh_oracle(dim: int = 64, n_planes: int = 6, n_tables: int = 2) -> 
             f" {_bucket_sql(dim, n_planes, 42 + t)} AS bucket FROM e"
         )
     union = "\n      UNION ALL\n      ".join(per_table)
-    dot = (
-        f"list_sum(list_transform(range(1,{dim + 1}),"
-        " i -> CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE)))"
-    )
+    dot = _sql_dot("ea.embedding", "eb.embedding", dim)
     return f"""
     WITH e AS (
       SELECT vec_id, embedding,
@@ -388,24 +470,19 @@ def q_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------- exact knn
-_KNN_ORACLE = """
+_KNN_ORACLE = f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding AS qe,
              sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS qn
       FROM embeddings WHERE vec_id < 3
     ), scored AS (
       SELECT q.query_id, e.vec_id,
-             list_sum(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * q.qe[i]))
+             {_sql_dot("e.embedding", "q.qe", 64)}
                / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x))) * q.qn)
                AS cosine
       FROM embeddings e, q
     )
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rnk,
-           round(cosine, 6) AS cosine
-    FROM scored
-    QUALIFY rnk <= 10
-    ORDER BY query_id, rnk
+    {_sql_rank("scored", "cosine", 10)}
 """
 
 
@@ -770,6 +847,7 @@ def _fused_text_oracle() -> str:
     sel = ", ".join(f"'{v}'" for v in _FUSED_LANG_SELECTION)
     d = _FUSED_TEXT_DIM
     w = _FUSED_LANG_WEIGHT
+    dot = _sql_dot("vec", "qv", "len(vec)")
     return f"""
     WITH d AS (
       SELECT doc_id, coalesce(text, '') AS t, lang FROM documents WHERE doc_id < 300
@@ -806,12 +884,9 @@ def _fused_text_oracle() -> str:
              ) AS qv
       FROM vocab
     )
-    SELECT doc_id,
-           round(list_sum(list_transform(range(1, len(vec) + 1), i -> vec[i] * qv[i])), 6)
-             AS relevance
+    SELECT doc_id, round({dot}, 6) AS relevance
     FROM vecs, q
-    ORDER BY list_sum(list_transform(range(1, len(vec) + 1), i -> vec[i] * qv[i])) DESC,
-             doc_id
+    ORDER BY {dot} DESC, doc_id
     LIMIT 20
 """
 
@@ -867,10 +942,6 @@ def _lsh_knn_oracle(dim: int = 64, n_planes: int = 6, k: int = 10) -> str:
     xor, bucket equi-join, per-(query, vec) dedup, exact cosine
     rerank, row_number cutoff — the full ANN algorithm re-derived."""
     probe_list = ", ".join(["bucket"] + [f"xor(bucket, {1 << j})" for j in range(n_planes)])
-    dot = (
-        f"list_sum(list_transform(range(1,{dim + 1}),"
-        " i -> CAST(embedding[i] AS DOUBLE) * qe[i]))"
-    )
     return f"""
     WITH e AS (
       SELECT vec_id, embedding,
@@ -882,17 +953,12 @@ def _lsh_knn_oracle(dim: int = 64, n_planes: int = 6, k: int = 10) -> str:
              unnest([{probe_list}]) AS bucket
       FROM e WHERE vec_id < 3
     ), scored AS (
-      SELECT q.query_id, e.vec_id, max({dot} / (e.nrm * q.qn)) AS cosine
+      SELECT q.query_id, e.vec_id,
+             max({_sql_dot("e.embedding", "q.qe", dim)} / (e.nrm * q.qn)) AS cosine
       FROM e JOIN q ON e.bucket = q.bucket
       GROUP BY q.query_id, e.vec_id
-    ), ranked AS (
-      SELECT query_id, vec_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, vec_id) AS rnk
-      FROM scored
     )
-    SELECT query_id, vec_id, rnk, round(cosine, 6) AS cosine
-    FROM ranked WHERE rnk <= {k} ORDER BY query_id, rnk
+    {_sql_rank("scored", "cosine", k)}
 """
 
 
@@ -934,57 +1000,19 @@ def _ivf_serve_oracle(dim: int = 64, n_cent: int = 8, nprobe: int = 3, k: int = 
     selection by centroid cosine, in-cell exact cosine rerank,
     row_number cutoff. K-means *training* stays out (not
     SQL-expressible) — it is unit-tested and benched separately."""
-    dot_ec = (
-        f"list_sum(list_transform(range(1,{dim + 1}),"
-        " i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i]))"
-    )
-    dot_qc = (
-        f"list_sum(list_transform(range(1,{dim + 1}),"
-        " i -> CAST(q.qe[i] AS DOUBLE) * c.cvec[i]))"
-    )
-    dot_sq = (
-        f"list_sum(list_transform(range(1,{dim + 1}),"
-        " i -> CAST(s.embedding[i] AS DOUBLE) * p.qe[i]))"
-    )
     return f"""
     WITH e AS (
       SELECT vec_id, embedding,
              sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS nrm
       FROM embeddings
-    ), cent AS (
-      SELECT CAST(vec_id AS INT) AS cid,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec,
-             list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)) AS csq
-      FROM embeddings WHERE vec_id < {n_cent}
-    ), assigned AS (
-      SELECT e.vec_id, e.embedding, e.nrm, c.cid,
-             row_number() OVER (PARTITION BY e.vec_id
-                                ORDER BY round(c.csq - 2 * {dot_ec}, 6) ASC,
-                                         c.cid ASC) AS arn
-      FROM e CROSS JOIN cent c
-    ), cells AS (
-      SELECT vec_id, embedding, nrm, cid AS centroid_id FROM assigned WHERE arn = 1
-    ), q AS (
+    ), {_sql_assign("embedding", dim, n_cent)}, q AS (
       SELECT vec_id AS query_id, embedding AS qe, nrm AS qn FROM e WHERE vec_id < 3
-    ), probes AS (
-      SELECT q.query_id, q.qe, q.qn, c.cid,
-             row_number() OVER (PARTITION BY q.query_id
-                                ORDER BY round({dot_qc} / (sqrt(c.csq) * q.qn), 6) DESC,
-                                         c.cid ASC) AS prn
-      FROM q CROSS JOIN cent c
-    ), probed AS (
-      SELECT query_id, qe, qn, cid FROM probes WHERE prn <= {nprobe}
-    ), scored AS (
-      SELECT p.query_id, s.vec_id, {dot_sq} / (s.nrm * p.qn) AS cosine
-      FROM cells s JOIN probed p ON s.centroid_id = p.cid
-    ), ranked AS (
-      SELECT query_id, vec_id, cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, vec_id) AS rnk
-      FROM scored
+    ), {_sql_probe(dim, nprobe)}, scored AS (
+      SELECT p.query_id, s.vec_id,
+             {_sql_dot("s.embedding", "p.qe", dim)} / (s.nrm * p.qn) AS cosine
+      FROM cells s JOIN probed p ON s.cid = p.cid
     )
-    SELECT query_id, vec_id, rnk, round(cosine, 6) AS cosine
-    FROM ranked WHERE rnk <= {k} ORDER BY query_id, rnk
+    {_sql_rank("scored", "cosine", k)}
 """
 
 
@@ -1269,10 +1297,8 @@ def _flagship_parts() -> tuple:
       FROM (SELECT ivec, 2.0/(dot_in - dot_out) AS scale,
                    (dot_in + dot_out)/2.0 AS shift
             FROM (SELECT ivec,
-                    list_sum(list_transform(range(1, {2 * K + 1}),
-                      i -> ({fs.format(p="p_in")})[i] * ivec[i])) AS dot_in,
-                    list_sum(list_transform(range(1, {2 * K + 1}),
-                      i -> ({fs.format(p="p_out")})[i] * ivec[i])) AS dot_out
+                    {_sql_dot(f"({fs.format(p='p_in')})", "ivec", 2 * K)} AS dot_in,
+                    {_sql_dot(f"({fs.format(p='p_out')})", "ivec", 2 * K)} AS dot_out
                   FROM qiv))
     ), cvec AS (
       -- corpus dense product block per doc: [half(2)|1|full(2K)|1|null]
@@ -1290,10 +1316,10 @@ def _flagship_parts() -> tuple:
             FROM d, st)
     ), scored AS (
       SELECT d.doc_id, d.lang, d.source, d.n_chars,
-             list_sum(list_transform(range(1, {D + 1}), i -> tv[i]*({q_lits})[i]))
+             {_sql_dot("tv", f"({q_lits})", D)}
              + CASE WHEN d.lang IS NULL THEN 0.0
                     WHEN d.lang IN ('en', 'de') THEN {wl} ELSE -{wl} END
-             + list_sum(list_transform(range(1, {2 * K + 6}), i -> cv[i]*qd[i]))
+             + {_sql_dot("cv", "qd", 2 * K + 5)}
                AS rel
       FROM d
       JOIN txt ON txt.doc_id = d.doc_id
@@ -1353,14 +1379,12 @@ def _fused_ivf_oracle(k: int = 10) -> str:
     ), ipm AS (
       SELECT db.doc_id, c.cid,
              round(
-               list_sum(list_transform(range(1, {D + 1}),
-                        i -> db.tv[i] * c.ctv[i]))
+               {_sql_dot("db.tv", "c.ctv", D)}
                + CASE WHEN db.lang IS NOT NULL AND db.lang = c.clang
                       THEN 1.0 ELSE 0.0 END
                + CASE WHEN db.bsrc IS NOT NULL AND db.bsrc = c.csrc
                       THEN 1.0 ELSE 0.0 END
-               + list_sum(list_transform(range(1, {2 * K + 6}),
-                        i -> db.cv[i] * c.ccv[i])), 6) AS ip
+               + {_sql_dot("db.cv", "c.ccv", 2 * K + 5)}, 6) AS ip
       FROM db CROSS JOIN cent c
     ), cells AS (
       SELECT doc_id, cid FROM (
@@ -1804,21 +1828,18 @@ def _hybrid_oracle(k: int = 10, kr: int = 20, k_rrf: float = 60.0) -> str:
       FROM bmscored WHERE score > 0 QUALIFY rnk <= {kr}
     ),
     q AS (
-      SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qe,
+      SELECT vec_id AS query_id, embedding AS qe,
              sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS qn
       FROM embeddings WHERE vec_id = 0
     ),
     dsc AS (
-      SELECT e.vec_id AS doc_id,
-             list_sum(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * q.qe[i]))
+      SELECT q.query_id, e.vec_id AS doc_id,
+             {_sql_dot("e.embedding", "q.qe", 64)}
                / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x))) * q.qn)
                AS cosine
       FROM embeddings e, q
     ),
-    dense_arm AS (
-      SELECT doc_id, row_number() OVER (ORDER BY cosine DESC, doc_id) AS rnk
-      FROM dsc QUALIFY rnk <= {kr}
-    ),
+    dense_arm AS ({_sql_rank("dsc", "cosine", kr, key="doc_id")}),
     u AS (SELECT doc_id, rnk FROM text_arm UNION ALL SELECT doc_id, rnk FROM dense_arm),
     fused AS (
       SELECT doc_id, count(*) AS n_lists,
@@ -1980,68 +2001,15 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # seeding, derivable in both engines — the q_ivf_knn pattern); k-means
 # TRAINING is not SQL-expressible and is unit-tested/benched apart.
 
-_PQ_M, _PQ_W, _PQ_K = 8, 8, 16  # 8 subspaces × 8 dims, 16 codes each
+_PQ_E = "e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)"
 
 
-def _pq_oracle(dim: int = 64, k: int = 10) -> str:
-    """DuckDB twin of PQ encode + ADC top-k. Distances fold in the
-    same order as the Spark expressions (list_sum is sequential; the
-    Spark side builds its dot/csq sums left-to-right and its csq
-    literals with sequential Python sums), so the discrete argmin
-    code assignment is bit-identical. The per-(query, doc) ADC sum
-    is a GROUP BY sum over m=8 parts — order-free up to ulps,
-    absorbed by round(,6) (q_bm25 precedent)."""
-    m, w, kc = _PQ_M, _PQ_W, _PQ_K
+def _pq_oracle(k: int = 10) -> str:
+    """DuckDB twin of PQ encode + ADC top-k over the frozen Forgy
+    codebooks (see _sql_pq for the fold-order argument)."""
     return f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ), cb AS (
-      SELECT CAST(s.vec_id AS INT) AS code, t.j,
-             list_transform(range(t.j*{w}+1, t.j*{w}+{w}+1), i -> s.v[i]) AS cvec
-      FROM e s CROSS JOIN generate_series(0, {m - 1}) t(j)
-      WHERE s.vec_id < {kc}
-    ), cbq AS (
-      SELECT code, j, cvec,
-             list_sum(list_transform(cvec, x -> x * x)) AS csq
-      FROM cb
-    ), esub AS (
-      SELECT e.vec_id, t.j,
-             list_transform(range(t.j*{w}+1, t.j*{w}+{w}+1), i -> e.v[i]) AS sv
-      FROM e CROSS JOIN generate_series(0, {m - 1}) t(j)
-    ), enc AS (
-      SELECT s.vec_id, s.j, b.code,
-             row_number() OVER (
-               PARTITION BY s.vec_id, s.j
-               ORDER BY b.csq - 2 * list_sum(list_transform(range(1, {w + 1}),
-                        i -> s.sv[i] * b.cvec[i])) ASC,
-                        b.code ASC) AS rn
-      FROM esub s JOIN cbq b ON s.j = b.j
-    ), codes AS (
-      SELECT vec_id, j, code FROM enc WHERE rn = 1
-    ), qsub AS (
-      SELECT vec_id AS query_id, j, sv FROM esub WHERE vec_id < 3
-    ), lut AS (
-      SELECT s.query_id, s.j, b.code,
-             list_sum(list_transform(range(1, {w + 1}),
-                      i -> s.sv[i] * b.cvec[i])) AS part
-      FROM qsub s JOIN cbq b ON s.j = b.j
-    ), scored AS (
-      -- round BEFORE ranking: the GROUP BY sum folds the m parts in
-      -- arbitrary order vs Spark's fixed-order sum, so ranks must be
-      -- taken over the rounded score to share a tie-break domain
-      -- (the Spark side rounds identically in pq_adc_topk)
-      SELECT l.query_id, c.vec_id, round(sum(l.part), 6) AS adc
-      FROM codes c JOIN lut l ON c.j = l.j AND c.code = l.code
-      GROUP BY l.query_id, c.vec_id
-    ), ranked AS (
-      SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc DESC, vec_id) AS rnk
-      FROM scored
-    )
-    SELECT query_id, vec_id, rnk, adc
-    FROM ranked WHERE rnk <= {k} ORDER BY query_id, rnk
+    WITH {_PQ_E}, {_sql_pq()}
+    {_sql_rank("scored", "adc", k)}
 """
 
 
@@ -2091,8 +2059,7 @@ def _lloyd_iter_ctes(t: int, prev: str, w: int) -> str:
       SELECT s.vec_id, s.j, s.sv, b.code,
              row_number() OVER (PARTITION BY s.vec_id, s.j
                ORDER BY list_sum(list_transform(b.cvec, x -> x * x))
-                        - 2 * list_sum(list_transform(range(1, {w + 1}),
-                              i -> s.sv[i] * b.cvec[i])) ASC,
+                        - 2 * {_sql_dot("s.sv", "b.cvec", w)} ASC,
                         b.code ASC) AS rn
       FROM ssub s JOIN {prev} b ON s.j = b.j
     ), m{t} AS (
@@ -2122,57 +2089,14 @@ def _pq_trained_oracle(k: int = 10) -> str:
     flip mattering to a later discrete argmin — is the same accepted
     class as q_pq_knn's GROUP-BY-sum note). Serve tail is identical to
     _pq_oracle with the trained codebooks in place of raw Forgy."""
-    m, w, kc = _PQ_M, _PQ_W, _PQ_K
     iters = "".join(
-        ", " + _lloyd_iter_ctes(t, f"cb{t - 1}", w)
+        ", " + _lloyd_iter_ctes(t, f"cb{t - 1}", _PQ_W)
         for t in range(1, _PQT_ITERS + 1)
     )
+    lloyd = f", ssub AS (SELECT * FROM esub WHERE vec_id < {_PQT_SAMPLE}){iters}"
     return f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ), esub AS (
-      SELECT e.vec_id, t.j,
-             list_transform(range(t.j*{w}+1, t.j*{w}+{w}+1), i -> e.v[i]) AS sv
-      FROM e CROSS JOIN generate_series(0, {m - 1}) t(j)
-    ), ssub AS (
-      SELECT * FROM esub WHERE vec_id < {_PQT_SAMPLE}
-    ), cb0 AS (
-      SELECT CAST(vec_id AS INT) AS code, j, sv AS cvec
-      FROM ssub WHERE vec_id < {kc}
-    ){iters}, cbq AS (
-      SELECT code, j, cvec,
-             list_sum(list_transform(cvec, x -> x * x)) AS csq
-      FROM cb{_PQT_ITERS}
-    ), enc AS (
-      SELECT s.vec_id, s.j, b.code,
-             row_number() OVER (
-               PARTITION BY s.vec_id, s.j
-               ORDER BY b.csq - 2 * list_sum(list_transform(range(1, {w + 1}),
-                        i -> s.sv[i] * b.cvec[i])) ASC,
-                        b.code ASC) AS rn
-      FROM esub s JOIN cbq b ON s.j = b.j
-    ), codes AS (
-      SELECT vec_id, j, code FROM enc WHERE rn = 1
-    ), qsub AS (
-      SELECT vec_id AS query_id, j, sv FROM esub WHERE vec_id < 3
-    ), lut AS (
-      SELECT s.query_id, s.j, b.code,
-             list_sum(list_transform(range(1, {w + 1}),
-                      i -> s.sv[i] * b.cvec[i])) AS part
-      FROM qsub s JOIN cbq b ON s.j = b.j
-    ), scored AS (
-      SELECT l.query_id, c.vec_id, round(sum(l.part), 6) AS adc
-      FROM codes c JOIN lut l ON c.j = l.j AND c.code = l.code
-      GROUP BY l.query_id, c.vec_id
-    ), ranked AS (
-      SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc DESC, vec_id) AS rnk
-      FROM scored
-    )
-    SELECT query_id, vec_id, rnk, adc
-    FROM ranked WHERE rnk <= {k} ORDER BY query_id, rnk
+    WITH {_PQ_E}, {_sql_pq(f"cb{_PQT_ITERS}", lloyd)}
+    {_sql_rank("scored", "adc", k)}
 """
 
 
@@ -2221,82 +2145,20 @@ def _ivfpq_oracle(
     centroid cosine, and ADC scoring restricted to each query's OWN
     probed cells. ADC is rounded before ranking (shared tie-break
     domain, q_pq_knn rationale)."""
-    m, w, kc = _PQ_M, _PQ_W, _PQ_K
     return f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
              sqrt(list_sum(list_transform(embedding,
                   x -> CAST(x AS DOUBLE) * x))) AS nrm
       FROM embeddings
-    ), ccent AS (
-      SELECT CAST(vec_id AS INT) AS cid, v AS cvec,
-             list_sum(list_transform(v, x -> x * x)) AS csq
-      FROM e WHERE vec_id < {n_cent}
-    ), cellasg AS (
-      SELECT e.vec_id, c.cid,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY round(c.csq - 2 * list_sum(list_transform(range(1, {dim + 1}),
-                        i -> e.v[i] * c.cvec[i])), 6) ASC,
-                        c.cid ASC) AS arn
-      FROM e CROSS JOIN ccent c
-    ), cells AS (
-      SELECT vec_id, cid FROM cellasg WHERE arn = 1
-    ), cb AS (
-      SELECT CAST(s.vec_id AS INT) AS code, t.j,
-             list_transform(range(t.j*{w}+1, t.j*{w}+{w}+1), i -> s.v[i]) AS cvec
-      FROM e s CROSS JOIN generate_series(0, {m - 1}) t(j)
-      WHERE s.vec_id < {kc}
-    ), cbq AS (
-      SELECT code, j, cvec,
-             list_sum(list_transform(cvec, x -> x * x)) AS csq
-      FROM cb
-    ), esub AS (
-      SELECT e.vec_id, t.j,
-             list_transform(range(t.j*{w}+1, t.j*{w}+{w}+1), i -> e.v[i]) AS sv
-      FROM e CROSS JOIN generate_series(0, {m - 1}) t(j)
-    ), enc AS (
-      SELECT s.vec_id, s.j, b.code,
-             row_number() OVER (
-               PARTITION BY s.vec_id, s.j
-               ORDER BY b.csq - 2 * list_sum(list_transform(range(1, {w + 1}),
-                        i -> s.sv[i] * b.cvec[i])) ASC,
-                        b.code ASC) AS rn
-      FROM esub s JOIN cbq b ON s.j = b.j
-    ), codes AS (
-      SELECT vec_id, j, code FROM enc WHERE rn = 1
-    ), q AS (
+    ), {_sql_assign("v", dim, n_cent)}, {_sql_pq()}, q AS (
       SELECT vec_id AS query_id, v AS qe, nrm AS qn FROM e WHERE vec_id < 3
-    ), probes AS (
-      SELECT query_id, cid FROM (
-        SELECT q.query_id, c.cid,
-               row_number() OVER (PARTITION BY q.query_id
-                 ORDER BY round(list_sum(list_transform(range(1, {dim + 1}),
-                          i -> q.qe[i] * c.cvec[i])) / (sqrt(c.csq) * q.qn), 6) DESC,
-                          c.cid ASC) AS prn
-        FROM q CROSS JOIN ccent c
-      ) WHERE prn <= {nprobe}
-    ), qsub AS (
-      SELECT vec_id AS query_id, j, sv FROM esub WHERE vec_id < 3
-    ), lut AS (
-      SELECT s.query_id, s.j, b.code,
-             list_sum(list_transform(range(1, {w + 1}),
-                      i -> s.sv[i] * b.cvec[i])) AS part
-      FROM qsub s JOIN cbq b ON s.j = b.j
-    ), scored AS (
-      SELECT l.query_id, c.vec_id, round(sum(l.part), 6) AS adc
-      FROM codes c
-      JOIN cells ce ON ce.vec_id = c.vec_id
-      JOIN probes p ON p.cid = ce.cid
-      JOIN lut l ON c.j = l.j AND c.code = l.code AND l.query_id = p.query_id
-      GROUP BY l.query_id, c.vec_id
-    ), ranked AS (
-      SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc DESC, vec_id) AS rnk
-      FROM scored
+    ), {_sql_probe(dim, nprobe)}, in_probed AS (
+      SELECT s.* FROM scored s
+      JOIN cells ce ON ce.vec_id = s.vec_id
+      JOIN probed p ON p.cid = ce.cid AND p.query_id = s.query_id
     )
-    SELECT query_id, vec_id, rnk, adc
-    FROM ranked WHERE rnk <= {k} ORDER BY query_id, rnk
+    {_sql_rank("in_probed", "adc", k)}
 """
 
 

@@ -7,10 +7,9 @@ per-partition bounded heap + driver merge of k·P rows — no global
 sort, no shuffle of the corpus. That IS the distributed analog of a
 brute-force IP scan and is the exact-search baseline at any scale.
 
-Batch of queries: broadcast the query table, crossJoin-score, then
-TWO-PHASE top-k — a per-(query, corpus-partition) local heap first,
-then a global top-k over the k·P survivors — so the big shuffle moves
-O(k·P·Q) rows, not O(N·Q) (SURVEY T1 batch note).
+Batch of queries: the Arrow scan keeps a per-(query, corpus-partition)
+local top-k, then one global top-k window merges the k·P survivors —
+so the shuffle moves O(k·P·Q) rows, not O(N·Q) (SURVEY T1 batch note).
 
 The Arrow scan (``_arrow_partial_topk``: one numpy matmul plus a
 partition-local top-k per Arrow batch) serves only query batches and
@@ -260,52 +259,30 @@ def topk_batch(
     query_id_col: str = "query_id",
     score_col: str = "relevance",
     key_col: str = "row_id",
-    local_buckets: int = 32,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """T1 batch variant: broadcast queries ⋈ corpus, two-phase top-k.
+    """T1 batch variant: exact top-``k`` of every query in ``queries``.
 
-    Arrow mode (default): one numpy (n×d)·(d×Q) matmul per corpus
-    partition scores every query in a single pass; only k·P·Q tiny
-    survivor rows shuffle for the global merge. This is the path
-    whose shuffle volume is independent of corpus size.
-
-    Expression mode (use_arrow=False): crossJoin-score + two-phase
-    windows. NOTE: phase 1's window still hash-exchanges the N·Q
-    scored rows on (query, bucket) — acceptable at test scale and for
-    oracle-parity plans, but the Arrow path is the 100 TB design.
+    One Arrow scan: per corpus partition, one numpy (Q×d)·(d×n) matmul
+    scores every query in a single pass and kernels.partition_topk
+    keeps each query's local top-k; only those k·P·Q tiny survivor
+    rows shuffle for the global merge window (score DESC, ``key_col``
+    ascending), so the shuffle volume is independent of corpus size.
+    The hits join back to the corpus columns on ``key_col``.
     """
-    if use_arrow:
-        qrows = queries.select(query_id_col, query_vec_col).collect()
-        qids = [r[query_id_col] for r in qrows]
-        qmat = np.asarray([r[query_vec_col] for r in qrows], dtype="float64")
-        survivors = _arrow_partial_topk(
-            products, qmat, qids, k, vector_col, key_col, score_col
-        )
-        w_global = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.col(key_col))
-        hits = (
-            survivors.withColumn("__r", F.row_number().over(w_global))
-            .filter(F.col("__r") <= k)
-            .drop("__r")
-            .withColumnRenamed("query_id", query_id_col)
-        )
-        return hits.join(products.drop(vector_col), key_col)
-    scored = products.crossJoin(F.broadcast(queries)).withColumn(
-        score_col, dot_expr(vector_col, F.col(query_vec_col))
+    qrows = queries.select(query_id_col, query_vec_col).collect()
+    qids = [r[query_id_col] for r in qrows]
+    qmat = np.asarray([r[query_vec_col] for r in qrows], dtype="float64")
+    survivors = _arrow_partial_topk(
+        products, qmat, qids, k, vector_col, key_col, score_col
     )
-    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(local_buckets))
-    w_local = Window.partitionBy(F.col(query_id_col), bucket).orderBy(
-        F.desc(score_col), F.col(key_col)
-    )
-    survivors = scored.withColumn("__r", F.row_number().over(w_local)).filter(
-        F.col("__r") <= k
-    )
-    w_global = Window.partitionBy(query_id_col).orderBy(F.desc(score_col), F.col(key_col))
-    return (
+    w_global = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.col(key_col))
+    hits = (
         survivors.withColumn("__r", F.row_number().over(w_global))
         .filter(F.col("__r") <= k)
-        .drop("__r", query_vec_col)
+        .drop("__r")
+        .withColumnRenamed("query_id", query_id_col)
     )
+    return hits.join(products.drop(vector_col), key_col)
 
 
 def score_breakdown(

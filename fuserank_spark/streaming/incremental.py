@@ -321,7 +321,12 @@ def _sizing_from_footers(
             batch_ids = [int(p["batch_id"]) for p, _ in stats]
         except (TypeError, ValueError):
             return None
-        max_b = max(batch_ids)
+        # the newest batch holding DATA rows, as _fold_batches'
+        # max(batch_id) over the folded frame: zero-row files add none
+        filled = [b for b, (_, nr) in zip(batch_ids, stats) if nr > 0]
+        if not filled:
+            return None  # no rows at all — the frame path raises "empty"
+        max_b = max(filled)
         watermark = max_b if include_latest_batch else max_b - 1
         if watermark < 0:
             raise ValueError(

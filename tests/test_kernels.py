@@ -113,7 +113,7 @@ def test_round_half_away_matches_scalar_formula():
 def test_partition_topk_folds_small_batches(spark):
     """With 7-row Arrow batches each partition folds ~36 batch cuts
     into its running top-k; topk (score_round=6) and topk_batch must
-    still equal the expression path."""
+    still equal the expression path (per-query JVM topk rows)."""
     from fuserank_spark.search import topk, topk_batch
 
     emb = (
@@ -130,18 +130,62 @@ def test_partition_topk_folds_small_batches(spark):
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "7")
+    want = []
     try:
         for r in qrows:
             qv = np.asarray(r["vector"], dtype="float64")
             got = topk(emb, qv, k=10, score_round=6, assign_filter=scan).collect()
-            want = topk(emb, qv, k=10, score_round=6).collect()
-            assert [x["row_id"] for x in got] == [x["row_id"] for x in want]
+            rows = topk(emb, qv, k=10, score_round=6).collect()
+            assert [x["row_id"] for x in got] == [x["row_id"] for x in rows]
+            want += [
+                {"query_id": int(r["row_id"]), "row_id": x["row_id"], "relevance": x["relevance"]}
+                for x in rows
+            ]
         rank = ["query_id", F.desc("relevance"), "row_id"]
         got = topk_batch(emb, queries, k=10).orderBy(*rank).collect()
-        want = topk_batch(emb, queries, k=10, use_arrow=False).orderBy(*rank).collect()
     finally:
         spark.conf.set(key, old)
+    want.sort(key=lambda x: (x["query_id"], -x["relevance"], x["row_id"]))
     assert [(x["query_id"], x["row_id"]) for x in got] == [
         (x["query_id"], x["row_id"]) for x in want
     ]
     assert all(abs(a["relevance"] - b["relevance"]) < 1e-9 for a, b in zip(got, want))
+
+
+def test_sql_twins_break_ties_as_the_kernels():
+    """The oracle builders' tie-breaks on a hand-built table: a row
+    equidistant from two centroids after round(, 6) gets the lowest
+    cell, as kernels.assign_cells gives it; a tied probe cosine keeps
+    the lowest cell, as kernels.probe_cells does; tied candidates
+    rank by key ascending."""
+    import duckdb
+
+    from fuserank_spark.ext_queries import _sql_assign, _sql_probe, _sql_rank
+    from fuserank_spark.kernels import assign_cells, probe_cells
+
+    # rows 0-1 are the centroids; row 2 is nearer cell 1 by 4e-8 before
+    # rounding, row 3 is exactly equidistant
+    vecs = [[1.0, 0.0], [-1.0, 0.0], [-1e-8, 1.0], [0.0, 1.0]]
+    M, C = np.asarray(vecs), np.asarray(vecs[:2])
+    assert assign_cells(M, C, "l2", None)[2] == 1
+    want = assign_cells(M, C, "l2", 6).tolist()
+    assert want == [0, 1, 0, 0]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (vec_id BIGINT, v DOUBLE[])")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(vecs)))
+    ctes = f"""WITH e AS (SELECT * FROM t), {_sql_assign("v", 2, 2)}, q AS (
+      SELECT vec_id AS query_id, v AS qe, sqrt(list_sum(list_transform(v, x -> x * x))) AS qn
+      FROM e WHERE vec_id = 3
+    ), {_sql_probe(2, 1)}"""
+    cells = con.execute(f"{ctes} SELECT cid FROM cells ORDER BY vec_id").fetchall()
+    assert [c for (c,) in cells] == want
+    probed = con.execute(f"{ctes} SELECT cid FROM probed").fetchall()
+    assert [c for (c,) in probed] == probe_cells(C, M[3], 1) == [0]
+
+    ranked = con.execute(
+        "WITH s AS (SELECT query_id, vec_id, CAST(cosine AS DOUBLE) AS cosine FROM (VALUES "
+        "(0, 5, 0.9), (0, 3, 0.9), (0, 4, 0.5), (1, 2, 0.1), (1, 1, 0.1), (1, 7, 0.05)"
+        f") v(query_id, vec_id, cosine)) {_sql_rank('s', 'cosine', 2)}"
+    ).fetchall()
+    assert ranked == [(0, 3, 1, 0.9), (0, 5, 2, 0.9), (1, 1, 1, 0.1), (1, 2, 2, 0.1)]

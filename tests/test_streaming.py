@@ -3,6 +3,7 @@ watermarked windowed arrival stats (SURVEY §2.11)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -770,20 +771,38 @@ def test_footer_sizing_matches_aggregation_sizing(spark, tmpdir):
             .parquet(f"{sink}/batch_id={b}")
         )
 
-    df = spark.read.parquet(sink)
-    for include_latest in (True, False):
-        sized = _sizing_from_footers(_sink_footer_stats(sink), include_latest)
-        assert sized is not None
-        watermark, rows, n_cells = sized
-        want_wm = 2 if include_latest else 1
-        folded = df.filter(F.col("batch_id") <= want_wm)
-        agg = folded.agg(
-            F.countDistinct("centroid_id").alias("c"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        assert watermark == want_wm
-        assert rows == int(agg["n"])
-        assert n_cells == int(agg["c"])
+    def check_sizing():
+        df = spark.read.parquet(sink)
+        for include_latest in (True, False):
+            sized = _sizing_from_footers(_sink_footer_stats(sink), include_latest)
+            assert sized is not None
+            watermark, rows, n_cells = sized
+            want_wm = 2 if include_latest else 1
+            folded = df.filter(F.col("batch_id") <= want_wm)
+            agg = folded.agg(
+                F.countDistinct("centroid_id").alias("c"),
+                F.count(F.lit(1)).alias("n"),
+            ).collect()[0]
+            assert watermark == want_wm
+            assert rows == int(agg["n"])
+            assert n_cells == int(agg["c"])
+
+    check_sizing()
+
+    # a newest batch of zero-row files moves neither the watermark nor
+    # the sizing: the aggregation path takes max(batch_id) over rows
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write_empty_batch(root, b):
+        os.makedirs(f"{root}/batch_id={b}/centroid_id=1")
+        empty = pa.table(
+            {"doc_id": pa.array([], pa.int64()), "text": pa.array([], pa.string())}
+        )
+        pq.write_table(empty, f"{root}/batch_id={b}/centroid_id=1/part-00000.parquet")
+
+    write_empty_batch(sink, 3)
+    check_sizing()
 
     # single-batch sink: same nothing-safely-compactable error as the
     # aggregation path
@@ -795,6 +814,10 @@ def test_footer_sizing_matches_aggregation_sizing(spark, tmpdir):
         _sizing_from_footers(_sink_footer_stats(solo), False)
     wm0, rows0, cells0 = _sizing_from_footers(_sink_footer_stats(solo), True)
     assert (wm0, rows0, cells0) == (0, 60, 2)
+    # ... and a zero-row batch after it keeps that one-batch error
+    write_empty_batch(solo, 1)
+    with pytest.raises(ValueError, match="in-flight"):
+        _sizing_from_footers(_sink_footer_stats(solo), False)
 
     # non-partitioned sink (no provenance): watermark None, plain count
     flat = f"{tmpdir}/flat"

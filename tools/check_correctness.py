@@ -2,7 +2,8 @@
 
 Runs every registered query in Spark AND its DuckDB oracle over the
 same parquet tables, compares row count, column names, and an
-order-insensitive value hash. Usage:
+order-insensitive value hash. Each pass line prints that hash, so a
+diff of two runs' output shows any oracle drift. Usage:
 
     python tools/check_correctness.py [--vanilla] [--window] [sf_dir] [name ...]
 
@@ -138,7 +139,7 @@ def main():
             print(f"FAIL  {name}: {'; '.join(problems)}")
             n_fail += 1
         else:
-            print(f"pass  {name}: rows={len(srows)} [{time.time()-t0:.1f}s]")
+            print(f"pass  {name}: rows={len(srows)} hash={dh} [{time.time()-t0:.1f}s]")
             n_pass += 1
 
     print(f"\n{n_pass} pass, {n_weak} weak (rows-only), {n_fail} fail")
