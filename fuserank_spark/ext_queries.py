@@ -30,10 +30,10 @@ from .session import persisted, session_cached
 _H = portable_hash32_sql("{expr}")  # template form; .format(expr=...) fills the column
 
 # ------------------------------------------------------ SQL-twin builders
-# The ANN-family oracles are composed from these five builders, each the
+# The ANN-family oracles are composed from these builders, each the
 # DuckDB twin of one engine kernel. The CTE builders read fixed CTE
 # names from their caller: ``e`` (vec_id + vector rows) and ``q``
-# (query_id, qe, qn).
+# (query_id, qe, qn), which _sql_cosine writes itself.
 
 
 def _sql_dot(a: str, b: str, dim) -> str:
@@ -85,8 +85,7 @@ def _sql_pq(cb: str = "cb0", lloyd: str = "") -> str:
     ``esub`` (the _PQ_M subvectors of every row), ``cb0`` (the Forgy
     codebooks: subvectors of the first _PQ_K rows), the caller's
     ``lloyd`` CTEs (training; ``cb`` names the codebook CTE to encode
-    with), ``codes`` (per subvector the UNROUNDED l2 argmin code,
-    lowest code on ties — quantization.pq_encode's struct-min), and
+    with), ``codes`` (:func:`_sql_codes` over ``cbq``), and
     ``scored`` (query_id, vec_id, adc) for the queries vec_id < 3.
 
     Distances fold in the same order as the Spark expressions, so the
@@ -101,20 +100,45 @@ def _sql_pq(cb: str = "cb0", lloyd: str = "") -> str:
       FROM e CROSS JOIN generate_series(0, {m - 1}) t(j)
     ), cb0 AS (
       SELECT CAST(vec_id AS INT) AS code, j, sv AS cvec FROM esub WHERE vec_id < {_PQ_K}
-    ){lloyd}, cbq AS (
-      SELECT code, j, cvec, {_sql_dot("cvec", "cvec", w)} AS csq FROM {cb}
-    ), codes AS (
-      SELECT s.vec_id, s.j, b.code FROM esub s JOIN cbq b ON s.j = b.j
-      QUALIFY row_number() OVER (
-        PARTITION BY s.vec_id, s.j
-        ORDER BY b.csq - 2 * {_sql_dot("s.sv", "b.cvec", w)}, b.code) = 1
-    ), lut AS (
+    ){lloyd}, {_sql_codes("esub", cb, "cbq", "codes", w)}, lut AS (
       SELECT s.vec_id AS query_id, s.j, b.code, {_sql_dot("s.sv", "b.cvec", w)} AS part
       FROM esub s JOIN cbq b ON s.j = b.j WHERE s.vec_id < 3
     ), scored AS (
       SELECT l.query_id, c.vec_id, round(sum(l.part), 6) AS adc
       FROM codes c JOIN lut l ON c.j = l.j AND c.code = l.code
       GROUP BY l.query_id, c.vec_id
+    )"""
+
+
+def _sql_cosine(qfilter: str, out: str, key: str = "vec_id") -> str:
+    """CTEs ``q`` — the rows of ``embeddings`` matching ``qfilter`` as
+    queries (query_id, qe, qn) — and ``out`` (query_id, ``key``,
+    cosine): the exact cosine of every query against every row, the
+    twin of simsearch.brute_force_knn's scoring."""
+    norm = "sqrt(list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * x)))"
+    return f"""q AS (
+      SELECT vec_id AS query_id, embedding AS qe, {norm.format(v="embedding")} AS qn
+      FROM embeddings WHERE {qfilter}
+    ), {out} AS (
+      SELECT q.query_id, e.vec_id AS {key},
+             {_sql_dot("e.embedding", "q.qe", 64)} / ({norm.format(v="e.embedding")} * q.qn) AS cosine
+      FROM embeddings e, q
+    )"""
+
+
+def _sql_codes(sub: str, book: str, bq: str, out: str, w: int, cols: str = "") -> str:
+    """CTEs ``bq`` — codebook CTE ``book`` (code, j, cvec) with each
+    code's ``csq`` — and ``out`` (vec_id, j, ``cols``, code): per
+    subvector ``sv`` of ``sub`` the UNROUNDED l2 argmin code of its
+    subspace, lowest code on ties — quantization.pq_encode's
+    struct-min, and the assign step of the portable Lloyd."""
+    return f"""{bq} AS (
+      SELECT code, j, cvec, {_sql_dot("cvec", "cvec", w)} AS csq FROM {book}
+    ), {out} AS (
+      SELECT s.vec_id, s.j{cols}, b.code FROM {sub} s JOIN {bq} b ON s.j = b.j
+      QUALIFY row_number() OVER (
+        PARTITION BY s.vec_id, s.j
+        ORDER BY b.csq - 2 * {_sql_dot("s.sv", "b.cvec", w)}, b.code) = 1
     )"""
 
 
@@ -471,17 +495,7 @@ def q_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------------------- exact knn
 _KNN_ORACLE = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qe,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS qn
-      FROM embeddings WHERE vec_id < 3
-    ), scored AS (
-      SELECT q.query_id, e.vec_id,
-             {_sql_dot("e.embedding", "q.qe", 64)}
-               / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x))) * q.qn)
-               AS cosine
-      FROM embeddings e, q
-    )
+    WITH {_sql_cosine("vec_id < 3", "scored")}
     {_sql_rank("scored", "cosine", 10)}
 """
 
@@ -1827,18 +1841,7 @@ def _hybrid_oracle(k: int = 10, kr: int = 20, k_rrf: float = 60.0) -> str:
       SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rnk
       FROM bmscored WHERE score > 0 QUALIFY rnk <= {kr}
     ),
-    q AS (
-      SELECT vec_id AS query_id, embedding AS qe,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS qn
-      FROM embeddings WHERE vec_id = 0
-    ),
-    dsc AS (
-      SELECT q.query_id, e.vec_id AS doc_id,
-             {_sql_dot("e.embedding", "q.qe", 64)}
-               / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x))) * q.qn)
-               AS cosine
-      FROM embeddings e, q
-    ),
+    {_sql_cosine("vec_id = 0", "dsc", key="doc_id")},
     dense_arm AS ({_sql_rank("dsc", "cosine", kr, key="doc_id")}),
     u AS (SELECT doc_id, rnk FROM text_arm UNION ALL SELECT doc_id, rnk FROM dense_arm),
     fused AS (
@@ -2055,16 +2058,7 @@ def _lloyd_iter_ctes(t: int, prev: str, w: int) -> str:
     the Python trainer, unlike engine round() whose half-way rule
     differs from Python's banker's rounding), empty clusters keep
     their previous centroid via LEFT JOIN + coalesce."""
-    return f"""a{t} AS (
-      SELECT s.vec_id, s.j, s.sv, b.code,
-             row_number() OVER (PARTITION BY s.vec_id, s.j
-               ORDER BY list_sum(list_transform(b.cvec, x -> x * x))
-                        - 2 * {_sql_dot("s.sv", "b.cvec", w)} ASC,
-                        b.code ASC) AS rn
-      FROM ssub s JOIN {prev} b ON s.j = b.j
-    ), m{t} AS (
-      SELECT vec_id, j, sv, code FROM a{t} WHERE rn = 1
-    ), u{t} AS (
+    return f"""{_sql_codes("ssub", prev, f"q{t}", f"m{t}", w, ", s.sv")}, u{t} AS (
       SELECT j, code, t.i,
              floor((sum(sv[t.i]) / count(*)) * 1000000000.0 + 0.5)
                / 1000000000.0 AS val

@@ -587,10 +587,12 @@ def build_fused_ivf_index(
     the centroids) next to it. Returns the number of cells written.
 
     ``quantizer`` picks the coarse quantizer explicitly: ``"kmeans"``
-    (bounded-sample Lloyd), ``"spherical"`` (k-means on L2-normalized
-    vectors, centroids renormalized — the IP-aligned trainer), or
-    ``"head"`` (first-``n_cells`` corpus rows, also the SQL-derivable
-    demo quantizer the frozen oracle entry q_fused_ivf re-derives).
+    (bounded-sample Lloyd: simsearch.ivf_build's kernels.lloyd over at
+    most ``sample_rows`` hash-ordered rows), ``"spherical"`` (k-means
+    on L2-normalized vectors, centroids renormalized — the IP-aligned
+    trainer), or ``"head"`` (first-``n_cells`` corpus rows, also the
+    SQL-derivable demo quantizer the frozen oracle entry q_fused_ivf
+    re-derives).
     When None it derives from the legacy ``trained`` flag. WHICH wins
     is corpus-dependent — measured in tools/fused_ivf_scale_probe.py
     across THREE geometries (BASELINE.md r7 + r8 tables): on stub
@@ -628,7 +630,6 @@ def build_fused_ivf_index(
         n_cells = resolve_auto_cells(n, q)
     n_cells = int(n_cells)
     if q in ("kmeans", "spherical"):
-        frac = min(1.0, sample_rows / max(n, 1))
         train_src = corpus.encoded
         if q == "spherical":
             norm = F.sqrt(F.aggregate(
@@ -645,9 +646,9 @@ def build_fused_ivf_index(
                 "row_id",
                 F.transform("vector", lambda x: x / F.col("__n")).alias("vector"),
             )
-        _assigned_ml, cents = ivf_build(
+        _, cents = ivf_build(
             train_src, dim=corpus.layout.dim, n_centroids=n_cells,
-            vec_col="vector", sample_fraction=frac, max_iter=max_iter,
+            vec_col="vector", sample_rows=sample_rows, max_iter=max_iter,
         )
         if q == "spherical":
             cents = cents / np.maximum(

@@ -2,7 +2,8 @@
 column shares — one flat-buffer matrix read, one half-away-from-zero
 rounding, one IVF cell assignment, one IVF probe selection and one
 partition-local top-k (the per-partition top-k plus global merge of
-REPOSE, ICDE 2021).
+REPOSE, ICDE 2021) — and the one driver-side Lloyd trainer built on
+that cell assignment.
 
 One NULL/ragged contract for every kernel: a NULL vector row, a NULL
 element inside a vector, or a vector whose width is not the expected
@@ -68,6 +69,36 @@ def assign_cells(M: np.ndarray, cents: np.ndarray, metric: str, digits: int | No
     if digits is not None:
         D = round_half_away(D, digits)
     return D.argmin(axis=1)
+
+
+def lloyd(x: np.ndarray, k: int, iters: int, rng: np.random.Generator) -> np.ndarray:
+    """The ``(k, dim)`` centroids of ``iters`` Lloyd k-means iterations
+    over the rows of ``x``: the one non-portable trainer behind IVF
+    (simsearch.ivf_build) and PQ (quantization.train_pq) training.
+
+    Init draws ``k`` distinct rows with ``rng.choice`` — ``rng`` is a
+    Generator, not a seed, so train_pq keeps one stream across its
+    subspaces. Each iteration assigns with :func:`assign_cells` (the
+    argmin the Arrow scans serve with) and moves every centroid to its
+    members' mean. Empty-cluster repair: clusters that lose all
+    members are re-seeded to DISTINCT rows, in decreasing order of
+    distance to their own centroid (deterministic, no RNG in the
+    loop); simultaneously-empty clusters never collapse onto one row.
+    Driver memory is about ``n × (dim + k)`` doubles."""
+    cents = x[rng.choice(x.shape[0], size=k, replace=False)].copy()
+    for _ in range(iters):
+        assign = assign_cells(x, cents, "l2", None)
+        own = ((x - cents[assign]) ** 2).sum(axis=1)
+        far_order = np.argsort(-own, kind="stable")
+        next_far = 0
+        for c in range(k):
+            mask = assign == c
+            if mask.any():
+                cents[c] = x[mask].mean(axis=0)
+            else:
+                cents[c] = x[far_order[next_far]]
+                next_far += 1
+    return cents
 
 
 def probe_cells(cents, qvec, nprobe: int) -> list[int]:

@@ -704,8 +704,9 @@ def semantic_dedup(
     linear, keeps the min, may keep extra members (documented trade,
     same policy as the LSH pair paths).
 
-    Centroids are FROZEN (train them on a bounded sample via
-    simsearch.ivf_build, or reuse an IVF index's quantizer), so the
+    Centroids are FROZEN (train them with simsearch.ivf_build — a
+    kernels.lloyd on a bounded driver-side sample — or reuse an IVF
+    index's quantizer), so the
     whole op is expression-only: one narrow assignment projection,
     one shuffle on the uniform cell key, one anti-join. Cross-engine
     discipline: the assignment score is rounded to ``assign_round``

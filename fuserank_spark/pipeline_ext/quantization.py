@@ -51,7 +51,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels import read_matrix
+from ..kernels import lloyd, read_matrix
 from ..search import lit_vector
 from .simsearch import _check_positive, _merge_topk, _probe_join, _refine_topk
 from ..session import local_frame
@@ -120,10 +120,9 @@ def train_pq(
     at most ``sample_n`` rows, like simsearch.ivf_build's bounded
     training. Returns (m, k, dim/m) float64 codebooks.
 
-    Empty-cluster repair: clusters that lose all members are re-
-    seeded to DISTINCT sample points, in decreasing order of distance
-    from their nearest centroid (deterministic, no RNG in the loop);
-    simultaneously-empty clusters never collapse onto one point.
+    Each subspace trains with :func:`kernels.lloyd` (farthest-point
+    empty-cluster repair), all subspaces drawing their random init
+    from ONE ``default_rng(seed)`` stream in subspace order.
 
     ``portable=True`` runs the CROSS-ENGINE-DETERMINISTIC Lloyd
     variant (same objective, three differences that make every
@@ -151,25 +150,7 @@ def train_pq(
     if x.shape[1] != dim:
         raise ValueError(f"vectors are {x.shape[1]}-dim, expected {dim}")
     rng = np.random.default_rng(seed)
-    books = []
-    for s, e in subspace_slices(dim, m):
-        sub = x[:, s:e]
-        cents = sub[rng.choice(sub.shape[0], size=k, replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            far_order = np.argsort(-d2.min(axis=1), kind="stable")
-            next_far = 0
-            for c in range(k):
-                mask = assign == c
-                if mask.any():
-                    cents[c] = sub[mask].mean(axis=0)
-                else:
-                    # each empty cluster takes the NEXT farthest point
-                    # so two empties never share a centroid
-                    cents[c] = sub[far_order[next_far]]
-                    next_far += 1
-        books.append(cents)
+    books = [lloyd(x[:, s:e], k, iters, rng) for s, e in subspace_slices(dim, m)]
     return np.array(books, dtype="float64")
 
 

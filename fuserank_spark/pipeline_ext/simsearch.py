@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..kernels import assign_cells, probe_cells, read_matrix, round_half_away
+from ..kernels import assign_cells, lloyd, probe_cells, read_matrix, round_half_away
 from ..search import cosine_expr, lit_vector
 from ..session import local_frame
 
@@ -207,34 +207,42 @@ def ivf_build(
     dim: int,
     n_centroids: int = 16,
     vec_col: str = "embedding",
-    sample_fraction: float = 1.0,
+    sample_rows: int = 50_000,
     seed: int = 42,
     max_iter: int = 20,
 ):
-    """IVF coarse quantizer: k-means centroids trained on a (sampled)
-    pass, then one projection assigns every row to its nearest
-    centroid. Returns (assigned_df, centroids ndarray).
+    """IVF coarse quantizer: Lloyd k-means (kernels.lloyd) on a bounded
+    sample, then every row assigned to its nearest centroid by the
+    Arrow kernel (:func:`ivf_assign_arrow`). Returns (assigned_df,
+    centroids ndarray); ``assigned_df`` is lazy.
 
-    At 100 TB: train on a bounded sample (k-means cost is O(sample)),
-    assignment is a narrow map; the assigned table is written
-    partitioned by `centroid_id` so a query reads only its probed
-    partitions (partition pruning does the index lookup).
+    The sample is ONE Spark job: at most ``sample_rows`` vectors,
+    ordered by ``xxhash64(seed, vector)`` then the vector itself — a
+    total order on content, so the sample, and with it the centroids,
+    do not depend on partitioning or row order (the hash never reaches
+    an oracle-checked output). Training is driver-side numpy; driver
+    memory is about ``sample_rows × (dim + n_centroids)`` doubles. A
+    sample smaller than ``n_centroids`` raises; so does a NULL or
+    wrong-width training vector (kernels.read_matrix).
+
+    At 100 TB: training cost is O(sample_rows), assignment is a narrow
+    map; the assigned table is written partitioned by `centroid_id` so
+    a query reads only its probed partitions (partition pruning does
+    the index lookup).
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.sample(fraction=sample_fraction, seed=seed) if sample_fraction < 1.0 else corpus
-    train = train.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter, featuresCol="features").fit(train)
-    centroids = np.array([np.asarray(c) for c in model.clusterCenters()])
-
-    with_feat = corpus.withColumn(
-        "features", array_to_vector(F.col(vec_col).cast("array<double>"))
+    tbl = (
+        corpus.select(F.col(vec_col).cast("array<double>").alias("v"))
+        .orderBy(F.xxhash64(F.lit(seed), "v"), "v")
+        .limit(sample_rows)
+        .toArrow()
     )
-    assigned = model.transform(with_feat).withColumnRenamed("prediction", "centroid_id").drop(
-        "features"
-    )
-    return assigned, centroids
+    if tbl.num_rows < n_centroids:
+        raise ValueError(
+            f"IVF training sample has {tbl.num_rows} rows < n_centroids={n_centroids}"
+        )
+    x = read_matrix(tbl.combine_chunks().to_batches()[0], "v", dim)
+    centroids = lloyd(x, n_centroids, max_iter, np.random.default_rng(seed))
+    return ivf_assign_arrow(corpus, centroids, vec_col=vec_col), centroids
 
 
 def ivf_assign(
@@ -246,7 +254,7 @@ def ivf_assign(
     score_round: int | None = None,
 ) -> DataFrame:
     """Expression-only nearest-centroid assignment: serve NEW rows
-    into an existing IVF index without pyspark.ml on the serve path.
+    into an existing IVF index.
 
     The (small) centroid matrix is compiled into the plan as
     literals; per row, argmin over centroids of the squared L2

@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from fuserank_spark.kernels import round_half_away
+from fuserank_spark.kernels import lloyd, round_half_away
 
 from .conftest import SF_SMOKE
 
@@ -108,6 +108,21 @@ def test_round_half_away_matches_scalar_formula():
         assert got.tobytes() == np.asarray(want).tobytes()
         assert [round_half_away(v, digits) for v in x.tolist()] == want
     assert round_half_away(-0.5, 0) == -1.0 and round_half_away(0.5, 0) == 1.0
+
+
+@pytest.mark.parametrize("iters", [1, 5])
+@pytest.mark.parametrize("seed", range(8))
+def test_lloyd_reseeds_empty_clusters_to_the_farthest_row(seed, iters):
+    """Ten copies of one point plus one outlier, k=2. Most inits draw
+    two copies: every row then joins cell 0 and cell 1 is empty. The
+    repair re-seeds it to the row farthest from its own centroid, the
+    outlier, so whatever the init the centroids stay distinct and one
+    of them is the outlier. Keeping the previous centroid instead ends
+    the first iteration on the all-rows mean and a copy."""
+    x = np.vstack([np.tile([1.0, 2.0], (10, 1)), [[9.0, -4.0]]])
+    cents = {tuple(c) for c in lloyd(x, 2, iters, np.random.default_rng(seed))}
+    assert len(cents) == 2
+    assert (9.0, -4.0) in cents
 
 
 def test_partition_topk_folds_small_batches(spark):

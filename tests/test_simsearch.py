@@ -93,21 +93,64 @@ def test_ivf_nprobe_monotone(emb, queries, exact):
     assert mean_recall(8) >= 0.99  # all cells probed == exact
 
 
-def test_ivf_assign_matches_kmeans_transform(emb):
-    """ivf_assign (expression-only argmin, the serve path under the
-    q_ivf_knn oracle) must agree row-for-row with pyspark.ml KMeans
-    .transform on the SAME trained centroids — both are
-    nearest-centroid-by-Euclidean; this pins the frozen-quantizer
-    serve path to the trained path's semantics."""
+def test_ivf_build_assigned_matches_ivf_assign(emb):
+    """ivf_build's ``assigned`` frame (the Arrow kernel) must agree
+    row-for-row with ivf_assign (expression-only argmin, the serve
+    path under the q_ivf_knn oracle) on the returned centroids — one
+    nearest-centroid-by-Euclidean semantics for the trained and the
+    frozen-quantizer paths."""
     from fuserank_spark.pipeline_ext.simsearch import ivf_assign
 
     assigned, centroids = ivf_build(emb, dim=64, n_centroids=5, max_iter=5)
-    ml = {r["vec_id"]: r["centroid_id"] for r in assigned.select("vec_id", "centroid_id").collect()}
+    got = {r["vec_id"]: r["centroid_id"] for r in assigned.select("vec_id", "centroid_id").collect()}
     ex = {
         r["vec_id"]: r["centroid_id"]
         for r in ivf_assign(emb, centroids).select("vec_id", "centroid_id").collect()
     }
-    assert ml == ex
+    assert len(got) == emb.count()
+    assert got == ex
+
+
+def test_ivf_build_ignores_partitioning_and_row_order(emb):
+    """The hash-ordered sample is a function of content only: a raw
+    scan, one partition, eight partitions and reversed row order train
+    the same centroids and assign every row to the same cell."""
+    import numpy as np
+
+    variants = [emb, emb.repartition(1), emb.repartition(8), emb.orderBy(F.col("vec_id").desc())]
+    built = [ivf_build(df, dim=64, n_centroids=8, sample_rows=300, max_iter=5) for df in variants]
+    ref_cells = {r["vec_id"]: r["centroid_id"] for r in built[0][0].collect()}
+    for assigned, cents in built[1:]:
+        assert np.array_equal(cents, built[0][1])
+        assert {r["vec_id"]: r["centroid_id"] for r in assigned.collect()} == ref_cells
+
+
+def test_ivf_build_rejects_small_sample_and_null_vectors(spark, emb):
+    with pytest.raises(ValueError, match=r"5 rows < n_centroids=8"):
+        ivf_build(emb, dim=64, n_centroids=8, sample_rows=5)
+    with pytest.raises(ValueError, match=r"3 rows < n_centroids=8"):
+        ivf_build(emb.filter(F.col("vec_id") < 3), dim=64, n_centroids=8)
+    bad = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="NULL vector"):
+        ivf_build(bad, dim=2, n_centroids=2)
+
+
+def test_ivf_build_trains_in_one_job(spark):
+    """Training on a plain parquet scan is ONE Spark job (the
+    hash-ordered limit read into the driver); the returned assignment
+    stays lazy."""
+    sc = spark.sparkContext
+    scan = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    tracker = sc.statusTracker()
+    sc.setJobGroup("ivf-build-train", "ivf_build training")
+    try:
+        ivf_build(scan, dim=64, n_centroids=8, max_iter=8)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(tracker.getJobIdsForGroup("ivf-build-train")) == 1
 
 
 def test_ivf_assign_arrow_matches_expression(emb):

@@ -336,7 +336,7 @@ def main():
         def _ivf():
             assigned, cents = ivf_build(
                 encoded, dim=layout.dim, n_centroids=64, vec_col="vector",
-                sample_fraction=min(1.0, 50_000 / max(n_embedded, 1)), max_iter=10,
+                sample_rows=50_000, max_iter=10,
             )
             ivf_persist(assigned, ivf_dir)
             return len(cents)

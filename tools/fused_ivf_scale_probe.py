@@ -222,7 +222,7 @@ def main():
             t0 = time.time()
             _a, trained_cents = ivf_build(
                 enc, dim=layout.dim, n_centroids=n_cells, vec_col="vector",
-                sample_fraction=min(1.0, 50_000 / n), max_iter=10,
+                sample_rows=50_000, max_iter=10,
             )
             train_sec = round(time.time() - t0, 1)
             print(f"k-means {n_cells} cells trained in {train_sec}s", file=sys.stderr)
@@ -241,7 +241,7 @@ def main():
             t0 = time.time()
             _a, sph = ivf_build(
                 enc_unit, dim=layout.dim, n_centroids=n_cells, vec_col="vector",
-                sample_fraction=min(1.0, 50_000 / n), max_iter=10,
+                sample_rows=50_000, max_iter=10,
             )
             sph = sph / np.maximum(np.linalg.norm(sph, axis=1, keepdims=True), 1e-12)
             print(

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -126,9 +128,8 @@ def main():
 
     # IVF at volume: sampled training, partitioned index write, pruned probe
     t0 = time.time()
-    assigned, cents = ivf_build(bigv, dim=64, n_centroids=32, sample_fraction=0.02, max_iter=8)
-    idx_path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                            ".cache", "ivf_smoke")
+    assigned, cents = ivf_build(bigv, dim=64, n_centroids=32, sample_rows=10_000, max_iter=8)
+    idx_path = tempfile.mkdtemp(prefix="ivf_smoke_")
     ivf_persist(assigned, idx_path)
     t["ivf_build_persist"] = round(time.time() - t0, 2)
     queries = emb.filter(F.col("vec_id") < 8).select(
@@ -139,6 +140,7 @@ def main():
         "noop"
     ).mode("overwrite").save()
     t["ivf_serve8"] = round(time.time() - t0, 2)
+    shutil.rmtree(idx_path, ignore_errors=True)
     t["n_vectors"] = nv
 
     # semantic dedup at volume: reuse the trained coarse centroids as
@@ -529,8 +531,6 @@ def main():
     # incremental LSH dedup steady state: band-store from the 500k
     # corpus, then a 5k batch (half store-dups, half fresh) — the
     # grow-the-corpus ingest cost, one shuffle-free store scan
-    import shutil
-
     from fuserank_spark.pipeline_ext.dedup import (
         build_lsh_store,
         incremental_lsh_dedup,
