@@ -185,7 +185,7 @@ def fourier_expr(x: Column, num_harmonics: int, freq: float = math.pi) -> Column
     ``sequence(1,K)`` — constant-size expression tree, stays inside
     whole-stage codegen."""
     sig = fourier.sigma(np.arange(1, num_harmonics + 1), num_harmonics, freq)
-    sig_arr = lit_vector(sig)
+    sig_arr = F.expr(lit_vector(sig))
     xd = x.cast("double")
     pairs = F.transform(
         F.sequence(F.lit(1), F.lit(num_harmonics)),

@@ -181,7 +181,8 @@ _SPLIT_BYTES = 128 * 1024 * 1024
 def _scan_meta(sf_dir: str, table: str) -> tuple[int, int] | None:
     """(rows, estimated scan splits) for a parquet table, from file
     sizes + footers — zero Spark jobs. None when the path is not a
-    local parquet file/dir (callers then skip the fan-out)."""
+    local parquet file/dir (callers then skip the fan-out); a part
+    file whose footer cannot be read raises, naming the file."""
     import pyarrow.parquet as pq
 
     p = os.path.join(sf_dir, f"{table}.parquet")
@@ -200,8 +201,8 @@ def _scan_meta(sf_dir: str, table: str) -> tuple[int, int] | None:
     for f in files:
         try:
             rows += pq.read_metadata(f).num_rows
-        except Exception:
-            return None
+        except Exception as e:
+            raise ValueError(f"cannot read the parquet footer of {f}: {e}") from e
         splits += max(1, -(-os.path.getsize(f) // _SPLIT_BYTES))
     return rows, splits
 

@@ -22,7 +22,7 @@ from .encode import CorpusStats, VectorLayout, compute_stats
 from .fused_encode import embed_encode_fused
 from .kernels import probe_cells  # also imported from here by perfbench, tools, tests
 from .query import CompiledQuery, compile_query
-from .search import topk
+from .search import l2_norm_expr, sql_ident, topk
 from .session import persisted, session_cached
 
 EMB_DIM = 64
@@ -632,10 +632,7 @@ def build_fused_ivf_index(
     if q in ("kmeans", "spherical"):
         train_src = corpus.encoded
         if q == "spherical":
-            norm = F.sqrt(F.aggregate(
-                F.transform("vector", lambda x: x * x),
-                F.lit(0.0), lambda a, v: a + v,
-            ))
+            norm = F.expr(l2_norm_expr(sql_ident("vector")))
             # greatest(norm, 1e-12): a zero-norm fused vector would
             # otherwise yield NaN/Inf training rows that poison the
             # k-means centroids (the centroid renormalization below

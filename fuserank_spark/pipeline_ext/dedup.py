@@ -504,7 +504,7 @@ def embedding_neardup_pairs(
     - ``"auto"`` (default) — exact when ``max_id`` bounds the slice,
       else LSH. An unbounded corpus NEVER gets the quadratic join.
     """
-    from ..search import dot_expr, l2_norm_expr
+    from ..search import dot_expr, l2_norm_expr, sql_ident
 
     if method == "auto":
         method = "exact" if max_id is not None else "lsh"
@@ -524,9 +524,11 @@ def embedding_neardup_pairs(
             "the slice, or use method='lsh' (the scale path)"
         )
     df = df.filter(F.col(key_col) < max_id)
-    base = df.select(F.col(key_col), F.col(vec_col), l2_norm_expr(vec_col).alias("nrm"))
+    base = df.select(
+        F.col(key_col), F.col(vec_col), F.expr(l2_norm_expr(sql_ident(vec_col))).alias("nrm")
+    )
     a, b = base.alias("a"), base.alias("b")
-    dot = dot_expr(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+    dot = F.expr(dot_expr(sql_ident("a", vec_col), sql_ident("b", vec_col)))
     return (
         a.join(b, F.col(f"a.{key_col}") < F.col(f"b.{key_col}"))
         .select(
@@ -561,13 +563,13 @@ def embedding_neardup_pairs_lsh(
     buckets (mass near-dup clusters) degrade to star edges against
     the bucket minimum, same policy as lsh_candidate_pairs — linear
     in members, still connects the cluster for deduplicate()."""
-    from ..search import l2_norm_expr
+    from ..search import l2_norm_expr, sql_ident
     from .simsearch import lsh_buckets
 
     base = df.select(
         F.col(key_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        l2_norm_expr(vec_col).alias("nrm"),
+        F.expr(l2_norm_expr(sql_ident(vec_col))).alias("nrm"),
     )
     b = lsh_buckets(base, dim, n_planes=n_planes, n_tables=n_tables, vec_col="vec", seed=seed)
     return (
@@ -660,16 +662,10 @@ def _cosine_pairs_in_buckets(
 
 
 def _pair_cosine(a: str, b: str) -> Column:
-    dot = F.aggregate(
-        F.zip_with(
-            F.col(f"{a}.vec"),
-            F.col(f"{b}.vec"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-    return (dot / (F.col(f"{a}.nrm") * F.col(f"{b}.nrm"))).alias("cosine")
+    from ..search import dot_expr, sql_ident
+
+    dot = dot_expr(sql_ident(a, "vec"), sql_ident(b, "vec"))
+    return F.expr(f"{dot} / ({sql_ident(a, 'nrm')} * {sql_ident(b, 'nrm')})").alias("cosine")
 
 
 def semantic_dedup(
@@ -722,7 +718,7 @@ def semantic_dedup(
     Rows with a NULL ``vec_col`` cannot be compared and always
     survive (they are excluded from assignment and pair generation,
     and the final anti-join keeps them)."""
-    from ..search import l2_norm_expr
+    from ..search import l2_norm_expr, sql_ident
     from .simsearch import ivf_assign, ivf_assign_arrow
 
     if assign not in ("expr", "arrow"):
@@ -738,7 +734,7 @@ def semantic_dedup(
         F.col("__cell"),
         F.col(key_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        l2_norm_expr(vec_col).alias("nrm"),
+        F.expr(l2_norm_expr(sql_ident(vec_col))).alias("nrm"),
     )
     victims = (
         _cosine_pairs_in_buckets(base, ["__cell"], max_bucket_size)

@@ -52,7 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import lloyd, read_matrix
-from ..search import lit_vector
+from ..search import dot_expr, lit_vector, sql_ident, sql_lit
 from .simsearch import _check_positive, _merge_topk, _probe_join, _refine_topk
 from ..session import local_frame
 
@@ -256,26 +256,14 @@ def pq_encode(
             for v in cent:
                 csq += v * v
             cents.append(lit_vector(cent))
-            csqs.append(F.lit(csq))
-        cb = F.array(*cents)
-        csq_arr = F.array(*csqs)
-        sub = F.col(sub_name)
-        cands = F.transform(
-            cb,
-            lambda cv, i: F.struct(
-                (
-                    F.element_at(csq_arr, i + 1)
-                    - F.lit(2.0)
-                    * F.aggregate(
-                        F.zip_with(sub, cv, lambda x, y: x * y),
-                        F.lit(0.0).cast("double"),
-                        lambda a, x: a + x,
-                    )
-                ).alias("d"),
-                i.cast("int").alias("c"),
-            ),
-        )
-        code_cols.append(F.array_min(cands)["c"])
+            csqs.append(sql_lit(csq))
+        # argmin over the codewords cv of ||cv||² − 2·<sub, cv>, the
+        # lowest code on ties (array_min compares the (d, c) structs)
+        code_cols.append(F.expr(
+            f"array_min(transform(array({', '.join(cents)}), (cv, i) -> struct("
+            f"element_at(array({', '.join(csqs)}), i + 1) - 2.0D * {dot_expr(sql_ident(sub_name), 'cv')}"
+            " AS d, CAST(i AS INT) AS c))).c"
+        ))
     out = df.withColumn(out_col, F.array(*code_cols))
     drop = [f"__pq_sub{j}" for j in range(m)]
     if not keep_vec:
@@ -633,8 +621,8 @@ def sq_encode(
             )
         ),
     )
-    mn_arr = lit_vector(mins)
-    sc_arr = lit_vector(scales)
+    mn_arr = F.expr(lit_vector(mins))
+    sc_arr = F.expr(lit_vector(scales))
 
     def one(i):
         x = F.element_at(F.col(vec_col), i).cast("double")
@@ -842,7 +830,7 @@ def bq_encode(
             )
         ),
     )
-    thr_arr = lit_vector(thresholds)
+    thr_arr = F.expr(lit_vector(thresholds))
     pw_arr = F.array(
         *[F.lit(1 << j).cast("bigint") for j in range(BQ_WORD_BITS)]
     )
@@ -1138,12 +1126,7 @@ def pca_project(
     out = df.withColumn(tmp, F.col(vec_col).cast("array<double>"))
     dims = []
     for j in range(comps.shape[0]):
-        carr = lit_vector(comps[j])
-        dot = F.aggregate(
-            F.zip_with(F.col(tmp), carr, lambda x, y: x * y),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
+        dot = F.expr(dot_expr(sql_ident(tmp), lit_vector(comps[j])))
         d = dot - F.lit(float(offs[j]))
         if score_round is not None:
             # the explicit portable formula (CLAUDE.md rounding

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..kernels import assign_cells, lloyd, probe_cells, read_matrix, round_half_away
-from ..search import cosine_expr, lit_vector
+from ..search import cosine_expr, dot_expr, lit_vector, sql_ident, sql_lit
 from ..session import local_frame
 
 
@@ -81,7 +81,7 @@ def _refine_topk(
         .select(
             query_key,
             F.col(key_col),
-            cosine_expr(F.col(vec_col), F.col(query_vec)).alias("cosine"),
+            F.expr(cosine_expr(sql_ident(vec_col), sql_ident(query_vec))).alias("cosine"),
         )
     )
     return _merge_topk(rescored, k, query_key, key_col)
@@ -137,7 +137,7 @@ def brute_force_knn(
     scored = corpus.crossJoin(F.broadcast(queries)).select(
         F.col(query_key),
         F.col(key_col),
-        cosine_expr(F.col(vec_col), F.col(query_vec)).alias("cosine"),
+        F.expr(cosine_expr(sql_ident(vec_col), sql_ident(query_vec))).alias("cosine"),
     )
     return _merge_topk(scored, k, query_key, key_col)
 
@@ -148,21 +148,13 @@ def hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> np.ndarray:
     return h / np.linalg.norm(h, axis=1, keepdims=True)
 
 
-def lsh_bucket_expr(vec_col, planes: np.ndarray):
+def lsh_bucket_expr(vec_col: str, planes: np.ndarray):
     """Sign-of-projection bucket id: bit j = 1 iff v·h_j ≥ 0."""
-    bits = []
-    for j in range(planes.shape[0]):
-        proj = F.aggregate(
-            F.zip_with(
-                F.col(vec_col) if isinstance(vec_col, str) else vec_col,
-                lit_vector(planes[j]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    return sum(bits[1:], bits[0])
+    bits = [
+        f"CASE WHEN {dot_expr(sql_ident(vec_col), lit_vector(plane))} >= 0 THEN {sql_lit(1 << j)} ELSE 0 END"
+        for j, plane in enumerate(planes)
+    ]
+    return F.expr(" + ".join(bits))
 
 
 def lsh_buckets(
@@ -279,12 +271,7 @@ def ivf_assign(
     out = corpus.withColumn(tmp, F.col(vec_col).cast("array<double>"))
     structs = []
     for cid, c in enumerate(cents):
-        carr = lit_vector(c)
-        dot = F.aggregate(
-            F.zip_with(F.col(tmp), carr, lambda x, y: x * y),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
+        dot = F.expr(dot_expr(sql_ident(tmp), lit_vector(c)))
         if metric == "l2":
             csq = float(np.dot(c, c))
             score = F.lit(csq) - 2.0 * dot
@@ -405,7 +392,7 @@ def ivf_knn(
         scored = probed.select(
             F.col(query_key),
             F.col(key_col),
-            cosine_expr(F.col(vec_col), F.col(query_vec)).alias("cosine"),
+            F.expr(cosine_expr(sql_ident(vec_col), sql_ident(query_vec))).alias("cosine"),
         )
         return _merge_topk(scored, k, query_key, key_col)
 
@@ -452,7 +439,7 @@ def lsh_knn(
     joined = c.join(F.broadcast(q), "bucket").select(
         F.col(query_key),
         F.col(key_col),
-        cosine_expr(F.col(vec_col), F.col(query_vec)).alias("cosine"),
+        F.expr(cosine_expr(sql_ident(vec_col), sql_ident(query_vec))).alias("cosine"),
     )
     # per-(query, vec) dedup across probes, then two-phase merge —
     # the dedup groupBy is keyed on (query, vec) (uniform); the merge

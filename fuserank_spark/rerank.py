@@ -28,42 +28,38 @@ from __future__ import annotations
 import sys
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from . import fourier
 from . import schema as S
 from .encode import CorpusStats
+from .search import sql_ident, sql_lit
 from .transforms import FittedTransform
 
 _FLOAT_MAX = sys.float_info.max
 _FLOAT_MIN = sys.float_info.min
 
 
-def _rank_norm(
-    keys: list[Column], ascending: bool, partition: list[Column], null_is_nan: bool = False
-) -> Column:
+def _rank_norm(keys: list[str], ascending: bool, part: str, null_is_nan: bool = False) -> str:
     """W1: average-ties rank of the composite key, normalized to
     [−1,1]. With ``null_is_nan``, rows whose first key is NULL get a
     NULL result and are excluded from ranks (pandas na_option='keep'),
     but still count in n (len(result))."""
-    first = keys[0]
-    order = [
-        (k.asc_nulls_last() if ascending else k.desc_nulls_last()) for k in keys
-    ]
-    w = Window.partitionBy(*partition).orderBy(*order)
-    wt = Window.partitionBy(*partition, *keys)
-    wn = Window.partitionBy(*partition)
-    avg_rank = F.rank().over(w) + (F.count(F.lit(1)).over(wt) - 1) / 2.0
-    n = F.count(F.lit(1)).over(wn)
-    norm = F.when(n > 1, 2.0 * (avg_rank - 1.0) / (n - 1.0) - 1.0).otherwise(F.lit(0.0))
+    direction = "ASC" if ascending else "DESC"
+    order = ", ".join(f"{k} {direction} NULLS LAST" for k in keys)
+    avg_rank = (
+        f"(rank() OVER (PARTITION BY {part} ORDER BY {order})"
+        f" + (count(1) OVER (PARTITION BY {part}, {', '.join(keys)}) - 1) / 2.0D)"
+    )
+    n = f"count(1) OVER (PARTITION BY {part})"
+    norm = f"CASE WHEN {n} > 1 THEN ({avg_rank} - 1.0D) * 2.0D / ({n} - 1.0D) - 1.0D ELSE 0.0D END"
     if null_is_nan:
-        return F.when(first.isNull(), F.lit(None).cast("double")).otherwise(norm)
-    return norm
+        return f"(CASE WHEN {keys[0]} IS NULL THEN CAST(NULL AS DOUBLE) ELSE {norm} END)"
+    return f"({norm})"
 
 
-def _dense_delta(col: Column, value, cs, transform: FittedTransform | None, part) -> Column | None:
+def _dense_delta(col: str, value, cs, transform: FittedTransform | None, part: str) -> str | None:
     """W2-W4 (src/encode.py:209-231)."""
     if len(value) < 3:
         v = value[0] if len(value) >= 1 else None
@@ -77,7 +73,7 @@ def _dense_delta(col: Column, value, cs, transform: FittedTransform | None, part
         if tv == cs.min:  # lowest requested → descending rank
             return _rank_norm([col], False, part, null_is_nan=True)
         # centroid (W3): |v − col|, nulls → +max, rank desc (asc=negated)
-        key = F.coalesce(F.abs(F.lit(tv) - col.cast("double")), F.lit(_FLOAT_MAX))
+        key = f"coalesce(abs({sql_lit(tv)} - CAST({col} AS DOUBLE)), {sql_lit(_FLOAT_MAX)})"
         return _rank_norm([key], negated, part)
     lo, hi, negated = value
     # interval (W4): inside → float_min sentinel, nulls → float_max.
@@ -90,76 +86,77 @@ def _dense_delta(col: Column, value, cs, transform: FittedTransform | None, part
     thi = float(np.asarray(tr.apply_np(float(hi))))
     if tlo > thi:
         tlo, thi = thi, tlo
-    key = F.when(
-        col.cast("double").between(F.lit(tlo), F.lit(thi)), F.lit(_FLOAT_MIN)
-    ).otherwise(F.coalesce(col.cast("double"), F.lit(_FLOAT_MAX)))
+    x = f"CAST({col} AS DOUBLE)"
+    key = (
+        f"(CASE WHEN ({x} >= {sql_lit(tlo)}) AND ({x} <= {sql_lit(thi)}) THEN {sql_lit(_FLOAT_MIN)}"
+        f" ELSE coalesce({x}, {sql_lit(_FLOAT_MAX)}) END)"
+    )
     return _rank_norm([key], bool(negated), part)
 
 
-def _geo_delta(col: Column, value, part) -> Column:
+def _geo_delta(col: str, value, part: str) -> str:
     """W5 (src/encode.py:232-246): score products against the
     scale-and-shifted query point, farthest point computed WITHIN the
     result set (window max of (distance, point)), then rank."""
     lon, lat, negated = value
-    qcart = fourier.geo_to_cartesian((lon, lat))
-    plon = F.radians(col.getField("lon"))
-    plat = F.radians(col.getField("lat"))
-    cart = [
-        F.cos(plat) * F.cos(plon),
-        F.cos(plat) * F.sin(plon),
-        F.sin(plat),
-    ]
-    qlon, qlat = np.radians([lon, lat])
+    qcart = [sql_lit(float(q)) for q in fourier.geo_to_cartesian((lon, lat))]
+    qlon, qlat = (sql_lit(float(r)) for r in np.radians([lon, lat]))
+
+    def cartesian(p_lon: str, p_lat: str) -> list[str]:
+        return [
+            f"(cos({p_lat}) * cos({p_lon}))",
+            f"(cos({p_lat}) * sin({p_lon}))",
+            f"sin({p_lat})",
+        ]
+
+    def dot_q(cart: list[str]) -> str:
+        return "(" + " + ".join(f"{q} * {c}" for q, c in zip(qcart, cart)) + ")"
+
+    plon, plat = f"radians({col}.`lon`)", f"radians({col}.`lat`)"
     hav = (
-        F.pow(F.sin((plat - F.lit(qlat)) / 2), 2)
-        + F.cos(F.lit(qlat)) * F.cos(plat) * F.pow(F.sin((plon - F.lit(qlon)) / 2), 2)
+        f"power(sin(({plat} - {qlat}) / 2), 2)"
+        f" + cos({qlat}) * cos({plat}) * power(sin(({plon} - {qlon}) / 2), 2)"
     )
-    dist = 2 * 6371.0 * F.asin(F.sqrt(hav))
-    w = Window.partitionBy(*part)
-    far = F.max(
-        F.struct(
-            dist.alias("d"), col.getField("lon").alias("lon"), col.getField("lat").alias("lat")
-        )
-    ).over(w)
-    flon, flat = F.radians(far.getField("lon")), F.radians(far.getField("lat"))
-    far_cart = [F.cos(flat) * F.cos(flon), F.cos(flat) * F.sin(flon), F.sin(flat)]
+    dist = f"asin(sqrt({hav})) * {sql_lit(2 * 6371.0)}"  # the earth's diameter, km
+    far = (
+        f"(max(struct({dist} AS d, {col}.`lon` AS lon, {col}.`lat` AS lat))"
+        f" OVER (PARTITION BY {part}))"
+    )
     # scale_and_shift (src/encode.py:347-354) with the per-window farthest
-    dot_min = sum(F.lit(float(q)) * fc for q, fc in zip(qcart, far_cart))
-    scale = 2.0 / (1.0 - dot_min)
+    dot_min = dot_q(cartesian(f"radians({far}.lon)", f"radians({far}.lat)"))
+    scale = f"(2.0D / (1.0D - {dot_min}))"
     # product score = scale·(q·p) + (1 − scale·|q|²); |q|=1 on the unit sphere
-    qdotp = sum(F.lit(float(q)) * pc for q, pc in zip(qcart, cart))
-    score = scale * qdotp + (1.0 - scale)
-    score = F.when(col.isNull(), 1.0 - scale).otherwise(score)
+    score = (
+        f"(CASE WHEN {col} IS NULL THEN 1.0D - {scale}"
+        f" ELSE {scale} * {dot_q(cartesian(plon, plat))} + (1.0D - {scale}) END)"
+    )
     # negation ONLY flips the rank direction (src/encode.py:234); the
     # score itself is never negated in the re-rank path
     return _rank_norm([score], not negated, part)
 
 
-def _binary_delta(col: Column, value, part) -> Column:
+def _binary_delta(col: str, value, part: str) -> str:
     """W6 (src/encode.py:247-254): match > null > mismatch via a
     3-level key mirroring the reference's sentinel ordering (match =
     smallest " ", null = next "'", mismatch = raw value); rank
     descending maps smallest → +1."""
-    level = (
-        F.when(col == F.lit(value), 0).when(col.isNull(), 1).otherwise(2)
-    )
+    level = f"(CASE WHEN {col} = {sql_lit(value)} THEN 0 WHEN {col} IS NULL THEN 1 ELSE 2 END)"
     return _rank_norm([level, col], False, part)
 
 
-def _sparse_delta(col: Column, value, part) -> Column:
+def _sparse_delta(col: str, value, part: str) -> str:
     """W7 (src/encode.py:255-264): selected > null > others, guarded
     by "any selected value present in the result set"."""
     selection, negated = value
     sel = list(selection)
-    level = F.when(col.isin(sel), 0).when(col.isNull(), 1).otherwise(2)
+    selected = f"{col} IN ({', '.join(sql_lit(v) for v in sel)})" if sel else "false"
+    level = f"(CASE WHEN {selected} THEN 0 WHEN {col} IS NULL THEN 1 ELSE 2 END)"
     # all selected values collapse to one sentinel (" ") in the
     # reference → they tie; only mismatches rank by raw value
-    raw = F.when(level == 2, col)
+    raw = f"(CASE WHEN {level} = 2 THEN {col} END)"
     delta = _rank_norm([level, raw], bool(negated), part)
-    guard = F.max(F.when(col.isin(sel), 1).otherwise(0)).over(
-        Window.partitionBy(*part)
-    )
-    return F.when(guard == 1, delta).otherwise(F.lit(0.0))
+    guard = f"max(CASE WHEN {selected} THEN 1 ELSE 0 END) OVER (PARTITION BY {part})"
+    return f"(CASE WHEN {guard} = 1 THEN {delta} ELSE 0.0D END)"
 
 
 def rerank(
@@ -176,18 +173,21 @@ def rerank(
     ``result`` must carry ``relevance`` plus the (transformed) aux
     columns; pass ``query_id_col`` when re-ranking a batch of queries
     in one plan.
+
+    The whole total is ONE SQL fragment in one ``withColumn``: its
+    construction costs a few JVM calls whatever the modality count.
     """
     if relevance_col not in result.columns:
         raise ValueError(f"result must contain the {relevance_col!r} column")
     transformation_schema = transformation_schema or {}
-    part = [F.col(query_id_col)] if query_id_col else [F.lit(1)]
+    part = sql_ident(query_id_col) if query_id_col else "1"
 
-    total = F.col(relevance_col)
+    total = sql_ident(relevance_col)
     for column, (value, weight) in aux_data.items():
         if value in (None, []) or column not in aux_encoding_schema:
             continue
         kind = aux_encoding_schema[column]
-        col = F.col(column)
+        col = sql_ident(column)
         if kind == S.DENSE:
             delta = _dense_delta(col, value, stats.columns[column],
                                  transformation_schema.get(column), part)
@@ -200,5 +200,5 @@ def rerank(
         else:
             continue
         if delta is not None:
-            total = total + delta * F.lit(float(weight))
-    return result.withColumn(relevance_col, total)
+            total = f"{total} + {delta} * {sql_lit(float(weight))}"
+    return result.withColumn(relevance_col, F.expr(total))

@@ -291,3 +291,28 @@ def test_local_frame_rejects_malformed_input(spark, rows, schema, match):
 
     with pytest.raises(ValueError, match=match):
         local_frame(spark, rows, schema)
+
+
+def test_scan_meta_raises_on_a_truncated_part(tmp_path):
+    """A part file whose footer cannot be read fails the footer sizing
+    loudly, naming the file; it does not silently skip the fan-out. A
+    path that is not local parquet still returns None."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fuserank_spark.ext_queries import _scan_meta
+
+    table = tmp_path / "docs.parquet"
+    table.mkdir()
+    for i in range(2):
+        pq.write_table(pa.table({"x": list(range(10))}), table / f"part-{i}.parquet")
+    assert _scan_meta(str(tmp_path), "docs") == (20, 2)
+    bad = table / "part-1.parquet"
+    data = bad.read_bytes()
+    bad.write_bytes(data[: len(data) // 2])
+    with pytest.raises(ValueError, match="part-1.parquet"):
+        _scan_meta(str(tmp_path), "docs")
+    assert _scan_meta(str(tmp_path), "missing") is None
+    assert _scan_meta("s3://bucket/" + os.path.basename(str(tmp_path)), "docs") is None

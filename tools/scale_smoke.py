@@ -436,9 +436,7 @@ def main():
     from fuserank_spark.encode import save_encoder_meta
     from fuserank_spark.flagship import fused_ivf_serve_persisted
 
-    cache_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache"
-    )
+    cache_dir = tempfile.mkdtemp(prefix="fused_ivf_smoke_")
     fidx_path = os.path.join(cache_dir, "fused_ivf_smoke")
     fmeta_path = os.path.join(cache_dir, "fused_ivf_smoke_meta.json")
     t0 = time.time()
@@ -457,6 +455,7 @@ def main():
         },
     ).collect()
     t["fused_ivf_serve_persisted"] = round(time.time() - t0, 2)
+    shutil.rmtree(cache_dir, ignore_errors=True)
 
     # round-6 third-session ops at volume ---------------------------------
 
@@ -536,11 +535,8 @@ def main():
         incremental_lsh_dedup,
     )
 
-    lsh_store = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".cache", "lsh_store_smoke",
-    )
-    shutil.rmtree(lsh_store, ignore_errors=True)
+    # a fresh temp dir per run: two runs on one host never share a store
+    lsh_store = tempfile.mkdtemp(prefix="lsh_store_smoke_")
     t0 = time.time()
     build_lsh_store(
         big.select(F.col("row_id").alias("doc_id"), "text"), lsh_store
@@ -567,6 +563,7 @@ def main():
     ).count()
     t["incremental_lsh_batch"] = round(time.time() - t0, 2)
     t["n_incremental_survivors"] = n_surv
+    shutil.rmtree(lsh_store, ignore_errors=True)
 
     # round-6 fourth-session ops at volume --------------------------------
 
