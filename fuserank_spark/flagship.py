@@ -62,8 +62,10 @@ def build_corpus(
     # a single core, a local-mode artifact (at cluster scale the source
     # arrives in many splits). Repartition to a SIZE-DERIVED count
     # (~1250 rows/partition, capped at default parallelism): a flat
-    # 32-way split at 5k rows made every batch serve pay 32 tasks ×
-    # 3 stages of scheduling and grew the top-k survivor shuffle 32×
+    # 32-way split at 5k rows made every batch serve start 32 Python
+    # tasks × 3 stages, each then paying its worker's per-task zip
+    # re-read (0.1+ s before the UDF starts; session.py now skips it
+    # for unchanged archives), and grew the top-k survivor shuffle 32×
     # (measured r11 A/B at sf0.1: topk_batch32 0.99 s at 32p vs 0.69 s
     # at 4p vs noisy 0.56–1.75 s at 1p). Outputs are bit-identical
     # under any split (per-row deterministic embed/encode, fold-stable

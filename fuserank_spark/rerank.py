@@ -48,10 +48,11 @@ def _rank_norm(keys: list[str], ascending: bool, part: str, null_is_nan: bool = 
     but still count in n (len(result))."""
     direction = "ASC" if ascending else "DESC"
     order = ", ".join(f"{k} {direction} NULLS LAST" for k in keys)
-    avg_rank = (
-        f"(rank() OVER (PARTITION BY {part} ORDER BY {order})"
-        f" + (count(1) OVER (PARTITION BY {part}, {', '.join(keys)}) - 1) / 2.0D)"
-    )
+    # rank() is the first peer's position and the ordered count (the
+    # default RANGE frame takes in every peer) the last one's: one
+    # window spec, whose mean is the average-ties rank
+    ordered = f"OVER (PARTITION BY {part} ORDER BY {order})"
+    avg_rank = f"((rank() {ordered} + count(1) {ordered}) / 2.0D)"
     n = f"count(1) OVER (PARTITION BY {part})"
     norm = f"CASE WHEN {n} > 1 THEN ({avg_rank} - 1.0D) * 2.0D / ({n} - 1.0D) - 1.0D ELSE 0.0D END"
     if null_is_nan:

@@ -425,3 +425,26 @@ def test_corpus_build_repartition_guard(spark, tmp_path):
     docs.coalesce(1).write.parquet(single + "/documents.parquet")
     p1 = plan_str(build_corpus(spark, single).encoded)
     assert "RoundRobinPartitioning" in p1
+
+
+def test_rerank_one_window_spec_per_modality(spark):
+    """Each rank-normalized modality sorts once: its average-ties rank
+    is (rank() + ordered count(1)) / 2 over ONE ordered window spec,
+    and the partition size n is one more spec that every modality
+    shares. Two modalities → three Window operators."""
+    from fuserank_spark import schema as S
+    from fuserank_spark.encode import ColumnStats, CorpusStats
+    from fuserank_spark.rerank import rerank
+
+    sdf = spark.createDataFrame(
+        [(0, 0.5, 10.0, "rome"), (1, 0.4, 25.0, "oslo"), (2, 0.3, 25.0, None)],
+        "row_id bigint, relevance double, price double, city string",
+    )
+    stats = CorpusStats(
+        columns={"price": ColumnStats(S.DENSE, min=5.0, max=55.0), "city": ColumnStats(S.SPARSE)},
+        n_rows=0,
+    )
+    aux = {"price": ((55.0,), 1.0), "city": ((["rome"], False), 2.0)}
+    for query_id_col, df in ((None, sdf), ("query_id", sdf.withColumn("query_id", F.lit(7)))):
+        out = rerank(df, aux, {"price": S.DENSE, "city": S.SPARSE}, stats, query_id_col=query_id_col)
+        assert out._jdf.queryExecution().executedPlan().toString().count("Window [") == 3

@@ -32,10 +32,12 @@ run omits. Prints one JSON line per stage and a final summary line.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 import urllib.request
 
@@ -118,13 +120,13 @@ def main():
     from fuserank_spark.pipeline_ext.profile import dataset_card
     from fuserank_spark.partitioning import write_training_shards
 
-    # CRAWL_BENCH_CACHE: override for concurrent A/B arms — each run
-    # rmtree's and rewrites its fixture dir, so two arms sharing the
-    # default path would race
-    cache = os.environ.get(
-        "CRAWL_BENCH_CACHE",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache"),
-    )
+    # CRAWL_BENCH_CACHE pins the fixture dir (each run rmtree's and
+    # rewrites it); unset, every run gets its own temp dir, removed at
+    # exit, so two runs on one host never share a fixture
+    cache = os.environ.get("CRAWL_BENCH_CACHE")
+    if cache is None:
+        cache = tempfile.mkdtemp(prefix="crawl_bench_")
+        atexit.register(shutil.rmtree, cache, ignore_errors=True)
     warc_dir = os.path.join(cache, "crawl_bench_warc")
     shard_dir = os.path.join(cache, "crawl_bench_shards")
     shutil.rmtree(warc_dir, ignore_errors=True)
