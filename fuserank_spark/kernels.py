@@ -18,11 +18,16 @@ from __future__ import annotations
 import numpy as np
 
 
-def read_matrix(rb, col: str, dim: int) -> np.ndarray:
+def read_matrix(rb, col: str, dim: int, dim_source: str | None = None) -> np.ndarray:
     """The ``(num_rows, dim)`` float64 matrix of list column ``col`` of
     one Arrow RecordBatch, read as ONE flat values buffer — no per-row
     Python objects (the former mapInPandas scans spent ~790 ms per
-    batch in ``np.stack`` over object lists against a 2.4 ms matmul)."""
+    batch in ``np.stack`` over object lists against a 2.4 ms matmul).
+
+    ``dim_source`` names where ``dim`` came from (the query side of a
+    scan): when every row of the batch has one width other than
+    ``dim``, the error names it beside ``col``, since a uniform
+    mismatch is the query's as often as the column's."""
     arr = rb.column(col)
     flat = arr.flatten()  # honours slice offsets; NULL rows add no values
     if arr.null_count or flat.null_count:
@@ -32,6 +37,11 @@ def read_matrix(rb, col: str, dim: int) -> np.ndarray:
     if hasattr(arr, "offsets"):
         widths = np.diff(arr.offsets.to_numpy())
         if widths.size and not (widths == dim).all():
+            if dim_source is not None and (widths == widths[0]).all():
+                raise ValueError(
+                    f"{dim_source} is {dim}-dim, but every vector of column {col!r} "
+                    f"in this batch is {int(widths[0])}-dim"
+                )
             raise ValueError(
                 f"vector length != {dim} in column {col!r}: widths {sorted(set(widths.tolist()))}"
             )
@@ -113,19 +123,27 @@ def probe_cells(cents, qvec, nprobe: int) -> list[int]:
     return [int(c) for c in np.argsort(-ips, kind="stable")[:nprobe]]
 
 
-def partition_topk(batches, score, qids, k: int, key_col: str, score_col: str, digits: int | None = None):
+def partition_topk(
+    batches, score, qids, k: int, key_col: str, query_col: str, score_col: str,
+    payload: list[str], digits: int | None = None,
+):
     """Exact top-``k`` of every query over one task's Arrow batches,
-    emitted as ONE RecordBatch ``(query_id, key_col, score_col)``.
+    emitted as ONE RecordBatch ``(key_col, query_col, score_col,
+    *payload)``: each survivor carries its own row's ``payload``
+    columns, so no caller joins the hits back to the corpus.
 
-    ``score(rb)`` maps a non-empty batch to ``(keys, S)`` — the row
-    keys and the raw ``(Q, n)`` score matrix, one row per query in
-    ``qids`` order — or to None when the batch keeps no rows. Rows
+    ``score(rb)`` maps a non-empty batch to ``(rows, S)`` — ``rows``
+    the positions in ``rb`` of the scored rows (None: every row) and
+    ``S`` their raw ``(Q, len(rows))`` score matrix, one row per query
+    in ``qids`` order — or to None when the batch keeps no rows. Rows
     order by (score rounded half-away at ``digits``, desc; key, asc):
     rounding before the cut lets ulp-tied rows fall to the key
     tie-break, as in the caller's final ``F.round`` ordering. On unique
     keys that order is total, so each batch's cut folds into the
-    running top-k at once and the state stays ``Q·k`` rows whatever
-    the batch count. Emitted scores stay raw."""
+    running top-k at once. The rows any query keeps are taken out of
+    their batch (Arrow ``take``) as it folds and re-taken down to the
+    live ones, so the state stays ``Q·k`` rows whatever the batch
+    count. Emitted scores stay raw."""
     import pyarrow as pa
 
     def cut(keys: np.ndarray, rk: np.ndarray) -> np.ndarray:
@@ -138,32 +156,47 @@ def partition_topk(batches, score, qids, k: int, key_col: str, score_col: str, d
             return np.flatnonzero(m)[np.lexsort((keys[m], -rk[m]))[:k]]
         return np.lexsort((keys, -rk))[:k]
 
-    best: list[tuple | None] = [None] * len(qids)  # per query (keys, scores, rank keys)
-    key_type = None
+    cols = [key_col, *payload]
+    # per query (keys, scores, rank keys, positions in `kept`)
+    best: list[tuple | None] = [None] * len(qids)
+    kept = None  # pa.Table of `cols`: every row some query keeps
     for rb in batches:
         if rb.num_rows == 0:
             continue
-        key_type = rb.column(key_col).type
         got = score(rb)
         if got is None:
             continue
-        keys, S = got
+        rows, S = got
+        keys = rb.column(key_col).to_numpy(zero_copy_only=False)
+        if rows is not None:
+            keys = keys[rows]
         RK = S if digits is None else round_half_away(S, digits)  # one pass over all queries
-        for j in range(len(qids)):
-            sel = cut(keys, RK[j])
-            part = (keys[sel], S[j, sel], RK[j, sel])
+        sels = [cut(keys, RK[j]) for j in range(len(qids))]
+        new = np.unique(np.concatenate(sels))
+        taken = pa.Table.from_batches([rb.select(cols).take(new if rows is None else rows[new])])
+        base = 0 if kept is None else kept.num_rows
+        for j, sel in enumerate(sels):
+            part = (keys[sel], S[j, sel], RK[j, sel], base + np.searchsorted(new, sel))
             if best[j] is not None:
                 part = tuple(np.concatenate(p) for p in zip(best[j], part))
                 part = tuple(p[cut(part[0], part[2])] for p in part)
             best[j] = part
-    kept = [(q, b) for q, b in zip(qids, best) if b is not None]
-    if not kept:
+        if kept is None:
+            kept = taken
+            continue
+        live = np.unique(np.concatenate([b[3] for b in best if b is not None]))
+        kept = pa.concat_tables([kept, taken]).take(live)
+        best = [None if b is None else (*b[:3], np.searchsorted(live, b[3])) for b in best]
+    have = [(q, b) for q, b in zip(qids, best) if b is not None]
+    if not have:
         return
+    out = kept.take(np.concatenate([b[3] for _, b in have])).combine_chunks()
     yield pa.RecordBatch.from_arrays(
         [
-            pa.array(np.repeat([int(q) for q, _ in kept], [len(b[0]) for _, b in kept]), type=pa.int64()),
-            pa.array(np.concatenate([b[0] for _, b in kept]), type=key_type),
-            pa.array(np.concatenate([b[1] for _, b in kept]), type=pa.float64()),
+            out.column(key_col).chunk(0),
+            pa.array(np.repeat([int(q) for q, _ in have], [len(b[0]) for _, b in have]), type=pa.int64()),
+            pa.array(np.concatenate([b[1] for _, b in have]), type=pa.float64()),
+            *(out.column(c).chunk(0) for c in payload),
         ],
-        names=["query_id", key_col, score_col],
+        names=[key_col, query_col, score_col, *payload],
     )

@@ -10,11 +10,15 @@ brute-force IP scan and is the exact-search baseline at any scale.
 Batch of queries: the Arrow scan keeps a per-(query, corpus-partition)
 local top-k, then one global top-k window merges the k·P survivors —
 so the shuffle moves O(k·P·Q) rows, not O(N·Q) (SURVEY T1 batch note).
+The survivors are hashed on the query id into min(Q,
+defaultParallelism) partitions for that merge: two jobs per batch.
 
 The Arrow scan (``_arrow_partial_topk``: one numpy matmul plus a
 partition-local top-k per Arrow batch) serves only query batches and
 the single-query in-scan IVF assign; a lone query pays less for the
-JVM heap than for the scan's Python stage.
+JVM heap than for the scan's Python stage. Each survivor leaves the
+scan with its own corpus row, so neither caller joins its hits back
+to the corpus.
 """
 
 from __future__ import annotations
@@ -24,7 +28,6 @@ import math
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .kernels import assign_cells, partition_topk, read_matrix
 
@@ -160,9 +163,9 @@ def topk(
     merge) with no Python stage. It measured faster than an Arrow scan
     plus join-back at every size from 5k to 500k fused rows (PARITY.md
     T1). Output: the frame's columns followed by ``score_col`` (with
-    ``assign_filter``, row_id comes first: the hits join back on it).
-    A NULL row, a NULL element or a vector of another width than the
-    query raises on both routes, naming ``vector_col``.
+    ``assign_filter``, row_id comes first). A NULL row, a NULL element
+    or a vector of another width than the query raises on both routes,
+    naming ``vector_col``.
 
     Ties break deterministically on ``tiebreak_col`` (default row_id
     when present) so results are stable across partition scan orders.
@@ -183,9 +186,11 @@ def topk(
     aggregates (interpreted, C·d literal-array ops per row) were
     evaluated TWICE per query and the C×d literal matrix bloated
     every plan. The scan's per-partition heap pre-selects on the
-    rounded score too (ADVICE r7/r8), and its hits join back on the
-    key, so it needs a UNIQUE row_id tie-break (the engine's row_id
-    contract, §1.4) and raises otherwise."""
+    rounded score too (ADVICE r7/r8), and its fold across batches
+    needs a UNIQUE row_id tie-break (the engine's row_id contract,
+    §1.4), so it raises otherwise. Each survivor carries its whole
+    row, vector included, out of the scan; the k best are ordered and
+    limited directly (one TakeOrderedAndProject job, no join-back)."""
     if predicate is not None:
         df = df.filter(predicate)
     tb = tiebreak_col or ("row_id" if "row_id" in df.columns else None)
@@ -194,15 +199,17 @@ def topk(
         return _jvm_topk(df, sql_ident(vector_col), vector_col, query_vector, k, score_col, order)
     if tb != "row_id":
         raise ValueError(
-            "assign_filter runs the Arrow scan, which joins hits back on a "
-            "unique row_id tie-break; assign via simsearch.ivf_assign + a "
-            "predicate instead"
+            "assign_filter runs the Arrow scan, whose per-partition top-k "
+            "folds on a unique row_id tie-break; assign via "
+            "simsearch.ivf_assign + a predicate instead"
         )
+    payload = [c for c in df.columns if c != tb]
     hits = _arrow_partial_topk(
         df, np.asarray([query_vector], dtype="float64"), [0], k, vector_col, tb, score_col,
+        query_col="query_id", payload=payload, dim_source="the query vector",
         score_round=score_round, assign_filter=assign_filter,
-    ).drop("query_id")
-    return df.join(hits, tb).orderBy(*order).limit(k)
+    )
+    return hits.orderBy(*order).limit(k).select(*map(sql_ident, [tb, *payload, score_col]))
 
 
 def _arrow_partial_topk(
@@ -213,6 +220,10 @@ def _arrow_partial_topk(
     vector_col: str,
     key_col: str,
     score_col: str,
+    *,
+    query_col: str,
+    payload: list[str],
+    dim_source: str,
     score_round: int | None = None,
     assign_filter: tuple | None = None,
 ) -> DataFrame:
@@ -220,7 +231,13 @@ def _arrow_partial_topk(
     reads its Arrow batch's vector column as one flat float64 buffer
     (kernels.read_matrix), multiplies it against ALL queries at once —
     one (Q, n) matmul — and kernels.partition_topk emits only its local
-    top-k per query, so k·P·Q tiny rows leave the scan.
+    top-k per query, so k·P·Q rows leave the scan. Each is
+    ``(key_col, query_col, score_col, *payload)``: the survivor's own
+    ``payload`` columns of ``df`` ride with it (Arrow ``take``), so no
+    caller joins hits back to the corpus. A payload column Arrow cannot
+    carry, or one named ``query_col`` or ``score_col``, raises
+    ``ValueError`` naming it. ``dim_source`` names the queries in the
+    error a corpus of another width raises (kernels.read_matrix).
 
     ``score_round`` makes the partition-local cut SELECT on the
     rounded score (round-before-rank inside the heap, ADVICE r7):
@@ -237,13 +254,26 @@ def _arrow_partial_topk(
     assignment parity is pinned on the real corpus by
     tests/test_fused_search.py::test_fused_ivf_arrow_assign_matches_expression."""
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    key_type = next(f.dataType for f in df.schema.fields if f.name == key_col)
+    fields = {f.name: f for f in df.schema.fields}
+    for name in (query_col, score_col):
+        if name == key_col or name in payload:
+            raise ValueError(f"the corpus already has a column named {name!r}, which the top-k emits")
+    for name in (key_col, *payload):
+        try:
+            to_arrow_type(fields[name].dataType)
+        except TypeError as e:  # pyspark's UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION
+            raise ValueError(
+                f"column {name!r} ({fields[name].dataType.simpleString()}) cannot ride "
+                "through the Arrow top-k scan; drop or cast it first"
+            ) from e
     out_schema = T.StructType(
         [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(key_col, key_type),
+            fields[key_col],
+            T.StructField(query_col, T.LongType()),
             T.StructField(score_col, T.DoubleType()),
+            *(fields[c] for c in payload),
         ]
     )
     qm = np.ascontiguousarray(qmat, dtype="float64")
@@ -261,21 +291,21 @@ def _arrow_partial_topk(
         af_probed = np.asarray(sorted({int(c) for c in af_probed}), dtype="int64")
 
     def _score(rb):
-        M = read_matrix(rb, vector_col, dim)
-        keys = rb.column(key_col).to_numpy(zero_copy_only=False)
+        M = read_matrix(rb, vector_col, dim, dim_source)
         if assign_filter is not None:
             # keep only probed rows BEFORE scoring (the IVF prune)
-            kept = np.isin(assign_cells(M, af_cents, af_metric, af_round), af_probed)
-            if not kept.any():
+            rows = np.flatnonzero(np.isin(assign_cells(M, af_cents, af_metric, af_round), af_probed))
+            if not rows.size:
                 return None
-            if not kept.all():
-                M, keys = M[kept], keys[kept]
+            if rows.size < rb.num_rows:
+                return rows, qm @ M[rows].T
         # (Q, n): each query's score row is contiguous for the cut
-        return keys, qm @ M.T
+        return None, qm @ M.T
 
-    return df.select(key_col, vector_col).mapInArrow(
+    scanned = dict.fromkeys([key_col, vector_col, *payload])
+    return df.select(*map(sql_ident, scanned)).mapInArrow(
         lambda batches: partition_topk(
-            batches, _score, qids, k, key_col, score_col, score_round
+            batches, _score, qids, k, key_col, query_col, score_col, payload, score_round
         ),
         schema=out_schema,
     )
@@ -333,25 +363,48 @@ def topk_batch(
 
     One Arrow scan: per corpus partition, one numpy (Q×d)·(d×n) matmul
     scores every query in a single pass and kernels.partition_topk
-    keeps each query's local top-k; only those k·P·Q tiny survivor
-    rows shuffle for the global merge window (score DESC, ``key_col``
-    ascending), so the shuffle volume is independent of corpus size.
-    The hits join back to the corpus columns on ``key_col``.
+    keeps each query's local top-k, each survivor carrying its corpus
+    row. Only those k·P·Q survivor rows shuffle, hashed on
+    ``query_id_col`` into ``min(Q, defaultParallelism)`` partitions,
+    for the global merge window (score DESC, ``key_col`` ascending):
+    two jobs, and the shuffle volume is independent of corpus size.
+    Output: ``key_col``, ``query_id_col``, ``score_col``, then the
+    corpus columns other than ``vector_col`` — there is no join-back.
+
+    The queries are checked on the driver: an empty frame returns an
+    empty result; a NULL or ragged ``query_vec_col`` raises
+    ``ValueError``, as does a corpus column named ``query_id_col`` or
+    ``score_col``. A query width other than the corpus's raises in
+    the scan, naming ``query_vec_col``.
     """
     qrows = queries.select(query_id_col, query_vec_col).collect()
+    vecs = [r[query_vec_col] for r in qrows]
+    if any(v is None or None in v for v in vecs):
+        raise ValueError(f"topk_batch: NULL query vector in column {query_vec_col!r} (row or element)")
+    widths = sorted({len(v) for v in vecs})
+    if len(widths) > 1:
+        raise ValueError(f"topk_batch: query vectors in column {query_vec_col!r} have widths {widths}")
     qids = [r[query_id_col] for r in qrows]
-    qmat = np.asarray([r[query_vec_col] for r in qrows], dtype="float64")
+    qmat = np.asarray(vecs, dtype="float64").reshape(len(vecs), widths[0] if widths else 0)
     survivors = _arrow_partial_topk(
-        products, qmat, qids, k, vector_col, key_col, score_col
+        products, qmat, qids, k, vector_col, key_col, score_col,
+        query_col=query_id_col,
+        payload=[c for c in products.columns if c not in (key_col, vector_col)],
+        dim_source=f"query column {query_vec_col!r}",
     )
-    w_global = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.col(key_col))
-    hits = (
-        survivors.withColumn("__r", F.row_number().over(w_global))
-        .filter(F.col("__r") <= k)
+    if not qids:
+        return survivors.limit(0)  # planned as an empty relation: no job
+    merge = (
+        f"row_number() OVER (PARTITION BY {sql_ident(query_id_col)} "
+        f"ORDER BY {sql_ident(score_col)} DESC, {sql_ident(key_col)})"
+    )
+    width = min(len(qids), products.sparkSession.sparkContext.defaultParallelism)
+    return (
+        survivors.repartition(width, sql_ident(query_id_col))
+        .withColumn("__r", F.expr(merge))
+        .filter(f"__r <= {int(k)}")
         .drop("__r")
-        .withColumnRenamed("query_id", query_id_col)
     )
-    return hits.join(products.drop(vector_col), key_col)
 
 
 def score_breakdown(

@@ -19,6 +19,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _process_start() -> float:
+    """This process's start as a Unix time, rounded down (Linux
+    ``/proc``); ``-inf`` where it cannot be read."""
+    try:
+        with open("/proc/self/stat") as f:
+            ticks = int(f.read().rsplit(")", 1)[1].split()[19])  # field 22, starttime
+        with open("/proc/stat") as f:
+            boot = next(int(ln.split()[1]) for ln in f if ln.startswith("btime "))
+        return boot + ticks / os.sysconf("SC_CLK_TCK")
+    except (OSError, ValueError, IndexError, StopIteration):
+        return float("-inf")
+
+
+def _archive_stamp(archive: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
 def _reread_zips_only_on_change() -> None:
     """Make ``zipimporter.invalidate_caches`` re-read an archive only
     when it changed. pyspark's worker calls ``importlib.invalidate_caches()``
@@ -28,6 +49,14 @@ def _reread_zips_only_on_change() -> None:
     before every UDF starts. The stamp ``(st_mtime_ns, st_size)`` is
     kept per importer, not per archive: importers sharing an archive
     each hold their own directory dict. A failed stat always re-reads.
+
+    Installing stamps the importers already cached whose archive was
+    last modified before this process started (less 2 s of clock
+    slack): every one of them read its directory since then — in a
+    worker, the first task's ``invalidate_caches()`` has just done
+    so — so the first guarded call re-reads none of them. An archive
+    modified since the start stays unstamped and is re-read.
+
     Runs at import, so every Python worker that unpickles a package
     function installs it; installing twice does nothing, and 3.13+
     (which only drops the cache entry) is left alone."""
@@ -36,17 +65,20 @@ def _reread_zips_only_on_change() -> None:
         return
 
     def invalidate_caches(self):
-        try:
-            st = os.stat(self.archive)
-            stamp = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            stamp = None
+        stamp = _archive_stamp(self.archive)
         if stamp is None or stamp != getattr(self, "_read_stamp", None):
             original(self)
             self._read_stamp = stamp
 
     invalidate_caches._on_change = True
+    invalidate_caches.__wrapped__ = original
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+    before = (_process_start() - 2.0) * 1e9
+    for importer in list(sys.path_importer_cache.values()):
+        if isinstance(importer, zipimport.zipimporter):
+            stamp = _archive_stamp(importer.archive)
+            if stamp is not None and stamp[0] < before:
+                importer._read_stamp = stamp
 
 
 _reread_zips_only_on_change()

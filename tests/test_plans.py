@@ -124,8 +124,10 @@ def test_fused_search_arrow_scan(spark):
 
 
 def test_topk_batch_no_corpus_shuffle(spark):
-    """Batched top-k: the corpus side must not shuffle before the
-    local-rank phase; queries arrive via broadcast."""
+    """Batched top-k: the Arrow scan reads the corpus with no exchange
+    below it (the queries ride in the scan's closure), its survivors
+    shuffle ONCE, hashed on query_id, for the merge window, and no
+    join follows: each survivor carries its corpus row."""
     from fuserank_spark.search import topk_batch
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
@@ -134,11 +136,16 @@ def test_topk_batch_no_corpus_shuffle(spark):
     qdf = spark.createDataFrame(
         [(0, [0.1] * 64), (1, [0.2] * 64)], "query_id int, qvec array<double>"
     )
-    p = plan_str(topk_batch(emb, qdf, k=5))
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
-    # corpus rows shuffle only AFTER local top-k pruning: the first
-    # exchange above the scan must be hashpartitioning on (query, bucket)
-    assert p.count("Exchange hashpartitioning") <= 2
+    tree = [ln.strip(" +-:") for ln in plan_str(topk_batch(emb, qdf, k=5), "simple").splitlines()]
+    ops = [ln for ln in tree if ln and not ln.startswith("==")]
+    assert "Join" not in "\n".join(ops)
+    exchanges = [i for i, ln in enumerate(ops) if ln.startswith("Exchange")]
+    assert len(exchanges) == 1 and ops[exchanges[0]].startswith("Exchange hashpartitioning(query_id#")
+    scan = next(i for i, ln in enumerate(ops) if ln.startswith("MapInArrow"))
+    assert exchanges[0] == scan - 1
+    below = ops[scan + 1 :]
+    assert below[-1].startswith("FileScan parquet")
+    assert all(ln.startswith("Project") for ln in below[:-1]), below
 
 
 def test_neardup_lsh_plan_has_no_join(spark):

@@ -69,6 +69,40 @@ def test_unchanged_archive_is_not_reread(tmp_path):
             sys.modules.pop(name, None)
 
 
+def test_install_stamps_archives_older_than_the_process(tmp_path, monkeypatch):
+    """Installing the guard stamps the importers already cached whose
+    archive predates the process: the first guarded call skips them.
+    An archive modified after the process started is re-read."""
+    import os
+
+    from fuserank_spark import session
+
+    unguarded = getattr(zipimport.zipimporter.invalidate_caches, "__wrapped__", None)
+    assert unguarded is not None, "the guard keeps no handle on the method it wraps"
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", unguarded)
+    archives = {}
+    for name in ("old", "new"):
+        archives[name] = str(tmp_path / f"{name}.zip")
+        with zipfile.ZipFile(archives[name], "w") as z:
+            z.writestr(f"_zip_stamp_{name}.py", "X = 1\n")
+    os.utime(archives["old"], (1e9, 1e9))  # 2001: long before this process
+    monkeypatch.syspath_prepend(archives["old"])
+    monkeypatch.syspath_prepend(archives["new"])
+    try:
+        for name in archives:
+            assert importlib.import_module(f"_zip_stamp_{name}").X == 1
+        session._reread_zips_only_on_change()  # installs over the unguarded method
+        with _archive_reads() as reads:
+            importlib.invalidate_caches()
+        assert archives["old"] not in reads
+        assert archives["new"] in reads
+    finally:
+        for name, archive in archives.items():
+            sys.path_importer_cache.pop(archive, None)
+            zipimport._zip_directory_cache.pop(archive, None)
+            sys.modules.pop(f"_zip_stamp_{name}", None)
+
+
 def test_guard_installs_once():
     from fuserank_spark import session
 
