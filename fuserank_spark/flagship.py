@@ -577,8 +577,7 @@ def build_fused_ivf_index(
     meta_path: str,
     *,
     n_cells: int | str = FUSED_IVF_CELLS,
-    trained: bool = True,
-    quantizer: str | None = None,
+    quantizer: str = "kmeans",
     sample_rows: int = 50_000,
     max_iter: int = 10,
 ) -> int:
@@ -588,14 +587,13 @@ def build_fused_ivf_index(
     partitioned by ``centroid_id``, and freeze the encoder meta (with
     the centroids) next to it. Returns the number of cells written.
 
-    ``quantizer`` picks the coarse quantizer explicitly: ``"kmeans"``
-    (bounded-sample Lloyd: simsearch.ivf_build's kernels.lloyd over at
+    ``quantizer`` picks the coarse quantizer: ``"kmeans"`` (default;
+    bounded-sample Lloyd: simsearch.ivf_build's kernels.lloyd over at
     most ``sample_rows`` hash-ordered rows), ``"spherical"`` (k-means
     on L2-normalized vectors, centroids renormalized — the IP-aligned
     trainer), or ``"head"`` (first-``n_cells`` corpus rows, also the
     SQL-derivable demo quantizer the frozen oracle entry q_fused_ivf
-    re-derives).
-    When None it derives from the legacy ``trained`` flag. WHICH wins
+    re-derives). WHICH wins
     is corpus-dependent — measured in tools/fused_ivf_scale_probe.py
     across THREE geometries (BASELINE.md r7 + r8 tables): on stub
     hash-BOW vectors the rankings reversed between 100k/64 and
@@ -621,19 +619,18 @@ def build_fused_ivf_index(
     from .pipeline_ext.simsearch import ivf_assign, ivf_build, ivf_persist
 
     corpus = build_corpus_cached(spark, sf_dir)
-    q = quantizer or ("kmeans" if trained else "head")
-    if q not in ("kmeans", "spherical", "head"):
-        raise ValueError(f"quantizer must be kmeans|spherical|head, got {q!r}")
+    if quantizer not in ("kmeans", "spherical", "head"):
+        raise ValueError(f"quantizer must be kmeans|spherical|head, got {quantizer!r}")
     # counted once; recorded in the meta so the serve path can verify
     # a default-curve target_recall lookup is in the measured regime
     # (VERDICT r9 #1)
     n = corpus.encoded.count()
     if n_cells == "auto":
-        n_cells = resolve_auto_cells(n, q)
+        n_cells = resolve_auto_cells(n, quantizer)
     n_cells = int(n_cells)
-    if q in ("kmeans", "spherical"):
+    if quantizer in ("kmeans", "spherical"):
         train_src = corpus.encoded
-        if q == "spherical":
+        if quantizer == "spherical":
             norm = F.expr(l2_norm_expr(sql_ident("vector")))
             # greatest(norm, 1e-12): a zero-norm fused vector would
             # otherwise yield NaN/Inf training rows that poison the
@@ -649,7 +646,7 @@ def build_fused_ivf_index(
             train_src, dim=corpus.layout.dim, n_centroids=n_cells,
             vec_col="vector", sample_rows=sample_rows, max_iter=max_iter,
         )
-        if q == "spherical":
+        if quantizer == "spherical":
             cents = cents / np.maximum(
                 np.linalg.norm(cents, axis=1, keepdims=True), 1e-12
             )
@@ -674,7 +671,7 @@ def build_fused_ivf_index(
         extra={
             "emb_dim": EMB_DIM,
             "centroids": [[float(x) for x in c] for c in np.asarray(cents)],
-            "quantizer": q,
+            "quantizer": quantizer,
             "index_rows": int(n),
         },
     )

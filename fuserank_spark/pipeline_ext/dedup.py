@@ -678,7 +678,6 @@ def semantic_dedup(
     max_bucket_size: int = 1024,
     assign_round: int | None = 6,
     cos_round: int = 6,
-    assign: str = "expr",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): bucket the corpus by nearest frozen k-means
@@ -702,32 +701,31 @@ def semantic_dedup(
 
     Centroids are FROZEN (train them with simsearch.ivf_build — a
     kernels.lloyd on a bounded driver-side sample — or reuse an IVF
-    index's quantizer), so the
-    whole op is expression-only: one narrow assignment projection,
-    one shuffle on the uniform cell key, one anti-join. Cross-engine
-    discipline: the assignment score is rounded to ``assign_round``
-    and the cosine to ``cos_round`` BEFORE comparisons, so a DuckDB
-    re-derivation shares both tie-break domains (CLAUDE.md rounding
-    invariant; pinned by the differential test).
-
-    ``assign="arrow"`` swaps the expression-only cell assignment for
-    the Arrow-batched matmul twin (simsearch.ivf_assign_arrow) — same
-    cells (parity-pinned), much cheaper when n_centroids·dim is large;
-    keep ``"expr"`` where a SQL twin must re-derive the plan.
+    index's quantizer). Shape: one Arrow cell-assignment scan
+    (simsearch.ivf_assign_arrow, one matmul per batch) over the key
+    and vector columns only — mapInArrow blocks column pruning, so
+    every column fed to it crosses into the Python worker — then one
+    shuffle on the uniform cell key and one anti-join. The Arrow
+    assignment replaced the expression one (same survivors; 8.0 vs
+    9.8 s at 200k rows, 4.9 vs 15.4 s at 1.5M, SCALING.md r6).
+    Cross-engine discipline: the assignment score is rounded to
+    ``assign_round`` (kernels.round_half_away) and the cosine to
+    ``cos_round`` BEFORE comparisons, so a DuckDB re-derivation
+    shares both tie-break domains (CLAUDE.md rounding invariant;
+    pinned by the differential test).
 
     Rows with a NULL ``vec_col`` cannot be compared and always
     survive (they are excluded from assignment and pair generation,
-    and the final anti-join keeps them)."""
+    and the final anti-join keeps them). A NULL element or a vector
+    of another width than the centroids raises a ``ValueError``
+    naming ``vec_col`` (kernels.read_matrix)."""
     from ..search import l2_norm_expr, sql_ident
-    from .simsearch import ivf_assign, ivf_assign_arrow
+    from .simsearch import ivf_assign_arrow
 
-    if assign not in ("expr", "arrow"):
-        raise ValueError(f"assign must be 'expr' or 'arrow', got {assign!r}")
-    assign_fn = ivf_assign if assign == "expr" else ivf_assign_arrow
     # rows with no vector cannot be compared — they pass through as
-    # survivors (and never reach the arrow path's NULL guard)
-    with_vec = df.filter(F.col(vec_col).isNotNull())
-    assigned = assign_fn(
+    # survivors (and never reach the kernel's NULL guard)
+    with_vec = df.select(key_col, vec_col).filter(F.col(vec_col).isNotNull())
+    assigned = ivf_assign_arrow(
         with_vec, centroids, vec_col=vec_col, out_col="__cell", score_round=assign_round
     )
     base = assigned.select(
@@ -1083,21 +1081,15 @@ def dedup_spans(
     groupBy shuffle is token-granular — the honest cost of
     ExactSubstr (the suffix-array analog is a global sort).
 
-    ``strategy`` picks the loser-derivation plan — a MEASURED trade
-    (500k-row A/B, both uniform-100× and one-gram-in-every-doc
-    corpora): ``"window"`` derives loser flags from one count /
-    row_number window partitioned by gram hash — single evaluation
-    of the gram pipeline, no join, ~1.5× faster (17.6 s vs 26.8 s
-    uniform; 18.1 s vs 27.7 s with a 500k-occurrence hot gram) —
-    but every occurrence of a mass-duplicated gram lands in ONE
-    window partition that AQE cannot split, so a gram duplicated
-    ~100M× at 100 TB becomes a single straggler sort. ``"join"``
-    (default) re-evaluates the gram-hash projection for the winner
-    branch (the dedup_lines precedent; bounded 2× on the narrow
-    stage) but its skewed probe side is ordinary sort-merge-join
-    input that AQE skew-split handles — the safe default at scale;
-    flip to ``"window"`` when no single span can plausibly repeat
-    nine figures.
+    ``strategy="join"`` (default) re-evaluates the gram-hash
+    projection for the winner branch (the dedup_lines precedent;
+    bounded 2× on the narrow stage), but its skewed probe side is
+    ordinary sort-merge-join input that AQE skew-split handles. A
+    window over the gram hash ran ~1.5× faster at 500k rows
+    (SCALING.md, the dedup_spans strategy A/B) and was deleted: every
+    occurrence of a hot gram lands in ONE window partition that AQE
+    cannot split, so a gram duplicated ~100M× at 100 TB becomes a
+    single straggler sort.
 
     ``strategy="anchor"`` (VERDICT r7 #4) is the OPT-IN scale path
     that cuts the token-granular exchange ~``(anchor_window+1)/2``×
@@ -1132,74 +1124,33 @@ def dedup_spans(
     L = int(min_span_tokens)
     if L < 2:
         raise ValueError(f"min_span_tokens must be >= 2, got {min_span_tokens}")
-    if strategy not in ("join", "window", "anchor"):
-        raise ValueError(
-            f"strategy must be 'join', 'window' or 'anchor', got {strategy!r}"
-        )
+    if strategy not in ("join", "anchor"):
+        raise ValueError(f"strategy must be 'join' or 'anchor', got {strategy!r}")
     if strategy == "anchor":
         return _dedup_spans_anchored(
             df, key_col=key_col, text_col=text_col, L=L, w=int(anchor_window)
         )
     base, ex = _positional_grams(df, key_col, text_col, L)
-    if strategy == "join":
-        # grams occurring >= 2x, with their globally-first occurrence;
-        # unique (key, pos) makes the min-struct winner tie-free
-        dup_winners = (
-            ex.filter(F.col("__gh").isNotNull())
-            .groupBy("__gh")
-            .agg(
-                F.min(F.struct("__k", "__pos")).alias("__win"),
-                F.count(F.lit(1)).alias("__cnt"),
-            )
-            .filter(F.col("__cnt") >= 2)
-            .select("__gh", "__win")
+    # grams occurring >= 2x, with their globally-first occurrence;
+    # unique (key, pos) makes the min-struct winner tie-free
+    dup_winners = (
+        ex.filter(F.col("__gh").isNotNull())
+        .groupBy("__gh")
+        .agg(
+            F.min(F.struct("__k", "__pos")).alias("__win"),
+            F.count(F.lit(1)).alias("__cnt"),
         )
-        flagged = ex.join(dup_winners, "__gh", "left").withColumn(
-            "__cut",
-            F.col("__win").isNotNull()
-            & ~(
-                (F.col("__k") == F.col("__win.__k"))
-                & (F.col("__pos") == F.col("__win.__pos"))
-            ),
-        )
-    else:
-        from pyspark.sql import Window
-
-        # the window runs ONLY over gram-bearing rows: the last L−1
-        # positions of EVERY doc carry a NULL __gh, and a
-        # partitionBy("__gh") over the full frame would funnel all of
-        # them — (L−1)·n_docs rows, independent of duplication — into
-        # one unsplittable NULL partition (review catch, this round).
-        # The NULL rows rejoin as never-cut rows derived DIRECTLY from
-        # the token-array tail — a filter on ex would re-run the full
-        # O(n·L) gram hashing just to discard it (the two-branch trap
-        # this strategy exists to avoid)
-        per_gram = Window.partitionBy("__gh")
-        with_gram = (
-            ex.filter(F.col("__gh").isNotNull())
-            .withColumn("__cnt", F.count(F.lit(1)).over(per_gram))
-            .withColumn("__rn", F.row_number().over(per_gram.orderBy("__k", "__pos")))
-            .withColumn("__cut", (F.col("__cnt") >= 2) & (F.col("__rn") > 1))
-            .drop("__cnt", "__rn")
-        )
-        start = F.greatest(F.col("__n_tok") - F.lit(L - 1), F.lit(0))
-        tail_rows = (
-            base.select(
-                F.col(key_col).alias("__k"),
-                start.alias("__start"),
-                F.posexplode(
-                    F.slice(F.col("__toks"), start + 1, F.col("__n_tok") - start)
-                ).alias("__p", "__tok"),
-            )
-            .select(
-                "__k",
-                (F.col("__start") + F.col("__p")).alias("__pos"),
-                "__tok",
-                F.lit(None).cast("long").alias("__gh"),
-                F.lit(False).alias("__cut"),
-            )
-        )
-        flagged = with_gram.unionByName(tail_rows)
+        .filter(F.col("__cnt") >= 2)
+        .select("__gh", "__win")
+    )
+    flagged = ex.join(dup_winners, "__gh", "left").withColumn(
+        "__cut",
+        F.col("__win").isNotNull()
+        & ~(
+            (F.col("__k") == F.col("__win.__k"))
+            & (F.col("__pos") == F.col("__win.__pos"))
+        ),
+    )
     return _drop_covered_and_rebuild(base, flagged, key_col, text_col, L)
 
 

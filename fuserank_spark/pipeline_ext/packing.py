@@ -188,6 +188,7 @@ def pack_greedy(
     is a layout choice: same packing invariants, different (equally
     valid) shard boundaries."""
     import pandas as pd
+    from pyspark.sql import types as T
 
     if budget <= 0:
         raise ValueError("budget must be positive")
@@ -200,10 +201,7 @@ def pack_greedy(
         .withColumn("__h", _order_hash(F.col(key_col), salt))
         .withColumn("__b", F.expr(f"__h div {div}"))
     )
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    schema_out = f"{out_fields}, bin_id bigint"
+    schema_out = T.StructType([*df.schema.fields, T.StructField("bin_id", T.LongType())])
     names = [f.name for f in df.schema.fields]
     err = oversize == "error"
 

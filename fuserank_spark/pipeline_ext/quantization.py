@@ -51,7 +51,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels import lloyd, read_matrix
+from ..kernels import lloyd
 from ..search import dot_expr, lit_vector, sql_ident, sql_lit
 from .simsearch import _check_positive, _merge_topk, _probe_join, _refine_topk
 from ..session import local_frame
@@ -219,8 +219,8 @@ def pq_encode(
     nested array consumed by higher-order functions — a fully
     unrolled 2·m·k-term expression compiles ~7s of Janino codegen
     before the first row, the HOF loop form compiles instantly at
-    identical results (bit-equality pinned by the q_pq_knn oracle
-    and the arrow-twin test). Output code array is array<int>.
+    identical results (bit-equality pinned by the q_pq_knn oracle).
+    Output code array is array<int>.
 
     A short / long / NULL vector would otherwise slice to nulls and
     silently produce wrong codes — guarded with raise_error, the
@@ -269,52 +269,6 @@ def pq_encode(
     if not keep_vec:
         drop.append(vec_col)
     return out.drop(*drop)
-
-
-def pq_encode_arrow(
-    df: DataFrame,
-    codebooks: np.ndarray,
-    *,
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-    keep_vec: bool = False,
-) -> DataFrame:
-    """Arrow-batched numpy twin of :func:`pq_encode` for wide vectors
-    / large k where 2·m·k expression terms outgrow codegen: one
-    flat-buffer read (kernels.read_matrix — NULL rows, NULL elements
-    and wrong lengths raise) and one matmul per subspace per batch,
-    the codes emitted as one list column. Unit-tested code-identical
-    to the expression path (argmin ties break to the lowest code in
-    both)."""
-    import pyarrow as pa
-
-    m, k, w = codebooks.shape
-    books = codebooks.copy()
-    csq = np.einsum("mkw,mkw->mk", books, books)
-    keep = [f for f in df.schema.fields if keep_vec or f.name != vec_col]
-    schema_out = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in keep]
-        + [f"`{out_col}` array<int>"]
-    )
-    names = [f.name for f in keep]
-
-    def encode(batches):
-        for rb in batches:
-            vecs = read_matrix(rb, vec_col, m * w)
-            codes = np.empty((rb.num_rows, m), dtype="int32")
-            for j in range(m):
-                sub = vecs[:, j * w : (j + 1) * w]
-                # dist = csq - 2 x·c  (+‖x‖², constant per row)
-                d = csq[j][None, :] - 2.0 * sub @ books[j].T
-                codes[:, j] = d.argmin(axis=1)
-            offsets = pa.array(np.arange(0, codes.size + 1, m, dtype="int32"))
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(n) for n in names]
-                + [pa.ListArray.from_arrays(offsets, pa.array(codes.ravel()))],
-                names=names + [out_col],
-            )
-
-    return df.mapInArrow(encode, schema_out)
 
 
 def adc_lut(codebooks: np.ndarray, qvec) -> list[list[float]]:

@@ -295,9 +295,14 @@ def ivf_assign_arrow(
     scaffold: the expression path is the oracle-parity form
     (interpreted HOF aggregates, ~n_centroids·dim ops per row outside
     codegen), this one is one flat-buffer read and one matmul per
-    batch (kernels.assign_cells) for the scale paths (semantic dedup
-    over many cells, streaming index maintenance), with the cell
-    column appended to the batch as-is.
+    batch (kernels.assign_cells), with the cell column appended to
+    the batch as-is. It assigns for :func:`ivf_build`,
+    dedup.semantic_dedup (faster than the expression path there at
+    200k, 500k and 1.5M rows with the same survivors, SCALING.md r6)
+    and streaming.incremental_ivf_index (faster on 250-row
+    micro-batches over 8 cells).
+    mapInArrow blocks column pruning, so feed it only the columns the
+    caller needs downstream.
 
     Same score (``||c||^2 − 2<x,c>`` or ``−<x,c>``), same
     lowest-centroid tie break (argmin takes the first minimum).
@@ -315,14 +320,14 @@ def ivf_assign_arrow(
     wrong-length vectors raise (kernels.read_matrix — the expression
     path would propagate nulls; a batch matmul cannot)."""
     import pyarrow as pa
+    from pyspark.sql import types as T
 
     if metric not in ("l2", "ip"):
         raise ValueError(f"metric must be 'l2' or 'ip', got {metric!r}")
     cents = np.asarray(centroids, dtype="float64")
     dim = cents.shape[1]
-    schema_out = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in corpus.schema.fields]
-        + [f"`{out_col}` int"]
+    schema_out = T.StructType(
+        [*corpus.schema.fields, T.StructField(out_col, T.IntegerType())]
     )
 
     def assign(batches):

@@ -88,7 +88,6 @@ def incremental_ivf_index(
     text_encoding_schema: dict[str, float] | None = None,
     metric: str = "ip",
     available_now: bool = True,
-    assign: str = "expr",
 ):
     """Streaming INDEX MAINTENANCE (r5): each micro-batch runs the
     full batch pipeline — embed → encode_products against a FROZEN
@@ -110,19 +109,17 @@ def incremental_ivf_index(
     ``batch_id=`` directory (each with its centroid_id= partition
     subdirs), never duplicates.
 
-    ``assign="arrow"`` uses the matmul assignment twin
-    (simsearch.ivf_assign_arrow) instead of the interpreted HOF
-    expression — same cells at score_round=6 (parity-pinned in
-    tests; the decimal-half-boundary caveat in ivf_assign_arrow's
-    docstring applies), cheaper per batch when n_cells·fused_dim is
-    large."""
+    Cells come from the Arrow assignment (simsearch.ivf_assign_arrow,
+    score_round=6): on 250-row micro-batches over 8 cells it ran each
+    batch faster than the expression ivf_assign in every one of 10
+    alternating pairs (CHANGES.md). It lands every row in the cell
+    flagship.build_fused_ivf_index's expression assignment gives it
+    (parity-pinned in tests/test_streaming.py; the decimal
+    half-boundary caveat in ivf_assign_arrow's docstring applies)."""
     from ..embed import embed_corpus
     from ..encode import encode_products
-    from ..pipeline_ext.simsearch import ivf_assign, ivf_assign_arrow
+    from ..pipeline_ext.simsearch import ivf_assign_arrow
 
-    if assign not in ("expr", "arrow"):
-        raise ValueError(f"assign must be 'expr' or 'arrow', got {assign!r}")
-    assign_fn = ivf_assign if assign == "expr" else ivf_assign_arrow
     tschema = text_encoding_schema or {"text": 1.0}
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -130,9 +127,12 @@ def incremental_ivf_index(
         enc, _layout = encode_products(
             emb, aux_schema, stats, num_harmonics=num_harmonics
         )
-        assigned = assign_fn(
-            enc, centroids, vec_col="vector", metric=metric, score_round=6
-        ).drop(*tschema.keys(), "text_emb")
+        # mapInArrow blocks column pruning: drop the text and its
+        # embedding before the scan, not after it
+        assigned = ivf_assign_arrow(
+            enc.drop(*tschema.keys(), "text_emb"),
+            centroids, vec_col="vector", metric=metric, score_round=6,
+        )
         assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
             f"{sink_path}/batch_id={batch_id}"
         )

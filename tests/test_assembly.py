@@ -151,6 +151,26 @@ def test_pack_greedy_oversize_error(spark):
         P.pack_greedy(d, budget=100, oversize="error").collect()
 
 
+def test_pack_greedy_keeps_struct_payload_with_any_field_name(spark):
+    """The output schema is built as a StructType, not re-parsed DDL:
+    a struct payload whose field name needs quoting (``content-type``)
+    passes through the packer unchanged."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("n_tokens", T.LongType()),
+        T.StructField("meta", T.StructType([T.StructField("content-type", T.StringType())])),
+    ])
+    d = spark.createDataFrame([(1, 10, ("text/html",)), (2, 20, ("text/plain",))], schema)
+    out = P.pack_greedy(d, budget=100)
+    assert out.schema["meta"] == schema["meta"]
+    assert {r["doc_id"]: r["meta"]["content-type"] for r in out.collect()} == {
+        1: "text/html",
+        2: "text/plain",
+    }
+
+
 def test_pack_greedy_packs_denser_than_one_doc_per_bin(docs_tokens):
     """Next-fit must actually pack: with budget far above the typical
     doc, bins ≪ docs."""

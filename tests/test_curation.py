@@ -1094,19 +1094,21 @@ def _shell_fixture(spark):
 
 
 def test_sweep_residue_shells_composition(spark):
-    """VERDICT r11 missing #2, the mechanism pin: with the sweep off,
-    anchor+floor shelters every boundary-residue shell (the 5M blind
-    spot); with the default sweep the anchor arm's survivor SET equals
-    the exact arm's — span keepers and the genuinely-unique low-kept
-    doc survive, all 20 shells die."""
+    """VERDICT r11 missing #2, the mechanism pin: anchor span dedup
+    plus the kept floor alone shelters every boundary-residue shell
+    (the 5M blind spot); with the sweep curate_corpus runs after them,
+    the anchor arm's survivor SET equals the exact arm's — span
+    keepers and the genuinely-unique low-kept doc survive, all 20
+    shells die."""
+    from fuserank_spark.pipeline_ext.dedup import dedup_spans
+
     d = _shell_fixture(spark)
     common = dict(
         min_quality=0.0, span_dedup_tokens=5,
         span_drop_if_kept_below=0.1,
     )
-    blind = curate_corpus(
-        d, span_dedup_strategy="anchor", span_dedup_anchor_window=3,
-        span_shell_sweep="off", **common,
+    blind = dedup_spans(d, min_span_tokens=5, strategy="anchor", anchor_window=3).filter(
+        F.col("n_kept") >= F.col("n_tokens") * 0.1
     )
     blind_ids = sorted(r["doc_id"] for r in blind.collect())
     assert set(range(2, 22)) <= set(blind_ids)  # the blind spot, pinned
@@ -1129,10 +1131,6 @@ def test_sweep_residue_shells_requires_span_counters(spark):
         sweep_residue_shells(d, kept_floor=0.1)
     with pytest.raises(ValueError, match="kept_ceiling"):
         sweep_residue_shells(d, kept_floor=0.1, kept_ceiling=1.0)
-    with pytest.raises(ValueError, match="span_shell_sweep"):
-        curate_corpus(d, span_dedup_tokens=5, span_shell_sweep="bogus")
-    with pytest.raises(ValueError, match="span_drop_if_kept_below"):
-        curate_corpus(d, span_dedup_tokens=5, span_shell_sweep="on")
 
 
 def test_sweep_residue_shells_matches_duckdb(spark, duck):

@@ -240,7 +240,7 @@ def test_build_fused_ivf_index_trained_roundtrip(spark, tmp_path):
     idx = str(tmp_path / "fidx")
     meta = str(tmp_path / "fidx_meta.json")
     n_cells = build_fused_ivf_index(
-        spark, SF_SMOKE, idx, meta, n_cells=4, trained=True, max_iter=5
+        spark, SF_SMOKE, idx, meta, n_cells=4, quantizer="kmeans", max_iter=5
     )
     assert n_cells == 4
     _s, _l, knobs = load_encoder_meta(meta)

@@ -47,18 +47,10 @@ def _ivf_assign_arrow(df):
     return ivf_assign_arrow(df, np.eye(DIM), vec_col="emb")
 
 
-def _pq_encode_arrow(df):
-    from fuserank_spark.pipeline_ext.quantization import pq_encode_arrow
-
-    books = np.arange(8, dtype="float64").reshape(2, 2, 2)  # m=2, k=2, w=2
-    return pq_encode_arrow(df, books, vec_col="emb")
-
-
 KERNELS = {
     "topk": _topk,
     "topk_batch": _topk_batch,
     "ivf_assign_arrow": _ivf_assign_arrow,
-    "pq_encode_arrow": _pq_encode_arrow,
 }
 
 

@@ -1,6 +1,6 @@
 """Product quantization (pipeline_ext/quantization.py): encode-path
-equivalence (expression vs Arrow), training determinism, ADC serve
-properties, and the refine-path exactness guarantee."""
+guards, training determinism, ADC serve properties, and the
+refine-path exactness guarantee."""
 
 from __future__ import annotations
 
@@ -37,23 +37,6 @@ def test_subspace_slices_guard():
 def test_forgy_needs_enough_rows():
     with pytest.raises(ValueError, match="seed rows"):
         Q.forgy_codebooks([[0.0] * 64] * 3, dim=64, m=8, k=16)
-
-
-def test_expression_and_arrow_encode_identical(emb, forgy_books):
-    """The codegen expression path and the Arrow numpy path must
-    assign IDENTICAL codes (same argmin, same lowest-code ties)."""
-    a = {
-        r["vec_id"]: r["pq_code"]
-        for r in Q.pq_encode(emb, forgy_books).select("vec_id", "pq_code").collect()
-    }
-    b = {
-        r["vec_id"]: r["pq_code"]
-        for r in Q.pq_encode_arrow(emb, forgy_books)
-        .select("vec_id", "pq_code")
-        .collect()
-    }
-    assert a == b
-    assert all(len(c) == 8 and all(0 <= x < 16 for x in c) for c in a.values())
 
 
 def test_train_pq_deterministic_and_shaped(emb):
@@ -288,12 +271,3 @@ def test_pq_encode_raises_on_bad_vector_length(spark, forgy_books):
     )
     with pytest.raises(Exception, match="vector length"):
         Q.pq_encode(nulls, forgy_books).collect()
-    # surfaces as a PySpark PythonException wrapping the ValueError
-    with pytest.raises(Exception, match="vector length"):
-        Q.pq_encode_arrow(bad, forgy_books).toPandas()
-    # a NULL element inside a vector must not encode as code 0
-    elem_null = spark.createDataFrame(
-        [(1, [0.0] * 10 + [None] + [0.0] * 53)], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(Exception, match="NULL vector"):
-        Q.pq_encode_arrow(elem_null, forgy_books).toPandas()

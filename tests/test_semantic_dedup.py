@@ -135,20 +135,10 @@ def test_semantic_dedup_plan_has_no_quadratic_ops(emb, centroids):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_semantic_dedup_arrow_assignment_parity(emb, centroids):
-    """assign='arrow' (matmul cell assignment) must produce the same
-    survivor set as the expression path the oracle re-derives."""
-    expr = _survivor_ids(semantic_dedup(emb, centroids, threshold=THR))
-    arrow = _survivor_ids(
-        semantic_dedup(emb, centroids, threshold=THR, assign="arrow")
-    )
-    assert expr == arrow
-
-
 def test_semantic_dedup_null_vectors_pass_through(spark, centroids):
     """Docs without an embedding always survive — excluded from
-    assignment/pairs (no arrow NULL guard trip), kept by the
-    anti-join — on both assignment paths."""
+    assignment and pairs (no kernel NULL guard trip), kept by the
+    anti-join."""
     rows = [
         (0, [1.0] + [0.0] * 63),
         (1, [1.0] + [0.0] * 63),  # near-dup of 0 → dropped
@@ -156,8 +146,14 @@ def test_semantic_dedup_null_vectors_pass_through(spark, centroids):
         (3, None),
     ]
     d = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for assign in ("expr", "arrow"):
-        got = _survivor_ids(
-            semantic_dedup(d, centroids, threshold=0.9, assign=assign)
-        )
-        assert got == {0, 2, 3}, assign
+    assert _survivor_ids(semantic_dedup(d, centroids, threshold=0.9)) == {0, 2, 3}
+
+
+def test_semantic_dedup_rejects_wrong_width_vector(spark):
+    """A vector of another width than the centroids cannot be
+    assigned a cell: it must raise naming the column, not land in
+    cell 0 and survive."""
+    rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0, 0.0])]
+    d = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    with pytest.raises(Exception, match=r"ValueError: .*'embedding'"):
+        semantic_dedup(d, np.eye(4), threshold=0.9).collect()

@@ -180,6 +180,29 @@ def test_ivf_assign_arrow_matches_expression(emb):
             assert ex == ar, (metric, rnd)
 
 
+def test_ivf_assign_arrow_keeps_struct_payload_with_any_field_name(spark):
+    """The output schema is built as a StructType, not re-parsed DDL:
+    a struct payload whose field name needs quoting (``content-type``)
+    rides through the Arrow kernel as the expression path carries it."""
+    import numpy as np
+
+    from pyspark.sql import types as T
+
+    from fuserank_spark.pipeline_ext.simsearch import ivf_assign, ivf_assign_arrow
+
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        T.StructField("meta", T.StructType([T.StructField("content-type", T.StringType())])),
+    ])
+    d = spark.createDataFrame(
+        [(0, [1.0, 0.0], ("text/html",)), (1, [0.0, 1.0], ("text/plain",))], schema
+    )
+    got = ivf_assign_arrow(d, np.eye(2))
+    assert got.schema["meta"] == schema["meta"]
+    assert sorted(got.collect()) == sorted(ivf_assign(d, np.eye(2)).collect())
+
+
 def test_ivf_assign_arrow_rejects_bad_vectors(spark):
     import numpy as np
 

@@ -119,26 +119,28 @@ def _want(duck, L):
     }
 
 
-@pytest.mark.parametrize("strategy", ["join", "window"])
+@pytest.mark.parametrize("strategy", ["join"])
 def test_dedup_spans_matches_duckdb_rederivation(span_docs, duck, strategy):
     """The whole op — whitespace tokenize, per-position portable gram
     hash, ≥2-occurrence losers, (key, pos) first-occurrence winner,
     running-max span coverage, in-order single-space rebuild —
     re-derived in DuckDB; rebuilt text and both counters must match
-    row-for-row, on BOTH loser-derivation strategies."""
+    row-for-row."""
     got = _rows(dedup_spans(span_docs, min_span_tokens=8, strategy=strategy))
     assert got == _want(duck, 8)
 
 
-@pytest.mark.parametrize("strategy", ["join", "window"])
+@pytest.mark.parametrize("strategy", ["join"])
 def test_dedup_spans_matches_duckdb_at_other_span_length(span_docs, duck, strategy):
     got = _rows(dedup_spans(span_docs, min_span_tokens=5, strategy=strategy))
     assert got == _want(duck, 5)
 
 
 def test_dedup_spans_rejects_unknown_strategy(span_docs):
-    with pytest.raises(ValueError, match="strategy"):
-        dedup_spans(span_docs, strategy="magic")
+    # "window" (a gram-hash window AQE cannot skew-split) was deleted
+    for strategy in ("magic", "window"):
+        with pytest.raises(ValueError, match="strategy"):
+            dedup_spans(span_docs, strategy=strategy)
 
 
 def test_dedup_spans_planted_passage_survives_exactly_once(span_docs):

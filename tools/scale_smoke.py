@@ -155,12 +155,6 @@ def main():
     ).count()
     t["semantic_dedup"] = round(time.time() - t0, 2)
     t["n_semantic_survivors"] = n_sem
-    t0 = time.time()
-    n_sem_a = semantic_dedup(
-        bigv, cents, threshold=0.98, assign_round=None, assign="arrow"
-    ).count()
-    t["semantic_dedup_arrow"] = round(time.time() - t0, 2)
-    t["n_semantic_survivors_arrow"] = n_sem_a
 
     # curation ops at volume: the window quota (WindowGroupLimit
     # pre-trim), the decontamination broadcast semi-join (train side
@@ -263,18 +257,18 @@ def main():
     ).save()
     t["repetition_stats"] = round(time.time() - t0, 2)
 
-    # PQ at volume: Arrow encode of the replicated vectors (the wide-
-    # vector scale path), then ADC top-k over the 32×-compressed codes
+    # PQ at volume: expression encode of the replicated vectors, then
+    # ADC top-k over the 32×-compressed codes
     from fuserank_spark.pipeline_ext.quantization import (
         forgy_codebooks,
         pq_adc_topk,
-        pq_encode_arrow,
+        pq_encode,
     )
 
     seed_rows = emb.filter(F.col("vec_id") < 16).orderBy("vec_id").collect()
     books = forgy_codebooks([r["embedding"] for r in seed_rows], dim=64, m=8, k=16)
     t0 = time.time()
-    codes = pq_encode_arrow(bigv, books, vec_col="embedding").persist()
+    codes = pq_encode(bigv, books, vec_col="embedding").persist()
     codes.write.format("noop").mode("overwrite").save()
     t["pq_encode"] = round(time.time() - t0, 2)
     t0 = time.time()

@@ -40,7 +40,6 @@ from pyspark.sql import functions as F  # noqa: E402
 ALL_OPS = (
     "minhash_lsh",
     "dedup_spans_join",
-    "dedup_spans_window",
     "dedup_spans_anchor",
     "winnow_fps",
     "winnow_pairs_cap48",
@@ -143,8 +142,6 @@ def main():
         )
         run("dedup_spans_join",
             lambda: noop(dedup_spans(big, strategy="join").select("doc_id", "n_kept")))
-        run("dedup_spans_window",
-            lambda: noop(dedup_spans(big, strategy="window").select("doc_id", "n_kept")))
         run("dedup_spans_anchor",
             lambda: noop(dedup_spans(big, strategy="anchor").select("doc_id", "n_kept")))
         run("winnow_fps", lambda: winnow_fingerprints(big).count())
